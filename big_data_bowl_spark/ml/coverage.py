@@ -61,6 +61,19 @@ def rf_pipeline(
     return Pipeline(stages=[indexer, assembler, rf])
 
 
+def score(model: PipelineModel, df: DataFrame) -> DataFrame:
+    """M2: ``model.transform`` plus IndexToString as a pure column
+    expression over the fitted indexer's labels (``predicted_label``)."""
+    labels = model.stages[0].labels
+    return model.transform(df).withColumn(
+        "predicted_label",
+        F.element_at(
+            F.array(*[F.lit(x) for x in labels]),
+            F.col("prediction").cast("int") + 1,
+        ),
+    )
+
+
 def train_eval(
     df: DataFrame,
     feature_cols: list[str],
@@ -80,16 +93,7 @@ def train_eval(
     model = rf_pipeline(feature_cols, label_col, num_trees=num_trees).fit(
         train
     )
-    # M2's IndexToString step, spelled as a pure column expression over
-    # the fitted indexer's label array (metadata-independent)
-    labels = model.stages[0].labels
-    scored = model.transform(test).withColumn(
-        "predicted_label",
-        F.element_at(
-            F.array(*[F.lit(x) for x in labels]),
-            F.col("prediction").cast("int") + 1,
-        ),
-    )
+    scored = score(model, test)
     evaluator = MulticlassClassificationEvaluator(
         labelCol="label_idx",
         predictionCol="prediction",

@@ -534,31 +534,33 @@ def _decode_png(payload: bytes) -> "np.ndarray":
         if plte is None or len(plte) % 3:
             raise ValueError("palette PNG missing a valid PLTE")
         palette = np.frombuffer(plte, np.uint8).reshape(-1, 3)
+    if interlace not in (0, 1):
+        raise ValueError(f"invalid PNG interlace method {interlace}")
+    # the inflated size must match IHDR (ph rows of filter byte +
+    # packed row per non-empty pass) before anything is allocated
+    passes = []
+    for x0, y0, dx, dy in _PNG_ADAM7 if interlace else [(0, 0, 1, 1)]:
+        pw, ph = (w - x0 + dx - 1) // dx, (h - y0 + dy - 1) // dy
+        if pw > 0 and ph > 0:
+            passes.append((x0, y0, dx, dy, pw, ph))
+    need = sum(ph * (1 + -(-(pw * depth * channels) // 8))
+               for *_, pw, ph in passes)
     raw = zlib.decompress(bytes(idat))
+    if len(raw) != need:
+        raise ValueError("PNG raster size mismatch")
 
-    samples = np.zeros(
-        (h, w, channels), np.uint16 if depth == 16 else np.uint8
-    )
     if interlace == 0:
-        rows, used = _png_unfilter(raw, 0, w, h, depth, channels)
-        if used != len(raw):
-            raise ValueError("PNG raster size mismatch")
+        rows, _used = _png_unfilter(raw, 0, w, h, depth, channels)
         samples = _png_unpack(rows, w, depth, channels)
-    elif interlace == 1:  # Adam7
+    else:  # Adam7
+        samples = np.zeros(
+            (h, w, channels), np.uint16 if depth == 16 else np.uint8
+        )
         off = 0
-        for x0, y0, dx, dy in _PNG_ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
+        for x0, y0, dx, dy, pw, ph in passes:
             rows, used = _png_unfilter(raw, off, pw, ph, depth, channels)
             off += used
-            sub = _png_unpack(rows, pw, depth, channels)
-            samples[y0::dy, x0::dx] = sub
-        if off != len(raw):
-            raise ValueError("PNG raster size mismatch")
-    else:
-        raise ValueError(f"invalid PNG interlace method {interlace}")
+            samples[y0::dy, x0::dx] = _png_unpack(rows, pw, depth, channels)
 
     if color == 3:
         rgb = palette[samples[:, :, 0]].astype(np.float64)

@@ -34,18 +34,12 @@ from ..sources.io import fan_out, load_table
 class Q:
     """A registered query: Spark fn + optional DuckDB oracle SQL.
 
-    Eager-construction contract (ADVICE r17): fn() is NOT guaranteed
-    lazy. Trainer-style queries (m10/m11/m13, n20, the k-means
-    steps) and checkpointing pipelines (n18, the d02/d05 chains)
-    run real distributed work — scans, collects, localCheckpoints,
-    streaming drains — INSIDE fn(), and return a driver-derived
-    local relation or checkpoint-backed frame. Tools that call fn()
-    only to inspect a plan pay that cost; the bench times
-    fn()+count() together precisely so the split between the two
-    never affects the measured total. Plan-audit tooling that needs
-    a trainer's distributed plan uses the impl-level hooks (e.g.
-    ml._bagged_ensemble_impl(on_ct=...)) instead of the registered
-    frame."""
+    fn() is NOT guaranteed lazy: trainer-style queries (m10/m11/m13,
+    n20, the k-means steps) and checkpointing pipelines (n18, the
+    d02/d05 chains) run scans, collects, localCheckpoints and
+    streaming drains INSIDE fn(). Time fn() and the action together;
+    plan-audit tooling that needs a trainer's distributed plan uses
+    the impl-level hooks (e.g. ml._bagged_ensemble_impl(on_ct=...))."""
 
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
@@ -70,20 +64,16 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Driver-built local relation as a SINGLE-slice RDD (r18).
+    """Driver-built local relation as a SINGLE-slice RDD.
 
     `createDataFrame(list, schema)` parallelizes to
     defaultParallelism slices, so every action on a model-sized
-    trainer output (confusion rollups, merge tables, tree stats —
-    all <= a few hundred rows by construction) launched 32 tasks:
-    measured 0.56 s per count at local[32] vs 0.21 s single-slice.
-    The explicit 1-slice RDD takes the identical row-verification
-    and serialization path as the list form — same values, bit for
-    bit — and one slice IS the right layout for metadata-sized
-    output at any scale. (A plain .coalesce(1) on the 32-slice form
-    measured 5.1 s — the single task then waits on 32 parent
-    locality preferences — and the Arrow/pandas LocalRelation path
-    depends on session config the driver does not set.)"""
+    trainer output (confusion rollups, merge tables, tree stats)
+    would launch one task per slice. The 1-slice RDD takes the same
+    row-verification and serialization path — same values, bit for
+    bit — and one slice is the right layout for metadata-sized rows
+    at any scale (.coalesce(1) instead waits on every parent slice's
+    locality preference)."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
@@ -124,9 +114,7 @@ def rhu_sql(expr: str, scale: int = 9) -> str:
 
 def scratch_dir() -> str:
     """The repo-root .scratch sink directory (git-ignored), created on
-    first use — the ONE path derivation every sink query shares
-    (review r7: three hand-rolled copies had drifted, one without the
-    makedirs)."""
+    first use — the one path derivation every sink query shares."""
     import os
 
     scratch = os.path.join(
@@ -138,13 +126,11 @@ def scratch_dir() -> str:
 
 
 def data_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(path, size, mtime_ns) fingerprint of a testdata table, for
-    keying process-lifetime memo caches of trained model parameters
-    (m06/m10/m11 thresholds, the IVF coarse quantizer). Keying on the
-    fingerprint instead of the bare sf_dir means regenerating the data
-    at the same path in-process invalidates the memo instead of
-    silently serving stale parameters (ADVICE r8). Handles both
-    single-file `<table>.parquet` and directory layouts."""
+    """(path, per-file (size, mtime_ns)) fingerprint of a testdata
+    table, the data part of a ModelMemo key: regenerating the data at
+    the same path changes the key, so a trained value is never served
+    for data it was not trained on. Handles both single-file
+    `<table>.parquet` and directory layouts."""
     import os
 
     path = os.path.join(sf_dir, f"{table}.parquet")
@@ -163,3 +149,32 @@ def data_fingerprint(sf_dir: str, table: str) -> tuple:
     except OSError:
         sig = ()
     return (path, sig)
+
+
+class ModelMemo:
+    """Trained model values (thresholds, centroids, a fitted forest)
+    shared by the queries of one Spark application. The key is
+    (application id, data_fingerprint of the training table, the
+    training constants that shape the value); a miss under a new
+    application drops the old one's entries. Store plain values only,
+    never a DataFrame: its plan dies with its session."""
+
+    def __init__(self) -> None:
+        self._values: dict = {}
+
+    def get(self, spark: SparkSession, sf_dir: str, table: str,
+            consts: tuple, train: Callable[[], object]):
+        app = spark.sparkContext.applicationId
+        key = (app, data_fingerprint(sf_dir, table), consts)
+        if key not in self._values:
+            self._values = {
+                k: v for k, v in self._values.items() if k[0] == app
+            }
+            self._values[key] = train()
+        return self._values[key]
+
+    def clear(self) -> None:
+        self._values.clear()
+
+    def __len__(self) -> int:
+        return len(self._values)

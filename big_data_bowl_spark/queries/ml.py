@@ -13,8 +13,8 @@ row; exact tree shapes stay guarded by tests/test_ml.py, which pins
 the full confusion matrix and importance ranking at a fixed local
 partitioning.
 
-The fitted model is memoized per sf_dir so the m01/m02/m04 queries
-(which the driver calls back-to-back) train once.
+The fitted forest is memoized (base.ModelMemo) so the m01/m02/m04
+queries (which the driver calls back-to-back) train once.
 """
 
 from __future__ import annotations
@@ -23,9 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hex_threshold, md5_sql
-from ..ml.coverage import confusion_matrix, feature_importances, train_eval
+from ..ml.coverage import feature_importances, score, train_eval
 from ..operators.sample import deterministic_split
-from .base import data_fingerprint, dsum, dsum_sql, local_df, register, t
+from .base import ModelMemo, dsum, dsum_sql, local_df, register, t
 
 FEATURE_COLS = ["n_lines", "sum_qty", "sum_price", "max_disc", "n_parts"]
 
@@ -83,16 +83,27 @@ _TEST_PRED = f"NOT ({_TRAIN_PRED})"
 # partitioning-dependent tree variation.
 ACC_FLOOR = 0.9
 
-_CACHE: dict[str, tuple] = {}
+_RF_CACHE = ModelMemo()
 
 
 def _fitted(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _CACHE:
-        feats = order_features(spark, sf_dir)
-        _CACHE[sf_dir] = train_eval(
+    """(model, scored held-out set, accuracy); only the scored frame
+    is rebuilt per call, in the caller's session."""
+    feats = order_features(spark, sf_dir)
+
+    def train():
+        model, _scored, acc = train_eval(
             feats, FEATURE_COLS, label_col="label", id_cols=["l_orderkey"]
         )
-    return _CACHE[sf_dir]
+        return model, acc
+
+    model, acc = _RF_CACHE.get(
+        spark, sf_dir, "lineitem", tuple(FEATURE_COLS), train
+    )
+    _train, test = deterministic_split(
+        feats, key_cols=["l_orderkey"], train_fraction=0.75
+    )
+    return model, score(model, test), acc
 
 
 @register(
@@ -248,21 +259,19 @@ STUMP_FEATURES = ("l_quantity", "l_discount", "l_extendedprice")
 STUMP_QS = (0.25, 0.5, 0.75)
 
 
-_TH_CACHE: dict[tuple, list] = {}
+_TH_CACHE = ModelMemo()
 
 
-def _collect_thresholds(
-    li, sf_dir: str | None = None, approx: bool = False
-) -> list:
+def _collect_thresholds(li, sf_dir: str, approx: bool = False) -> list:
     """Phase 1 of m06/m10/m11 — candidate thresholds: ONE
     percentile-array aggregate per feature (each feature's values
     buffer once, not once per quantile), then collect the 9 scalars.
     The collect is metadata-sized by construction (features x
     quantiles — the k-means-scalar class of driver action) and lets
-    later phases run with LITERAL thresholds. Memoized per sf_dir
-    when given (the _fitted precedent: the exact-percentile object
-    aggregate is the single most expensive scan the tree family runs,
-    and every tree trainer shares the same 9 candidates).
+    later phases run with LITERAL thresholds. Memoized in _TH_CACHE:
+    the exact-percentile object aggregate is the single most expensive
+    scan the tree family runs, and every tree trainer shares the same
+    9 candidates.
 
     ``approx=True`` is the PRODUCTION-SCALE path (BASELINE.md): exact
     `percentile` buffers every value of the feature per aggregation
@@ -272,26 +281,23 @@ def _collect_thresholds(
     need to be reasonable cut points, not exact order statistics, so
     the tree contract is unchanged; the exact spelling stays the
     registered default solely for DuckDB oracle bit-parity."""
-    # memo key includes the parquet fingerprint so regenerating the
-    # data at the same path invalidates the cache (ADVICE r8)
-    key = (
-        (data_fingerprint(sf_dir, "lineitem"), approx) if sf_dir else None
+
+    def train():
+        fn = "percentile_approx" if approx else "percentile"
+        qs = ", ".join(str(q) for q in STUMP_QS)
+        extra = ", 10000" if approx else ""
+        qrow = li.agg(
+            *[
+                F.expr(f"{fn}({f}, array({qs}){extra})").alias(f)
+                for f in STUMP_FEATURES
+            ]
+        ).collect()[0]
+        return [(f, float(v)) for f in STUMP_FEATURES for v in qrow[f]]
+
+    return _TH_CACHE.get(
+        li.sparkSession, sf_dir, "lineitem",
+        (STUMP_FEATURES, STUMP_QS, approx), train,
     )
-    if key is not None and key in _TH_CACHE:
-        return _TH_CACHE[key]
-    fn = "percentile_approx" if approx else "percentile"
-    qs = ", ".join(str(q) for q in STUMP_QS)
-    extra = ", 10000" if approx else ""
-    qrow = li.agg(
-        *[
-            F.expr(f"{fn}({f}, array({qs}){extra})").alias(f)
-            for f in STUMP_FEATURES
-        ]
-    ).collect()[0]
-    out = [(f, float(v)) for f in STUMP_FEATURES for v in qrow[f]]
-    if key is not None:
-        _TH_CACHE[key] = out
-    return out
 
 
 def _stump_oracle() -> str:
@@ -740,9 +746,8 @@ def m09_feature_hashing(spark: SparkSession, sf_dir: str):
 
 # ---------------------------------------------------------------------------
 # M10: depth-2 decision tree — the full train -> predict -> confusion
-# chain with an EXACT per-cell value oracle (VERDICT r6 item 4: m01's
-# RF confusion cells are partitioning-sensitive and pytest-only; this
-# deterministic tree makes every cell driver-verifiable)
+# chain with an EXACT per-cell value oracle (m01's RF confusion cells
+# are partitioning-sensitive and pytest-only; every cell here is not)
 # ---------------------------------------------------------------------------
 
 TREE_FALLBACK_TH = 1e308  # "no valid child split": everything goes left
@@ -860,21 +865,16 @@ def _tree_oracle() -> str:
     "table as a bounded local relation.",
 )
 def m10_depth2_tree(spark, sf_dir):
-    """r17 optimization-round rewrite (the m11 contingency-table
-    treatment, guide §1.2/§8): the root search, both child searches
-    and the four leaf cells are all integer sums over the per-row
-    descriptor (pos, l0..l{K-1}) — the label plus the K candidate
-    threshold indicators. The indicators are monotone per feature
-    (3 thresholds -> 4 patterns), so the descriptor's full
-    contingency table is <= 2 x 4^|features| = 128 rows AT ANY DATA
-    SIZE. One scan aggregates it (map-side combined, the k-means-
-    sufficient-statistics class of driver action); the level-wise
-    search runs as exact integer arithmetic on the driver. Replaces
-    the old 3 full lineitem scans per run (root agg, children agg,
-    leaf agg — each a separate single-split pass over the unsplittable
-    input) with 1; value-identical by construction
-    (same sums, same rhu(9) gain argmax, same tie-breaks), pinned by
-    the full-value oracle at sf0.001/sf0.01."""
+    """The root search, both child searches and the four leaf cells
+    are all integer sums over the per-row descriptor (pos, l0..l{K-1})
+    — the label plus the K candidate threshold indicators. The
+    indicators are monotone per feature (3 thresholds -> 4 patterns),
+    so the descriptor's full contingency table is <= 2 x 4^|features|
+    = 128 rows AT ANY DATA SIZE. One scan aggregates it (map-side
+    combined, the k-means-sufficient-statistics class of driver
+    action); the level-wise search runs as exact integer arithmetic on
+    the driver (rhu(9) gain argmax, (feature, threshold) tie-breaks),
+    pinned by the full-value oracle."""
     li = t(spark, sf_dir, "lineitem")
     thresholds = _collect_thresholds(li, sf_dir)
     nth = len(thresholds)
@@ -1031,7 +1031,7 @@ def m10_depth2_tree(spark, sf_dir):
 # Reference: all coverages.R:201-214 (train -> OOB confusion).
 #
 # Scan profile (the 100 TB shape, r12): 1 quantile scan (memoized
-# per sf via _TH_CACHE) + 2 conditional-agg training scans (ALL 5
+# in _TH_CACHE) + 2 conditional-agg training scans (ALL 5
 # roots in one scan; ALL 10 children's LEFT sides in one scan — the
 # R sides are bag-minus-left against scan 1's whole-bag sums, and
 # ALL 20 leaf stats are the chosen child candidates' sums from scan
@@ -1286,11 +1286,9 @@ def bagged_ensemble_approx(spark, sf_dir):
 
 
 def _bagged_ensemble_impl(spark, sf_dir, approx: bool, on_ct=None):
-    """r17 optimization-round rewrite (guide §1.2 "the distributed
-    algorithm" + §8 "decide with small rows"): every aggregate the old
-    3-scan trainer computed — root sums, children-left sums, derived
-    leaf stats, and the OOB vote histogram — is a function of ONE
-    per-row binary descriptor: (pos, w0..w{T-1}, l0..l{K-1}), i.e. the
+    """Every aggregate the trainer needs — root sums, children-left
+    sums, derived leaf stats, and the OOB vote histogram — is a
+    function of ONE per-row binary descriptor: (pos, w0..w{T-1}, l0..l{K-1}), i.e. the
     label, the T bagging memberships (md5 slices vs one threshold) and
     the K candidate-split indicators. The l-indicators are monotone
     per feature (3 thresholds -> 4 distinct patterns), so the FULL
@@ -1301,27 +1299,16 @@ def _bagged_ensemble_impl(spark, sf_dir, approx: bool, on_ct=None):
     combined — the k-means-sufficient-statistics class of driver
     action), and root picking, child picking, leaf majorities and the
     OOB confusion rollup run as exact integer arithmetic over those
-    <= 4096 rows on the driver. Replaces 3 full lineitem scans with 1
-    (the measured walls of the old layout at sf0.1: the two 100-field
-    conditional-agg scans cost ~1.1 s EACH per bench run — almost
-    entirely the per-row bagging-md5 + CASE evaluation running on the
-    single split the one-row-group input scans as; a control scan with
-    the same 90 aggregates but no md5 ran 0.27 s — and the vote scan
-    cost ~2.5 s, of which ~1.9 s was the pushed-down n_oob>0 filter
-    re-evaluating the bagging md5 per CASE arm with no common-
-    subexpression elimination inside FilterExec).
-    At 100 TB the win is the 3x scan reduction itself; the <= 4096-row
-    collect is size-independent. Every quantity is the same integer
-    sum the old scans computed (sum of cnt x 0/1 products), so the
-    output is value-identical — pinned by the m11 full-value oracle
-    (driver-checked at three SFs this round) and the pytest goldens.
+    <= 4096 rows on the driver: one data scan, and a size-independent
+    collect. Every quantity is an integer sum of cnt x 0/1 products,
+    pinned by the m11 full-value oracle and the pytest goldens.
 
     The bagging hash is materialized ONCE per row in its own
     projection (bag_h) and the T membership flags read substrings of
     that column: referenced T times, md5 is non-cheap, so
     CollapseProject keeps the stage and the digest is computed once
-    (the CASE-arm-inlined spelling evaluated it per arm in operators
-    without CSE). fan_out on the (l_orderkey, l_linenumber) row id
+    (inlined into each CASE arm it would be evaluated per arm, with no
+    common-subexpression elimination in FilterExec). fan_out on the (l_orderkey, l_linenumber) row id
     (guide §2.5, unsplittable-input case) parallelizes the md5 + CASE
     work when the scan is a single split; it is a no-op at scale.
     """
@@ -1382,11 +1369,9 @@ def _bagged_ensemble_impl(spark, sf_dir, approx: bool, on_ct=None):
     )
     ct_df = base.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
     if on_ct is not None:
-        # test/audit hook (ADVICE r17): the trainer's REGISTERED
-        # output is a driver-built local relation, so plan audits on
-        # it can no longer see the distributed contingency scan —
-        # this hands the scan's DataFrame to the caller (the exchange
-        # byte-ceiling test runs audit_executed on it directly)
+        # test/audit hook: the registered output is a driver-built
+        # local relation, so this hands the distributed contingency
+        # scan to plan audits (the exchange byte-ceiling test)
         on_ct(ct_df)
     ct = [
         (

@@ -116,22 +116,27 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
 
 
 def shuffle_partition_target(spark: SparkSession) -> int:
-    """Partition count for explicit repartition pins (the r17
+    """Partition count for explicit repartition pins (the
     AQE-coalescing fences in e2_control/fuzzy/grid-join): the count a
-    coalescible exchange would START from. Prefers AQE's
-    `coalescePartitions.initialPartitionNum` when set — that IS the
-    starting target when present — falling back to
-    `spark.sql.shuffle.partitions` (ADVICE r17: three inline
-    `int(conf.get("spark.sql.shuffle.partitions"))` copies silently
-    diverged from the real target whenever initialPartitionNum was
-    configured). Cluster-tuned at scale, never a local constant."""
-    v = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        None,
+    coalescible exchange would START from. That is AQE's
+    `coalescePartitions.initialPartitionNum` when it is set and both
+    `spark.sql.adaptive.enabled` and `coalescePartitions.enabled` are
+    on (otherwise Spark ignores it), else `spark.sql.shuffle.partitions`.
+    Cluster-tuned at scale, never a local constant. A configured count
+    <= 0 raises ValueError."""
+    conf = spark.conf
+    aqe = all(
+        conf.get(f"spark.sql.adaptive.{k}enabled").strip().lower() == "true"
+        for k in ("", "coalescePartitions.")
     )
-    if v:
-        return int(v)
-    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    v = conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
+    )
+    n = int(v if aqe and v is not None else
+            conf.get("spark.sql.shuffle.partitions"))
+    if n <= 0:
+        raise ValueError(f"shuffle partition target must be > 0, got {n}")
+    return n
 
 
 def load_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

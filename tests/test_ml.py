@@ -485,3 +485,49 @@ def test_m13_registered_approx_invariants(spark, sf_dir):
             a = "R" if r.l_returnflag == "R" else "N"
             counts[a] = counts.get(a, 0) + 1
     assert {a: r.n_oob_rows for a, r in got.items()} == counts
+
+
+_RESTART_SCRIPT = """
+import json, sys
+from big_data_bowl_spark.queries import REGISTRY
+from big_data_bowl_spark.session import get_spark
+
+sf_dir = sys.argv[1]
+for _ in range(2):
+    spark = get_spark(cpus="2", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    print(json.dumps({
+        q: sorted(repr(tuple(r)) for r in REGISTRY[q].fn(spark, sf_dir).collect())
+        for q in ("m01_rf_train_confusion", "m06_decision_stump",
+                  "v04_ivf_topk")
+    }))
+    spark.stop()
+"""
+
+
+def test_trained_models_survive_session_restart(sf_dir):
+    """Trained model values are memoized per Spark application: after
+    stop() and a fresh session, the forest (m01), the split thresholds
+    (m06) and the IVF centroids (v04) serve the new session and return
+    the same rows. In a subprocess, because the fixture session is
+    shared by the whole run."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, sf_dir],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    first, second = (
+        json.loads(ln) for ln in out.stdout.splitlines() if ln.startswith("{")
+    )
+    assert all(first.values()), first
+    assert first == second

@@ -2702,15 +2702,23 @@ def test_decode_dispatch_fails_closed_all_formats():
         ("pgm", encode_pgm(img)),
         ("gif", encode_gif([img])),
     ]
+    # the PNG IHDR width and height high bytes (offsets 16 and 20):
+    # a flip claims a multi-gigapixel raster, which must fail on the
+    # inflated-size check instead of allocating it
+    ihdr_flips = [(i, m) for i in (16, 20) for m in (0xFF, 0x80, 0x7F)]
     for fmt, payload in fixtures:
         for cut in range(0, len(payload), max(1, len(payload) // 40)):
             try:
                 decode_payload(payload[:cut], fmt, 11, 9)
             except (ValueError, NotImplementedError):
                 pass
-        for i in range(0, len(payload), max(1, len(payload) // 60)):
+        flips = [
+            (i, 0xFF)
+            for i in range(0, len(payload), max(1, len(payload) // 60))
+        ] + (ihdr_flips if fmt == "png" else [])
+        for i, mask in flips:
             mut = bytearray(payload)
-            mut[i] ^= 0xFF
+            mut[i] ^= mask
             try:
                 decode_payload(bytes(mut), fmt, 11, 9)
             except (ValueError, NotImplementedError):

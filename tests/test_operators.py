@@ -676,33 +676,27 @@ def test_v04_code_path_survives_over_ceiling_nlist(spark, monkeypatch):
 
     sf = "/root/testdata/sf0.001"
     monkeypatch.setattr(ex, "NLIST", 16)
-    # _CENT_CACHE keys on the DATA fingerprint only — an NLIST=16
-    # model must not leak into other tests (or vice versa)
-    ex._CENT_CACHE.clear()
-    try:
-        e = ex.t(spark, sf, "embeddings")
-        cent = ex._trained_centroid_rows(spark, e, sf)
-        assert len(cent) == 16
-        assert sum(len(kv) for _, kv in cent) > 512
-        out = ex.v04_ivf_topk(spark, sf).collect()
-        assert len(out) > 0  # ran end-to-end through the fence
-        corp = e.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("cv")
-        )
-        fenced = {
-            r["vec_id"]: r["cell"]
-            for r in ex._with_cell(corp, cent).collect()
-        }
-        literal = {
-            r["vec_id"]: r["cell"]
-            for r in corp.withColumn(
-                "cell", ex._cell_expr("cv", cent)
-            ).collect()
-        }
-        assert fenced == literal
-        assert len(set(fenced.values())) > 1  # non-vacuous model
-    finally:
-        ex._CENT_CACHE.clear()
+    e = ex.t(spark, sf, "embeddings")
+    cent = ex._trained_centroid_rows(spark, e, sf)
+    assert len(cent) == 16
+    assert sum(len(kv) for _, kv in cent) > 512
+    out = ex.v04_ivf_topk(spark, sf).collect()
+    assert len(out) > 0  # ran end-to-end through the fence
+    corp = e.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("cv")
+    )
+    fenced = {
+        r["vec_id"]: r["cell"]
+        for r in ex._with_cell(corp, cent).collect()
+    }
+    literal = {
+        r["vec_id"]: r["cell"]
+        for r in corp.withColumn(
+            "cell", ex._cell_expr("cv", cent)
+        ).collect()
+    }
+    assert fenced == literal
+    assert len(set(fenced.values())) > 1  # non-vacuous model
 
 
 def test_kmeans_and_sqltext_degenerate_inputs_fail_loud(spark):

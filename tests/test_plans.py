@@ -716,3 +716,54 @@ def test_digest_only_shuffles_stay_narrow(spark):
     a = audit_executed(ct_df)
     assert a["max_bytes_per_record"] <= 256, ("m11 contingency scan", a)
     assert a["spill_bytes"] == 0, ("m11 contingency scan", a)
+
+
+def test_shuffle_partition_target_follows_aqe_coalescing(spark):
+    """initialPartitionNum is the repartition target only while AQE and
+    its partition coalescing are both on; otherwise Spark ignores it
+    and the target is spark.sql.shuffle.partitions."""
+    from big_data_bowl_spark.sources.io import shuffle_partition_target
+
+    init = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    flags = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = {k: spark.conf.get(k) for k in flags}
+    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle_partition_target(spark) == base
+    try:
+        spark.conf.set(init, str(base + 3))
+        assert shuffle_partition_target(spark) == base + 3
+        for k in flags:
+            spark.conf.set(k, "false")
+            assert shuffle_partition_target(spark) == base
+            spark.conf.set(k, saved[k])
+    finally:
+        spark.conf.unset(init)
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert shuffle_partition_target(spark) == base
+
+
+def test_shuffle_partition_target_rejects_non_positive_counts():
+    """Spark's session conf refuses a non-positive initialPartitionNum,
+    but a conf source that does not validate must still fail loudly
+    instead of reaching repartition(0)."""
+    from types import SimpleNamespace
+
+    from big_data_bowl_spark.sources.io import shuffle_partition_target
+
+    conf = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.shuffle.partitions": "4",
+    }
+    stub = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda k, *d: conf.get(k, *d))
+    )
+    assert shuffle_partition_target(stub) == 4
+    for bad in ("0", "-2"):
+        conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = bad
+        with pytest.raises(ValueError, match="must be > 0"):
+            shuffle_partition_target(stub)

@@ -37,7 +37,7 @@ COLLECT_ALLOWED = {
     "operators/rank.py": 2,  # bucket stats — num_buckets-sized
     # the PQ codebook (PQ_M x PQ_K x PQ_SUB = 512 doubles) and the
     # bounded ANN query sample (N_QUERIES=3 rows) — driver-side
-    # index/model artifacts, memoized per data fingerprint (r13
+    # index/model artifacts, memoized in a base.ModelMemo (r13
     # v-family rebuild); the coarse-codebook trainer's collects live
     # in vectors.py since the r13 Lloyd rewrite
     "queries/extras.py": 2,
@@ -140,6 +140,56 @@ def test_driver_side_materialization_sites_are_frozen():
             "justification; if not, it does not belong in a "
             "distributed data path"
         )
+
+
+# Module-level mutable containers that are allowed to start empty, each
+# with its reason. Anything else would be hidden process-lifetime state:
+# trained model values belong in a queries/base.ModelMemo, which is
+# scoped to one Spark application.
+EMPTY_MODULE_STATE_ALLOWED = {
+    # the query registry, filled by @register at import time
+    "queries/base.py:REGISTRY",
+    # audit side channels: the last streaming drain's state-store
+    # metrics and executed plans, read by tools/ and tests/
+    "streaming/windows.py:LAST_STATE_METRICS",
+    "streaming/windows.py:LAST_EXEC_PLANS",
+}
+
+
+def _is_empty_container(node) -> bool:
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, (ast.List, ast.Set)):
+        return not node.elts
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id in ("dict", "list", "set")
+        and not node.args
+        and not node.keywords
+    )
+
+
+def test_no_module_level_empty_containers():
+    """No module-scope `x = {}` / `[]` / `set()` / `dict()` outside the
+    allowlist: such a container filled at run time outlives the Spark
+    session that produced its contents."""
+    found = set()
+    for p, rel in _py_files():
+        for node in _module_scope_nodes(ast.parse(p.read_text())):
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            if _is_empty_container(value):
+                found |= {f"{rel}:{ast.unparse(t)}" for t in targets}
+    assert found == EMPTY_MODULE_STATE_ALLOWED, (
+        f"module-level empty containers changed: {found} != "
+        f"{EMPTY_MODULE_STATE_ALLOWED} — memoize trained values in a "
+        "queries/base.ModelMemo instead"
+    )
 
 
 # VERDICT r12 item 5: every Window.orderBy WITHOUT a partitionBy is a
