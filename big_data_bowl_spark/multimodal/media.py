@@ -96,6 +96,21 @@ FEATURE_SCHEMA = "media_id long, n_bytes long, mean_intensity double, max_intens
 
 FRAME_SCHEMA = "media_id long, frame_idx int, frame_payload binary"
 
+# Largest raster a decoder allocates (64 Mpx, e.g. 8192 x 8192). Header
+# dimensions are untrusted, and RLE, LZW and JPEG legitimately expand
+# far past their payload size, so the bound is a constant.
+MAX_RASTER_PIXELS = 1 << 26
+
+
+def _check_raster(w: int, h: int, what: str) -> None:
+    """Raise ValueError for a header-declared w x h raster that is
+    negative or over MAX_RASTER_PIXELS; every decoder calls this on
+    its header dimensions before allocating."""
+    if w < 0 or h < 0 or w * h > MAX_RASTER_PIXELS:
+        raise ValueError(
+            f"{what} raster {w}x{h} outside 0..{MAX_RASTER_PIXELS} pixels"
+        )
+
 
 def as_media_table(documents: DataFrame) -> DataFrame:
     """Deterministic media table derived from `documents` (the test
@@ -149,6 +164,7 @@ def _decode_netpbm(payload: bytes) -> "np.ndarray":
         tokens.append(int(payload[start:pos]))
     pos += 1  # the single whitespace after maxval
     w, h, maxval = tokens
+    _check_raster(w, h, "netpbm")
     if not 0 < maxval < 65536:
         raise ValueError(f"invalid netpbm maxval {maxval}")
     depth = 1 if magic == b"P5" else 3
@@ -194,6 +210,7 @@ def _decode_bmp(payload: bytes) -> "np.ndarray":
     data_offset = struct.unpack_from("<I", payload, 10)[0]
     hdr_size, w, h = struct.unpack_from("<Iii", payload, 14)
     planes, bpp, compression = struct.unpack_from("<HHI", payload, 26)
+    _check_raster(w, abs(h), "BMP")
     if compression == 1 and bpp == 8:
         return _decode_bmp_rle8(
             payload, data_offset, hdr_size, w, h
@@ -545,6 +562,7 @@ def _decode_png(payload: bytes) -> "np.ndarray":
             passes.append((x0, y0, dx, dy, pw, ph))
     need = sum(ph * (1 + -(-(pw * depth * channels) // 8))
                for *_, pw, ph in passes)
+    _check_raster(w, h, "PNG")
     raw = zlib.decompress(bytes(idat))
     if len(raw) != need:
         raise ValueError("PNG raster size mismatch")
@@ -1708,6 +1726,7 @@ def _decode_jpeg(payload: bytes) -> "np.ndarray":
             # progressive — SOF1 is decode-identical to SOF0, it just
             # admits 12-bit samples (T.81 Table B.2; r11 seam closed)
             prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
+            _check_raster(w, h, "JPEG")
             if prec not in (8, 12):
                 raise ValueError(f"invalid JPEG sample precision {prec}")
             precision = prec
@@ -2048,6 +2067,7 @@ def decode_payload(
             f"codec for format {fmt!r} not available in this environment; "
             "plug a real decoder (PIL/ffmpeg) into decode_payload"
         )
+    _check_raster(width, height, "fake")
     n = width * height
     buf = np.frombuffer(payload, dtype=np.uint8)
     if len(buf) == 0:
@@ -3646,6 +3666,7 @@ def _parse_gif(payload: bytes):
     if len(payload) < 13:
         raise ValueError("truncated GIF header")
     sw, sh, flags, bg, _ar = struct.unpack_from("<HHBBB", payload, 6)
+    _check_raster(sw, sh, "GIF")
     pos = 13
     palette = None
     if flags & 0x80:

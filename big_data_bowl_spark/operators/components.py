@@ -139,15 +139,14 @@ def connected_components(
         .select(
             "node", F.least(F.col("node"), F.col("nbr")).alias("comp")
         )
-        # LAZY checkpoint (r18, VERDICT r17 item 1): the fast-path
-        # agreement check right below is an action over this very
-        # frame, so it materializes the checkpoint as a side effect —
-        # same truncated lineage and persisted blocks, one fewer
-        # eager job per call (measured 0.34 s -> 0.25-0.28 s for the
-        # init+check sequence on both bench pair feeds, 7 -> 6 jobs).
-        # sym stays EAGER: it is referenced by labels AND the check
-        # join, and a lazy sym would let the two branches race to
-        # compute the whole upstream LSH chain twice inside one job.
+        # LAZY checkpoint: the agreement check below is an action over
+        # this frame, so it fills the checkpoint as a side effect (one
+        # fewer eager job per call, 7 -> 6 jobs). Its two references lu
+        # and lv may both compute the node-sized init groupBy before
+        # the checkpoint fills; that is accepted, since both read the
+        # persisted sym. sym stays EAGER: it is referenced by labels
+        # AND the check join, and a lazy sym would let the two branches
+        # race to compute the whole upstream LSH chain twice in one job.
         .localCheckpoint(eager=False)
     )
     # Converged-at-init fast path (r15): LSH near-dup graphs are

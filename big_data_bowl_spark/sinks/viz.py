@@ -58,13 +58,13 @@ def save_heatmap(
     mat = control_surface_matrix(control_df, value_col)
     try:
         import matplotlib
+        matplotlib.use("Agg")
+        import matplotlib.pyplot as plt
     except ImportError as exc:  # pragma: no cover - env without mpl
         raise ImportError(
             "matplotlib is not installed in this environment; use "
             "control_surface_matrix() and render with your own backend"
         ) from exc
-    matplotlib.use("Agg")  # pragma: no cover - env with mpl
-    import matplotlib.pyplot as plt  # pragma: no cover
 
     fig, ax = plt.subplots(figsize=(12, 5.33))  # pragma: no cover
     ax.imshow(mat.values, origin="lower", aspect="auto")  # pragma: no cover

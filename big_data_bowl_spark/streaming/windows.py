@@ -200,10 +200,10 @@ LAST_EXEC_PLANS: list = []
 
 # Plan capture is OPT-IN (ADVICE r14): the 10 ms poll and the
 # per-batch JVM plan pinning only pay off when an audit reads the
-# plans, so the audit tools (tools/plan_audit.py --all,
+# plans, so the audit tools (tools/plan_audit.py,
 # tools/shuffle_metrics.py --streaming) and the all-batch-capture
 # pin test set this True around their drains; every other session —
-# the driver's gate, bench, plain queries — drains with a bare
+# the oracle gate, perfbench, plain queries — drains with a bare
 # awaitTermination() and pins nothing.
 CAPTURE_EXEC_PLANS: bool = False
 
@@ -266,7 +266,7 @@ def _await_capturing_plans(q) -> dict:
 # older than the window keep their (sink, n_batches) row — index
 # stability for concurrent readers — but drop the plan refs. The
 # known in-repo consumers sit under the window by design: the
-# 256-query gate drains 16 streams, and plan_audit --all harvests
+# 256-query gate drains 16 streams, and plan_audit's sweep harvests
 # its ~16 drains' tuples into its own report-scoped dict (those
 # references intentionally outlive a trim; the audit process exits
 # right after).

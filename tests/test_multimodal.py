@@ -2735,6 +2735,77 @@ def test_decode_dispatch_fails_closed_all_formats():
     except ValueError as e:
         assert e.__cause__ is not None or "PNG" in str(e)
 
+    # header dimensions that claim a multi-gigapixel raster must fail
+    # with ValueError before the decoder allocates it; decoded in a
+    # child process whose address space is capped at 4e9 bytes, so an
+    # unchecked allocation surfaces as MemoryError instead of paging
+    import os
+    import pickle
+    import struct
+    import subprocess
+    import sys
+
+    def bmp_rle(bpp, compression):
+        offset = 14 + 40 + 4 * (1 << bpp)
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, 0x10000, 0x10000, 1, bpp, compression,
+            2, 0, 0, 0, 0,
+        )
+        return (
+            b"BM" + struct.pack("<IHHI", offset + 2, 0, 0, offset) + info
+            + bytes(4 * (1 << bpp)) + b"\x00\x01"  # end of bitmap
+        )
+
+    def jpeg_sof(payload, h, w):
+        pos = 2
+        while payload[pos + 1] not in (0xC0, 0xC2):
+            pos += 2 + struct.unpack_from(">H", payload, pos + 2)[0]
+        mut = bytearray(payload)
+        struct.pack_into(">HH", mut, pos + 5, h, w)
+        return bytes(mut)
+
+    def gif_screen(w, h):
+        mut = bytearray(encode_gif([img]))
+        struct.pack_into("<HH", mut, 6, w, h)
+        return bytes(mut)
+
+    baseline = encode_jpeg(img, quant=[1] * 64)
+    prog = encode_jpeg(img, quant=[1] * 64, progressive=True)
+    oversized = [
+        ("bmp", bmp_rle(8, 1)),
+        ("bmp", bmp_rle(4, 2)),
+        ("jpeg", jpeg_sof(baseline, 0xFFFF, 0xFFFF)),
+        ("jpeg", jpeg_sof(prog, 0xFFFF, 0xFFFF)),
+        ("jpeg", jpeg_sof(prog, 0x8000, 0x8000)),
+        ("gif", gif_screen(0xFFFF, 0xFFFF)),
+    ]
+    wide_only = [("gif", gif_screen(0xFFFF, 9))]  # 0.6 Mpx: decodes
+    child = (
+        "import pickle, resource, sys\n"
+        "resource.setrlimit(resource.RLIMIT_AS, (4_000_000_000,) * 2)\n"
+        "from big_data_bowl_spark.multimodal.media import decode_payload\n"
+        "out = []\n"
+        "for fmt, payload in pickle.load(sys.stdin.buffer):\n"
+        "    try:\n"
+        "        decode_payload(payload, fmt, 11, 9)\n"
+        "        out.append('ok')\n"
+        "    except Exception as e:\n"
+        "        out.append(type(e).__name__)\n"
+        "print(','.join(out))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", child],
+        input=pickle.dumps(oversized + wide_only),
+        capture_output=True,
+        cwd=repo,
+        env={**os.environ, "OPENBLAS_NUM_THREADS": "1"},
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr.decode()[-2000:]
+    outcomes = res.stdout.decode().strip().split(",")
+    assert outcomes == ["ValueError"] * len(oversized) + ["ok"], outcomes
+
 
 # ---------------------------------------------------------------------------
 # VERDICT r16 item 1: the perceptual triad's adversarial-skew caps

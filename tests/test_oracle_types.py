@@ -22,17 +22,13 @@ regression on the exact pre-fix t31 oracle shape.
 from __future__ import annotations
 
 import os
-import sys
 from datetime import datetime, timezone
 from decimal import Decimal
 
 import duckdb
 import pytest
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(_REPO, "tools"))
-
-from check_oracle import TABLES, type_class, typed_mismatches  # noqa: E402
+from tools.check_oracle import TABLES, type_class, typed_mismatches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 

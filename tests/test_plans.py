@@ -497,7 +497,9 @@ def test_results_independent_of_shuffle_partition_count(spark, sf_dir):
     gate 32); this makes it explicit for the operators MOST at risk
     — global row ids, deterministic samples/splits/folds, collected
     arrays, LSH pair generation, CC labels, salted aggregation —
-    by comparing full results at 4 vs 13 partitions."""
+    by comparing full results at 1, 4 and 13 partitions. One
+    partition is the degenerate case: every row id, sample and fold
+    is computed inside a single task."""
     from big_data_bowl_spark.queries import REGISTRY
 
     AT_RISK = [
@@ -534,13 +536,13 @@ def test_results_independent_of_shuffle_partition_count(spark, sf_dir):
     saved = spark.conf.get(key)
     try:
         results = {}
-        for nparts in ("4", "13"):
+        for nparts in ("1", "4", "13"):
             spark.conf.set(key, nparts)
             results[nparts] = {n: snap(n) for n in AT_RISK}
     finally:
         spark.conf.set(key, saved)
     for n in AT_RISK:
-        assert results["4"][n] == results["13"][n], n
+        assert results["1"][n] == results["4"][n] == results["13"][n], n
         assert results["4"][n], f"{n} returned no rows"
 
 

@@ -18,6 +18,7 @@ Two claims the external review previously verified by hand-sweep:
 from __future__ import annotations
 
 import ast
+import importlib.util
 import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent / "big_data_bowl_spark"
@@ -308,3 +309,57 @@ def test_streaming_audit_lists_cover_every_draining_query():
         f"the queries that actually drain: "
         f"{set(state_checked) ^ draining}"
     )
+
+
+def _catches_import_error(handler) -> bool:
+    t = handler.type
+    names = t.elts if isinstance(t, ast.Tuple) else [t]
+    return any(
+        isinstance(n, ast.Name)
+        and n.id in ("ImportError", "ModuleNotFoundError")
+        for n in names
+    )
+
+
+def _resolves(module: str) -> bool:
+    try:
+        return importlib.util.find_spec(module) is not None
+    except ModuleNotFoundError:  # a parent package is missing
+        return False
+
+
+def test_absolute_imports_resolve():
+    """Every absolute import in the package, the tools and the tests
+    names a module that exists — including imports inside functions,
+    which only fail when their code path runs. Imports inside a try
+    whose handler catches ImportError are optional dependencies and
+    are skipped. Tools import each other as `tools.<name>` from the
+    repo root, the path conftest puts on sys.path."""
+    repo = ROOT.parent
+    bad = []
+    for d in ("tools", "tests", "big_data_bowl_spark"):
+        for p in sorted((repo / d).rglob("*.py")):
+            tree = ast.parse(p.read_text())
+            guarded = {
+                id(sub)
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Try)
+                and any(_catches_import_error(h) for h in node.handlers)
+                for stmt in node.body
+                for sub in ast.walk(stmt)
+            }
+            for node in ast.walk(tree):
+                if id(node) in guarded:
+                    continue
+                if isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                    mods = [node.module]
+                else:
+                    continue
+                bad += [
+                    f"{p.relative_to(repo)}:{node.lineno} imports {m}"
+                    for m in mods
+                    if not _resolves(m)
+                ]
+    assert not bad, bad

@@ -9,7 +9,7 @@ id offsets (replica r shifts ids by r * 10^9, so keys stay unique
 while low-order modular structure — selectivities, feature formulas —
 is preserved in expectation), write the exploded lake to a temp dir,
 then run each pipeline at 1x and Nx through full materialization
-(count(), the bench.py convention) and compare:
+(count(), so every stage executes) and compare:
 
 - wall_ratio vs factor: sub-linear => fixed overheads amortize; the
   interesting red flag is wall_ratio >> factor (a super-linear stage).

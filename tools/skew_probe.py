@@ -39,7 +39,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from scale_probe import heap_used_mb, n_exchanges  # noqa: E402
+from tools.scale_probe import heap_used_mb, n_exchanges  # noqa: E402
 
 
 def _dh_table(spark, background: int, hot: int):
