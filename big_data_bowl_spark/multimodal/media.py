@@ -563,8 +563,11 @@ def _decode_png(payload: bytes) -> "np.ndarray":
     need = sum(ph * (1 + -(-(pw * depth * channels) // 8))
                for *_, pw, ph in passes)
     _check_raster(w, h, "PNG")
-    raw = zlib.decompress(bytes(idat))
-    if len(raw) != need:
+    # inflate at most need + 1 bytes: a stream that inflates past the
+    # IHDR size (a zlib bomb) stops there instead of exhausting memory
+    inflater = zlib.decompressobj()
+    raw = inflater.decompress(idat, need + 1)
+    if len(raw) != need or inflater.unconsumed_tail:
         raise ValueError("PNG raster size mismatch")
 
     if interlace == 0:

@@ -311,22 +311,20 @@ _PRIORITY = [
 ]
 
 
-# Queries whose executed CODE changed in round 17 (their prior green
-# was earned by different code), plan-relevant first: mm15b is NEW
-# (the capped production twin of mm15 — match + oversized-bucket
-# facets, VERDICT r16 item 1); mm15/mm16/mm17 were refactored into
-# cap-aware builders (_mm15_pairs/_mm16_pairs/_mm17_pairs with
-# max_bucket=None on the registered path — results-neutral and
-# plan-neutral by construction, the cap branch is skipped entirely,
-# but the executed code moved so they re-verify). Deferred to the
+# Queries whose executed CODE changed recently (their prior green
+# was earned by different code), plan-relevant first: mm15b is the
+# capped production twin of mm15 (match + oversized-bucket facets);
+# mm15/mm16/mm17 build their pairs through banding.bucket_pairs
+# (max_bucket=None on the registered path — results-neutral, and the
+# only plan change is an IsNotNull filter on the bucket key — but the
+# executed code moved so they re-verify). Deferred to the
 # normal rotation, with reason: the queries that merely CALL
 # operators/components.release_local_checkpoint (d05/g01/g02/g03/
-# g06/e05/v08/v12) — this round's change there touches only the
-# helper's FAILURE path (a RuntimeWarning replacing a silent pass;
-# the success path is byte-identical, pytest-pinned both ways), the
-# same results-neutral helper-swap class the r16 layout deferred,
-# and including all eight would push the r11 cohort out of the
-# 50-slot prefix.
+# g06/e05/v08/v12) — the helper's change touched only its FAILURE
+# path (a RuntimeWarning replacing a silent pass; the success path
+# is byte-identical, pytest-pinned both ways), a results-neutral
+# helper swap, and including all eight would push older cohorts out
+# of the 50-slot prefix.
 _FIRST = [
     "mm15b_image_dhash_capped_audit",
     "mm15_image_dhash_neardup",

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.banding import bucket_pairs, oversized_buckets
 from ..operators.components import release_local_checkpoint
 from ..sources.io import shuffle_partition_target
 from .base import (
@@ -2351,13 +2352,13 @@ def e05_embedding_index_pipeline(spark: SparkSession, sf_dir: str):
     ).select("vec_id", "cell", scale.alias("scale"))
 
     # uncapped here (exact oracle semantics); a production index
-    # refresh on an untrusted corpus passes max_bucket through
-    # v03_bucketed_neardup and reads oversized_srp_buckets — the
-    # r15 skew guard this chain inherits (SCALE.md, SRP bucket cap).
-    # That capped spelling is itself a driver-gated row since r16:
-    # v03b_bucketed_cosine_capped_audit (vectors.py) verifies match +
-    # oversized-bucket facets cell-for-cell, so the knob this chain
-    # would flip under skew is oracle-pinned, not pytest-only
+    # refresh on an untrusted corpus builds its pairs with
+    # vectors._srp_pairs(..., max_bucket=) and surfaces
+    # banding.oversized_buckets (SCALE.md, SRP bucket cap). That
+    # capped spelling is the driver-gated row
+    # v03b_bucketed_cosine_capped_audit (vectors.py), which verifies
+    # match + oversized-bucket facets cell-for-cell, so the cap this
+    # chain would take under skew is oracle-pinned, not pytest-only
     pairs = v03_bucketed_neardup(spark, sf_dir).select("vec_a", "vec_b")
     labels = connected_components(pairs, src="vec_a", dst="vec_b")
     canon = feats.join(
@@ -3442,117 +3443,37 @@ FUZZY_BLOCK_LEN = 16   # blocking key: first 16 chars
 
 
 def _fuzzy_blocked_pairs(keyed, key_col: str, max_bucket: int | None = None):
-    """Bucket-local i<j candidate pairs from a blocking table with
-    columns (`key_col`, c_custkey, c_name) — the shared candidate
-    generator behind j11 (prefix keys) and j13 (deletion-neighborhood
-    keys). One groupBy on the blocking key, sorted-struct buckets,
-    pair emission bucket-locally: O(sum bucket^2), never all-pairs.
+    """Bucket-local i<j candidate pairs (`key_col`, a, b) of
+    (c_custkey, c_name) structs from a blocking table — the shared
+    candidate generator behind j11 (prefix keys) and j13
+    (deletion-neighborhood keys), via `banding.bucket_pairs` (its
+    docstring states the emission and `max_bucket` cap policy; audit
+    a cap with `banding.oversized_buckets(keyed, (key_col,), cap)`).
+    A NULL blocking key never pairs: a production blocker that wants
+    null-key rows pairs them under a second, non-null blocking pass.
 
-    `max_bucket` threads the d02 family's adversarial-skew guard
-    (nlp._pairs_from_bands; VERDICT r10 item 2) through the fuzzy
-    family: a hot blocking key — thousands of near-identical names
-    sharing one prefix or one deletion variant — concentrates
-    O(bucket^2) pair emission in ONE task at 100 TB (C(100k,2) ≈ 5e9
-    pairs from a single group). Capping drops buckets larger than
-    `max_bucket` from pair generation: a bucket that hot is a
-    duplicate CLUSTER, better handled by exact grouping + survivorship
-    (d01/d05) than by pairwise levenshtein. Callers that cap MUST
-    audit what was dropped via `fuzzy_oversized_buckets` — silent
-    truncation reads as full coverage. Default None preserves the
-    registered queries' exact semantics (and their oracles).
-
-    The cap pre-filters BEFORE the collect_list (r16 — the v03
-    `_srp_pairs` pattern, generalized per VERDICT r15 item 1): the
-    old spelling collected every bucket's (key, name) struct list
-    and THEN dropped the oversized ones, so a hot bucket's full
-    member array still materialized in reducer aggregation state —
-    measured at 100x duplication density: j13b heap 3.3 GB / wall
-    7.66x, because 290k-member struct lists were built only to be
-    discarded. The count pre-pass aggregates only the blocking key
-    (bytes-bounded map-side state), the hot-key list is bounded by
-    construction (count > max_bucket can match at most
-    rows/max_bucket keys) and broadcasts into a left_anti, and the
-    collect_list then never sees a bucket larger than the cap —
-    reducer-resident state is <= max_bucket x payload by
-    construction, on ANY corpus. Same measured probe after:
-    heap 0.9 GB / wall 5.72x (SCALE.md r16). The filter reuses the
-    audit's own aggregation (fuzzy_oversized_buckets), so the cap
-    and the audit cannot diverge.
+    The UNCAPPED path pins the bucket shuffle's partition count: the
+    stage above this exchange does the O(sum bucket^2) pair emission
+    plus per-pair levenshtein — CPU that AQE's byte-targeted
+    coalescing cannot see. Left coalescible, a blocking table small in
+    BYTES collapses to one post-shuffle partition and the whole
+    quadratic stage runs on one core (measured at sf0.1: j11 2.99 s
+    -> 0.55 s, j13 2.47 -> 1.76 from this pin alone). The explicit
+    repartition on the blocking key satisfies the groupBy's
+    clustering requirement, so it replaces — never adds to — the
+    exchange; the count is the session's shuffle-partition setting,
+    cluster-tuned at scale. The CAPPED path is deliberately NOT
+    pinned: the cap already bounds per-bucket emission, and the same
+    pin A/B-measured there made j13b WORSE (2.03 -> 2.78 s warm — the
+    bounded pair stream then rides near-empty partitions through the
+    audit-union stages, paying task launch per stage that AQE's
+    collapse avoids).
     """
-    if max_bucket is not None and max_bucket < 2:
-        raise ValueError(
-            f"max_bucket must be >= 2, got {max_bucket} — a cap "
-            "below 2 drops every pair-generating bucket"
-        )
-    # A NULL blocking key carries no blocking information: the SQL
-    # equi-join spelling (and every oracle) never pairs NULL = NULL,
-    # and — r16 review finding — a NULL-keyed bucket would also slip
-    # through the left_anti cap below (anti joins don't match NULL
-    # keys), re-materializing exactly the unbounded reducer array the
-    # cap exists to prevent. Drop null-keyed rows up front, in the
-    # capped and uncapped spellings alike; a production blocker that
-    # wants null-key rows pairs them under a second, non-null
-    # blocking pass (the documented multi-pass recall recipe).
-    keyed = keyed.where(F.col(key_col).isNotNull())
-    if max_bucket is not None:
-        hot = fuzzy_oversized_buckets(keyed, key_col, max_bucket).select(
-            key_col
-        )
-        keyed = keyed.join(F.broadcast(hot), key_col, "left_anti")
-    # Pin the bucket shuffle's partition count on the UNCAPPED path
-    # (r17, guide §2.2/§2.5): the stage above this exchange does the
-    # O(sum bucket^2) pair emission plus per-pair levenshtein — CPU
-    # that AQE's byte-targeted coalescing cannot see. Left
-    # coalescible, a blocking table small in BYTES collapses to one
-    # post-shuffle partition and the whole quadratic stage runs on one
-    # core (measured at sf0.1: j11 2.99 s -> 0.55 s, j13 2.47 -> 1.76
-    # from this pin alone). The explicit repartition on the blocking
-    # key satisfies the groupBy's clustering requirement, so it
-    # replaces — never adds to — the exchange (guide §2.4); the count
-    # is the session's shuffle-partition setting, cluster-tuned at
-    # scale. The CAPPED path is deliberately NOT pinned: the
-    # max_bucket pre-filter already bounds per-bucket emission, and
-    # the same pin A/B-measured there made j13b WORSE (2.03 -> 2.78 s
-    # warm — the bounded pair stream then rides 32 near-empty
-    # partitions through the audit-union stages, paying task launch
-    # per stage that AQE's collapse avoids).
     if max_bucket is None:
         n_parts = shuffle_partition_target(keyed.sparkSession)
         keyed = keyed.repartition(n_parts, key_col)
-    buckets = (
-        keyed.groupBy(key_col)
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("c_custkey", "c_name"))
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
-    return buckets.select(
-        F.posexplode("xs").alias("pos", "a"), "xs"
-    ).select(
-        "a",
-        F.explode(
-            F.slice(F.col("xs"), F.col("pos") + 2, F.size("xs"))
-        ).alias("b"),
-    )
-
-
-def fuzzy_oversized_buckets(keyed, key_col: str, max_bucket: int):
-    """(key, bucket_size) rows for blocking buckets the `max_bucket`
-    cap would drop — the audit companion of
-    `_fuzzy_blocked_pairs(..., max_bucket=...)`, mirroring
-    nlp.oversized_buckets: one extra count-aggregation over the SAME
-    blocking rows, output bounded by the number of hot keys. NULL
-    keys are excluded to mirror the pair generator: they never pair
-    (SQL equi-join semantics), so reporting a NULL bucket as
-    "dropped by the cap" would claim a truncation that is really the
-    null-key rule."""
-    return (
-        keyed.where(F.col(key_col).isNotNull())
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
+    return bucket_pairs(
+        keyed, (key_col,), F.struct("c_custkey", "c_name"), max_bucket
     )
 
 
@@ -3580,7 +3501,7 @@ def fuzzy_oversized_buckets(keyed, key_col: str, max_bucket: int):
     "differing inside the blocking prefix is not a candidate (the "
     "documented miss class every production blocker accepts; add a "
     "second blocking pass on a different key to recover them). "
-    "Adversarial skew (r11): the capped spelling "
+    "Adversarial skew: the capped spelling "
     "j11_fuzzy_name_match_capped threads the d02 max_bucket guard + "
     "oversized-bucket audit through this blocker for corpora where "
     "one prefix collects thousands of rows; the registered default "
@@ -3612,7 +3533,7 @@ def j11_fuzzy_name_match_capped(
 ):
     """j11 with the adversarial-skew cap: returns (matches, audit)
     where `audit` lists every blocking bucket the cap excluded from
-    pair generation (fuzzy_oversized_buckets — run it or the
+    pair generation (banding.oversized_buckets — run it or the
     truncation is silent). Production spelling for corpora with hot
     prefixes; identical to the registered j11 wherever no bucket
     exceeds `max_bucket`."""
@@ -3627,7 +3548,7 @@ def j11_fuzzy_name_match_capped(
         )
         .filter(F.col("dist") <= FUZZY_MAX_DIST)
     )
-    return matches, fuzzy_oversized_buckets(keyed, "blk", max_bucket)
+    return matches, oversized_buckets(keyed, ("blk",), max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -4984,7 +4905,7 @@ def o12_kfold_assignment(spark: SparkSession, sf_dir: str):
     "mirrors key generation with an uncorrelated range join (DuckDB "
     "range() cannot take lateral bounds); its 255-char cap is above "
     "any c_name length so both engines emit identical key sets. "
-    "Adversarial skew (r11): j13_fuzzy_match_deletion_blocking_capped "
+    "Adversarial skew: j13_fuzzy_match_deletion_blocking_capped "
     "threads the d02 max_bucket guard + oversized-bucket audit "
     "through this blocker — a hot deletion variant shared by "
     "thousands of near-identical names is a duplicate CLUSTER for "
@@ -5035,7 +4956,7 @@ def j13_fuzzy_match_deletion_blocking_capped(
 ):
     """j13 with the adversarial-skew cap: returns (matches, audit)
     where `audit` lists every deletion-key bucket the cap excluded
-    from pair generation (fuzzy_oversized_buckets — run it or the
+    from pair generation (banding.oversized_buckets — run it or the
     truncation is silent). Note the recall contract under the cap:
     edit-distance-<=1 pairs whose EVERY shared deletion key sits in a
     dropped bucket are not emitted — exactly the near-identical
@@ -5053,10 +4974,10 @@ def j13_fuzzy_match_deletion_blocking_capped(
         .filter(F.col("dist") <= 1)
         .distinct()
     )
-    return matches, fuzzy_oversized_buckets(keyed, "k", max_bucket)
+    return matches, oversized_buckets(keyed, ("k",), max_bucket)
 
 
-# Gate-registered caps (VERDICT r11 item 3). Semantics of the cap:
+# Gate-registered caps. Semantics of the cap:
 # a blocking bucket with MORE members than the cap is excluded from
 # pairwise verification and reported in the audit facet instead — at
 # 100 TB a bucket that hot is a duplicate CLUSTER, routed to exact
@@ -5113,8 +5034,8 @@ def _fuzzy_capped_facets(matches, audit, key_col: str):
     """,
     note="J11b: the PRODUCTION spelling of j11 — "
     f"j11_fuzzy_name_match_capped(max_bucket={FUZZY_MAX_BUCKET_J11}) "
-    "executed and gate-verified (VERDICT r11 item 3, the a09b/m13 "
-    "registered-twin pattern), match facet + oversized-bucket audit "
+    "executed and gate-verified (the a09b/m13 registered-twin "
+    "pattern), match facet + oversized-bucket audit "
     "facet in one cell-for-cell-oracled output so the cap's "
     "truncation is never silent. On TPC-H's uniform name space every "
     "blk16 bucket holds exactly 100 rows at gate scale, so the cap "
@@ -5159,8 +5080,8 @@ def j11b_fuzzy_capped_audit(spark: SparkSession, sf_dir: str):
     """,
     note="J13b: the PRODUCTION spelling of j13 — "
     "j13_fuzzy_match_deletion_blocking_capped(max_bucket="
-    f"{FUZZY_MAX_BUCKET_J13}) executed and gate-verified (VERDICT "
-    "r11 item 3), match + oversized-bucket facets in one "
+    f"{FUZZY_MAX_BUCKET_J13}) executed and gate-verified, "
+    "match + oversized-bucket facets in one "
     "cell-for-cell-oracled output. The cap BITES PARTIALLY on the "
     "real deletion-key mix (sf0.01: the 100 size-29 buckets are "
     "audited out, sizes <= 24 keep pairing — 5,900 of 19,500 "

@@ -49,12 +49,11 @@ def _sym_edges(pairs):
     """Symmetrized, u-partitioned, checkpointed edge table from d02's
     candidate pairs — the shared head of the g01/g02/g05/g06 loops.
 
-    NO .distinct() on the union (r16 — the components r15 lesson
-    applied to the graph family's own edge build): d02's output
-    contract is DISTINCT i<j pairs (nlp._pairs_from_bands ends in the
-    adjudicated output-pair-keyed distinct), so the two directed
-    halves are duplicate-free and disjoint (u<v vs u>v; i<j strict
-    means no self-loops) — union-all IS union-distinct here, while
+    NO .distinct() on the union: d02's output contract is DISTINCT
+    i<j pairs (nlp._pairs_from_bands ends in an output-pair-keyed
+    distinct over banding.bucket_pairs), so the two directed halves
+    are duplicate-free and disjoint (u<v vs u>v; i<j strict means no
+    self-loops) — union-all IS union-distinct here, while
     the removed distinct cost a full |E|-keyed shuffle + hash state
     per query just to re-prove it. The oracles' SQL `UNION` dedups by
     definition, so parity is unchanged; a future edge feed that

@@ -15,6 +15,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.banding import (
+    bucket_pairs,
+    drop_oversized_buckets,
+    hamming_pairs,
+    hash_bands,
+    oversized_buckets,
+)
 from ..multimodal.media import (
     as_media_table,
     extract_image_features,
@@ -1305,103 +1312,22 @@ def _mm15_dhash_table(spark, sf_dir):
 
 
 def _mm15_band_rows(dh):
-    """One row per (image, band): the 8-bit pigeonhole bucket keys —
-    the frame both the pair builder and the oversized-bucket audit
-    aggregate over, so cap and audit cannot diverge."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("dhash"), b * _IMG_BAND_BITS)
-                .bitwiseAND(F.lit((1 << _IMG_BAND_BITS) - 1))
-                .alias("bkey"),
-            )
-            for b in range(IMG_BANDS)
-        ]
-    )
-    return dh.select(
-        "media_id", "dhash", F.explode(band_structs).alias("b")
-    ).select("media_id", "dhash", "b.band", "b.bkey")
+    """One row per (image, band): the 8-bit pigeonhole bucket keys the
+    pair builder groups on and the capped spelling audits."""
+    return hash_bands(dh, "media_id", "dhash", IMG_BANDS, _IMG_BAND_BITS)
 
 
 def _mm15_pairs(dh, max_bucket: int | None = None):
-    """mm15's banded near-dup pairs from a DataFrame[media_id, dhash].
-
-    `max_bucket` threads the d02/fuzzy adversarial-skew guard through
-    the dhash bands (VERDICT r16 item 1 — the triad's one named scale
-    gap): a viral perceptual cluster — thousands of near-identical
-    thumbnails sharing a band key — concentrates O(bucket^2) pair
-    emission in ONE task at 100 TB. The cap pre-filters BEFORE the
-    collect_list (functions/banding.drop_oversized_buckets, the
-    `_fuzzy_blocked_pairs` r16 spelling): reducer-resident state is
-    <= max_bucket x 16 B by construction on any corpus. Composition
-    with the first-agreeing-band emission gives an exact recall
-    contract: a pair survives iff its LOWEST agreeing band's bucket
-    is under the cap — if that band is hot, the pair is never emitted
-    there (bucket dropped) and every higher agreeing band's emission
-    is rejected by the row-local lowest-band check, so the pair is
-    attributed to exactly one bucket and dropped WITH its hot
-    cluster. A cluster that hot is duplicate-shaped; route it to
-    d01/d05 exact grouping + survivorship (the fuzzy family's
-    documented recipe). Callers that cap MUST audit what was dropped
-    (banding.oversized_buckets over `_mm15_band_rows`) — silent
-    truncation reads as full coverage. Default None preserves the
-    registered query's exact semantics (and its oracle).
-    """
-    banded = _mm15_band_rows(dh)
-    if max_bucket is not None:
-        from ..functions.banding import drop_oversized_buckets
-
-        banded = drop_oversized_buckets(
-            banded, ("band", "bkey"), max_bucket
-        )
-    buckets = (
-        banded.groupBy("band", "bkey")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("media_id", "dhash"))
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
-    pairs = buckets.select(
-        "band", F.posexplode("xs").alias("pos", "a"), "xs"
-    ).select(
-        "band",
-        "a",
-        F.explode(
-            F.slice(F.col("xs"), F.col("pos") + 2, F.size("xs"))
-        ).alias("b"),
-    )
-    # First-agreeing-band emission instead of a trailing .distinct()
-    # (r16 — the d06 rewrite, same rationale at 7 bands where a
-    # hamming-0 pair used to be emitted and deduped SEVEN times): the
-    # distinct's hash aggregate was keyed by PAIR — state
-    # proportional to the candidate-pair space. Both dhashes ride in
-    # the bucket, so keep a pair only in its lowest agreeing band — a
-    # row-local bitwise check; every qualifying pair appears exactly
-    # once by construction, no pair-keyed state, one less exchange
-    # (functions/banding.py — shared with d06).
-    from ..functions.banding import first_agreeing_band_only
-
-    ham = F.bit_count(F.col("a.dhash").bitwiseXOR(F.col("b.dhash")))
-    return (
-        pairs.filter(
-            first_agreeing_band_only(
-                F.col("band"),
-                F.col("a.dhash"),
-                F.col("b.dhash"),
-                IMG_BANDS,
-                _IMG_BAND_BITS,
-            )
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= IMG_HAM_K)
-    )
+    """mm15's banded near-dup pairs from a DataFrame[media_id, dhash],
+    via `banding.hamming_pairs` (its docstring states the recall
+    contract under `max_bucket`). A capped viral perceptual cluster —
+    thousands of near-identical thumbnails sharing a band key — is
+    duplicate-shaped; route it to d01/d05 exact grouping +
+    survivorship."""
+    return hamming_pairs(
+        dh, "media_id", "dhash", IMG_BANDS, _IMG_BAND_BITS, IMG_HAM_K,
+        max_bucket,
+    ).withColumnsRenamed({"a": "id_a", "b": "id_b"})
 
 
 def mm15_image_dhash_neardup_capped(spark, sf_dir, max_bucket: int):
@@ -1411,15 +1337,13 @@ def mm15_image_dhash_neardup_capped(spark, sf_dir, max_bucket: int):
     silent (the j11/j13 capped-twin contract). Identical to the
     registered mm15 wherever no band bucket exceeds `max_bucket`;
     where one does, the dropped pairs are exactly those whose lowest
-    agreeing band is the hot bucket (see `_mm15_pairs`)."""
-    from ..functions.banding import oversized_buckets
-
-    # NOT checkpointed (r17, A/B-measured): although the capped
-    # spelling references the dhash table three times (cap pre-pass,
-    # bucket build, audit), a localCheckpoint here measured as a
-    # wash at sf0.1 (1.64 s vs 1.67 s warm under identical ambient) —
-    # the three consumers share the Arrow decode via exchange reuse
-    # well enough that the eager checkpoint job only moves the cost.
+    agreeing band is the hot bucket (see `banding.hamming_pairs`)."""
+    # NOT checkpointed (A/B-measured): although the capped spelling
+    # references the dhash table three times (cap pre-pass, bucket
+    # build, audit), a localCheckpoint here measured as a wash at
+    # sf0.1 (1.64 s vs 1.67 s warm under identical ambient) — the
+    # three consumers share the Arrow decode via exchange reuse well
+    # enough that the eager checkpoint job only moves the cost.
     dh = _mm15_dhash_table(spark, sf_dir)
     matches = _mm15_pairs(dh, max_bucket=max_bucket)
     audit = oversized_buckets(
@@ -1474,8 +1398,8 @@ MM15_MAX_BUCKET = 16   # gate-tuned to bite on the real bucket mix:
     """,
     note="MM15b: the PRODUCTION spelling of mm15 — "
     f"mm15_image_dhash_neardup_capped(max_bucket={MM15_MAX_BUCKET}) "
-    "executed and gate-verified (VERDICT r16 item 1, the "
-    "j11b/j13b/v03b capped-twin precedent), match + oversized-bucket "
+    "executed and gate-verified (the j11b/j13b/v03b capped-twin "
+    "precedent), match + oversized-bucket "
     "facets in one cell-for-cell-oracled output so the cap's "
     "truncation is never silent. The cap BITES PARTIALLY on the real "
     "bucket mix (sf0.01: the 7 flat-raster band buckets — all-zero "
@@ -1628,54 +1552,36 @@ def _mm16_hash_table(spark, sf_dir):
 
 def _mm16_pairs(hs, max_bucket: int | None = None):
     """mm16's containment near-dup pairs from a
-    DataFrame[media_id, fhash] of distinct non-blank frame hashes.
+    DataFrame[media_id, fhash] of distinct non-blank frame hashes,
+    via `banding.bucket_pairs` on the frame hash.
 
-    `max_bucket` caps the frame-hash buckets (VERDICT r16 item 1): a
-    VIRAL frame — an intro card, a watermark frame, a platform logo
-    shared by millions of videos — concentrates O(bucket^2) pair
-    emission in ONE task. The cap drops hot hashes BEFORE the
-    collect_list (banding.drop_oversized_buckets, count pre-pass +
-    broadcast left_anti), and — deliberately — before the per-video
-    size counts too: capped semantics are STOP-FRAME REMOVAL, the
-    exact analogue of dropping stopwords before Jaccard (n17's
-    documented recipe) and of production video dedup discarding black
-    frames/intro cards. The capped result equals the uncapped query
-    run on the corpus with hot hashes deleted: containment is
-    computed over INFORMATIVE frames only, numerator and denominator
-    consistently. (Consequence, stated because it matters: this is
-    not a pure subset of the uncapped output — a pair padded with
+    `max_bucket` caps the frame-hash buckets: a VIRAL frame — an
+    intro card, a watermark frame, a platform logo shared by millions
+    of videos — concentrates O(bucket^2) pair emission in ONE task.
+    The cap drops hot hashes before the per-video size counts too:
+    capped semantics are STOP-FRAME REMOVAL, the exact analogue of
+    dropping stopwords before Jaccard (n17's documented recipe) and of
+    production video dedup discarding black frames/intro cards. The
+    capped result equals the uncapped query run on the corpus with hot
+    hashes deleted: containment is computed over INFORMATIVE frames
+    only, numerator and denominator consistently. (Consequence: this
+    is not a pure subset of the uncapped output — a pair padded with
     viral frames can cross the threshold once those frames stop
-    diluting its denominator, which is the IDF-correct judgment: the
-    pair genuinely shares most of its distinctive content.) Callers
-    that cap MUST audit the dropped hashes
-    (banding.oversized_buckets — bucket_size = how many videos carry
-    the viral frame). Default None preserves the registered query's
-    exact semantics (and its oracle).
+    diluting its denominator, which is the IDF-correct judgment.)
+    Audit a cap with `banding.oversized_buckets(hs, ("fhash",), cap)`
+    — bucket_size = how many videos carry the viral frame.
     """
     if max_bucket is not None:
-        from ..functions.banding import drop_oversized_buckets
-
         hs = drop_oversized_buckets(hs, ("fhash",), max_bucket)
     # one evaluation of the hash pipeline serves buckets AND sizes
     hs = hs.localCheckpoint(eager=False)
     sizes = hs.groupBy("media_id").agg(
         F.count(F.lit(1)).alias("n_hashes")
     )
-    buckets = (
-        hs.groupBy("fhash")
-        .agg(F.sort_array(F.collect_list("media_id")).alias("xs"))
-        .filter(F.size("xs") > 1)
-    )
-    pairs = buckets.select(
-        F.posexplode("xs").alias("pos", "id_a"), "xs"
-    ).select(
-        "id_a",
-        F.explode(
-            F.slice(F.col("xs"), F.col("pos") + 2, F.size("xs"))
-        ).alias("id_b"),
-    )
-    shared = pairs.groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).alias("n_shared")
+    shared = (
+        bucket_pairs(hs, ("fhash",), "media_id")
+        .groupBy(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
     )
     sa = sizes.select(
         F.col("media_id").alias("id_a"), F.col("n_hashes").alias("na")
@@ -1700,8 +1606,6 @@ def mm16_video_frame_neardup_capped(spark, sf_dir, max_bucket: int):
     number of videos carrying each viral frame. Semantics are
     stop-frame removal (see `_mm16_pairs`); identical to the
     registered mm16 wherever no frame hash exceeds `max_bucket`."""
-    from ..functions.banding import oversized_buckets
-
     hs = _mm16_hash_table(spark, sf_dir)
     matches = _mm16_pairs(hs, max_bucket=max_bucket)
     audit = oversized_buckets(hs, ("fhash",), max_bucket)
@@ -1807,8 +1711,6 @@ def mm17_audio_fingerprint_neardup_capped(
     number of clips peaking in each uninformative bin. Capped output
     is a strict subset of uncapped (see `_mm17_pairs`); identical to
     the registered mm17 wherever no bin exceeds `max_bucket`."""
-    from ..functions.banding import oversized_buckets
-
     peaks = _mm17_peak_table(spark, sf_dir)
     matches = _mm17_pairs(peaks, max_bucket=max_bucket)
     audit = oversized_buckets(peaks, ("bin",), max_bucket)
@@ -1817,44 +1719,26 @@ def mm17_audio_fingerprint_neardup_capped(
 
 def _mm17_pairs(peaks, max_bucket: int | None = None):
     """mm17's shared-peak near-dup pairs from a
-    DataFrame[media_id, bin] of per-clip spectral peak bins.
+    DataFrame[media_id, bin] of per-clip spectral peak bins, via
+    `banding.bucket_pairs` on the bin.
 
-    `max_bucket` caps the frequency-bin buckets (VERDICT r16 item 1):
-    a HOT bin — mains hum, a codec artifact tone, a jingle every clip
-    in a catalog carries — concentrates O(bucket^2) pair emission in
-    ONE task (mm17's 100x density probe measured 329x wall on
-    exactly this quadratic path). The cap drops hot bins BEFORE the
-    collect_list (banding.drop_oversized_buckets); a bin that common
-    carries no discriminative signal — the Shazam-family systems
-    whose shape mm17 takes do the same thing by inverted-index
-    pruning of overfull posting lists. Because the match rule is an
+    `max_bucket` caps the frequency-bin buckets: a HOT bin — mains
+    hum, a codec artifact tone, a jingle every clip in a catalog
+    carries — concentrates O(bucket^2) pair emission in ONE task
+    (mm17's 100x density probe measured 329x wall on exactly this
+    quadratic path). A bin that common carries no discriminative
+    signal — the Shazam-family systems whose shape mm17 takes prune
+    overfull posting lists the same way. Because the match rule is an
     absolute count (n_shared >= threshold over shared bins), capped
-    output is a strict SUBSET of uncapped: dropping a bin only
-    lowers n_shared — a pair is lost iff fewer than the threshold of
-    its shared bins are informative. Callers that cap MUST audit the
-    dropped bins (banding.oversized_buckets — bucket_size = how many
-    clips peak there). Default None preserves the registered query's
-    exact semantics (and its oracle).
+    output is a strict SUBSET of uncapped: dropping a bin only lowers
+    n_shared — a pair is lost iff fewer than the threshold of its
+    shared bins are informative. Audit a cap with
+    `banding.oversized_buckets(peaks, ("bin",), cap)` — bucket_size =
+    how many clips peak there.
     """
-    if max_bucket is not None:
-        from ..functions.banding import drop_oversized_buckets
-
-        peaks = drop_oversized_buckets(peaks, ("bin",), max_bucket)
-    buckets = (
-        peaks.groupBy("bin")
-        .agg(F.sort_array(F.collect_list("media_id")).alias("xs"))
-        .filter(F.size("xs") > 1)
-    )
-    pairs = buckets.select(
-        F.posexplode("xs").alias("pos", "id_a"), "xs"
-    ).select(
-        "id_a",
-        F.explode(
-            F.slice(F.col("xs"), F.col("pos") + 2, F.size("xs"))
-        ).alias("id_b"),
-    )
     return (
-        pairs.groupBy("id_a", "id_b")
+        bucket_pairs(peaks, ("bin",), "media_id", max_bucket)
+        .groupBy(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= MM17_SHARED_MIN)
     )

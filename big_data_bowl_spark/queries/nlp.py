@@ -26,6 +26,7 @@ import re
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.banding import bucket_pairs, hamming_pairs
 from ..functions.text import (  # noqa: F401
     shingles_from_tokens,
     tokenize,
@@ -418,104 +419,37 @@ def d02_dedup_minhash_lsh(spark: SparkSession, sf_dir: str):
 
 
 def _pairs_from_bands(bands, max_bucket: int | None = None):
-    """(doc_id, band, bkey) rows -> distinct candidate (doc_a, doc_b).
+    """(doc_id, band, bkey) rows -> distinct candidate (doc_a, doc_b),
+    from `banding.bucket_pairs` on the band key (its docstring states
+    the emission and `max_bucket` cap policy; audit a cap with
+    `banding.oversized_buckets(bands, ("band", "bkey"), cap)`).
 
-    Pair generation is a groupBy on the band key, NOT a self-join:
-    Spark plans a self-join of this subtree as TWO full evaluations
-    of the shingle->md5->minhash pipeline (no ReusedExchange, the
-    sides' exchanges don't canonicalize equal), doubling the only
-    expensive part. Grouping shuffles the banded corpus ONCE —
-    (band, bkey, doc_id) rows only — and emits i<j pairs
-    bucket-locally from the sorted id array. Work per bucket is the
-    same O(bucket^2) bound the join form had; a degenerate hot
-    bucket is equally degenerate under both forms.
+    The trailing `.distinct()` is KEPT, deliberately: a pair agreeing
+    on several bands is emitted once per band, and the first-agreeing-
+    band emission d06/mm15 use instead would require every member to
+    CARRY its earlier bands' md5 keys ((LSH_BANDS-1) x ~40 B per
+    banded row — a 15x payload on the collect path) because, unlike
+    d06/mm15, the band keys are not recomputable from what rides in
+    the bucket. The distinct's state is keyed by OUTPUT pair (not an
+    amplified intermediate), lives in a spillable shuffle aggregation
+    (never a single task's resident array), and the duplication it
+    removes is bounded by LSH_BANDS (measured 1.91x raw emissions over
+    distinct pairs at sf0.1). Measured at the 100x bucket-count probe:
+    wall 1.48x, plan stable 8/8 exchanges (SCALE.md).
 
-    `max_bucket` is the adversarial-skew guard (VERDICT r9 item 5):
-    a corpus with thousands of byte-identical documents puts them ALL
-    in one bucket per band, and O(bucket^2) pair emission on that
-    bucket is the job-killer at scale — C(100k, 2) = 5e9 pairs from
-    ONE group. Capping drops buckets larger than `max_bucket` from
-    pair generation (the standard LSH production guard: a bucket that
-    hot is a duplicate CLUSTER, better handled by d01's exact
-    hash-group than by pairwise verification). Callers that cap
-    should audit what was dropped via `oversized_buckets` — silent
-    truncation reads as full coverage. Default None preserves exact
-    d02 semantics (and its oracle).
-
-    The trailing `.distinct()` is KEPT, deliberately (r16 — the
-    bucket-pair sweep that removed d06/mm15's pair-keyed distincts
-    adjudicated this one the other way): here the bucket lists are
-    already id-only, and first-agreeing-band emission would require
-    every member to CARRY its earlier bands' md5 keys
-    ((LSH_BANDS-1) x ~40 B per banded row — a 15x payload on the
-    collect path) because, unlike d06/mm15, the band keys are not
-    recomputable from what rides in the bucket. The distinct's state
-    is keyed by OUTPUT pair (not an amplified intermediate), lives in
-    a spillable shuffle aggregation (never a single task's resident
-    array), and the duplication it removes is bounded by LSH_BANDS
-    (measured 1.91x raw emissions over distinct pairs at sf0.1).
-    Measured at the 100x bucket-count probe: wall 1.48x, plan stable
-    8/8 exchanges (SCALE.md r16).
+    The bucket shuffle is NOT pinned against AQE coalescing (the
+    `_fuzzy_blocked_pairs` pin, A/B-measured here): d02's own wall
+    improved (1.50 -> 1.27 s warm) but every chain consumer regressed
+    (n24 1.25 -> 1.61, d11 1.99 -> 2.36, e04 2.25 -> 2.60 — the tiny
+    pair output then rides near-empty partitions through each
+    consumer's further stages, paying task launch per stage that
+    AQE's collapse avoided). At scale the banded table is large in
+    bytes, so AQE sizes this exchange correctly on its own.
     """
-    if max_bucket is not None:
-        if max_bucket < 2:
-            raise ValueError(
-                f"max_bucket must be >= 2, got {max_bucket} — a cap "
-                "below 2 drops every pair-generating bucket"
-            )
-        # pre-filter BEFORE the collect_list (r16 review finding —
-        # the same fix _fuzzy_blocked_pairs and _srp_pairs carry):
-        # the old post-collect F.size filter still materialized every
-        # oversized bucket's full id array in reducer state before
-        # discarding it. The count pre-pass IS the audit's own
-        # aggregation (oversized_buckets), so cap and audit cannot
-        # diverge; the hot list is bounded by construction and
-        # broadcasts. (bkey is an md5 digest — never NULL — so a
-        # plain left_anti is exact here.)
-        hot = oversized_buckets(bands, max_bucket).select("band", "bkey")
-        bands = bands.join(F.broadcast(hot), ["band", "bkey"], "left_anti")
-    # NOT pinned against AQE coalescing (r17, measured): the
-    # _fuzzy_blocked_pairs generator pins its bucket shuffle to the
-    # session shuffle-partition count because its post-exchange
-    # quadratic stage (135k+ levenshtein pairs at sf0.1) serializes
-    # under byte-targeted coalescing (j11 2.99 s -> 0.55 s from that
-    # pin). The SAME pin was A/B-measured here and REJECTED: d02's
-    # own wall improved (1.50 -> 1.27 s warm) but every chain
-    # consumer regressed (n24 1.25 -> 1.61, d11 1.99 -> 2.36, e04
-    # 2.25 -> 2.60 — the tiny pair output then rides 32 near-empty
-    # partitions through each consumer's further stages, paying
-    # task-launch overhead per stage that AQE's collapse avoided).
-    # At scale the banded table is large in bytes, so AQE sizes this
-    # exchange correctly on its own.
-    buckets = (
-        bands.groupBy("band", "bkey")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
     return (
-        buckets.select(F.posexplode("ids").alias("pos", "doc_a"), "ids")
-        .select(
-            "doc_a",
-            F.explode(
-                F.slice(
-                    F.col("ids"), F.col("pos") + 2, F.size("ids")
-                )
-            ).alias("doc_b"),
-        )
+        bucket_pairs(bands, ("band", "bkey"), "doc_id", max_bucket)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
-    )
-
-
-def oversized_buckets(bands, max_bucket: int):
-    """(band, bkey, bucket_size) for buckets the `max_bucket` cap
-    would drop — the audit companion of `_pairs_from_bands(...,
-    max_bucket=...)`: one extra aggregation over the SAME banded
-    rows, output bounded by the number of hot buckets (a handful on
-    real corpora, by construction of the cap)."""
-    return (
-        bands.groupBy("band", "bkey")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
     )
 
 
@@ -774,75 +708,10 @@ _D06_ORACLE = (
     "plan is unchanged, buckets get sparser.",
 )
 def d06_simhash_neardup(spark: SparkSession, sf_dir: str):
-    sim = d04_simhash(spark, sf_dir)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("simhash"), b * _BAND_BITS)
-                .bitwiseAND(F.lit((1 << _BAND_BITS) - 1))
-                .alias("bkey"),
-            )
-            for b in range(SIM_BANDS)
-        ]
-    )
-    banded = sim.select(
-        "doc_id", "simhash", F.explode(band_structs).alias("b")
-    ).select("doc_id", "simhash", "b.band", "b.bkey")
-    buckets = (
-        banded.groupBy("band", "bkey")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "simhash"))
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
-    pairs = buckets.select(
-        "band", F.posexplode("xs").alias("pos", "a"), "xs"
-    ).select(
-        "band",
-        "a",
-        F.explode(
-            F.slice(F.col("xs"), F.col("pos") + 2, F.size("xs"))
-        ).alias("b"),
-    )
-    # First-agreeing-band emission instead of a trailing .distinct()
-    # (r16, VERDICT r15 item 1 generalized): a pair within hamming 1
-    # can agree on BOTH bands, and the old distinct deduplicated
-    # those re-emissions with a hash aggregate keyed by PAIR — state
-    # proportional to the candidate-pair space, the exact shape the
-    # r15 components OOM taught us to hunt (measured here: 3.5 GB
-    # heap / 8 exchanges at the 100x bucket-count probe, from a
-    # 95M-pair exchange + pair-keyed dedup state). Both members'
-    # FULL simhashes already ride in the bucket, so each pair is
-    # emitted only from its lowest agreeing band — a row-local
-    # bitwise check, no shuffle, no pair-keyed state; every
-    # qualifying pair appears exactly once by construction
-    # (functions/banding.py — shared with mm15). Same probe after:
-    # 2.0 GB heap / 6 exchanges / wall 10.3x -> 7.2x (SCALE.md r16).
-    from ..functions.banding import first_agreeing_band_only
-
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        pairs.filter(
-            first_agreeing_band_only(
-                F.col("band"),
-                F.col("a.simhash"),
-                F.col("b.simhash"),
-                SIM_BANDS,
-                _BAND_BITS,
-            )
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= HAM_K)
-    )
+    return hamming_pairs(
+        d04_simhash(spark, sf_dir), "doc_id", "simhash",
+        SIM_BANDS, _BAND_BITS, HAM_K,
+    ).withColumnsRenamed({"a": "doc_a", "b": "doc_b"})
 
 
 # ---------------------------------------------------------------------------

@@ -27,6 +27,11 @@ import hashlib
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.banding import (
+    bucket_pairs,
+    drop_oversized_buckets,
+    oversized_buckets,
+)
 from .base import register, t
 
 EMBED_DIM = 64
@@ -202,12 +207,8 @@ def v02_srp_lsh_buckets(spark: SparkSession, sf_dir: str):
     "keeps the pair space O(sum bucket^2); "
     "exact cosine re-scoring inside each bucket",
 )
-def v03_bucketed_neardup(
-    spark: SparkSession, sf_dir: str, max_bucket: int | None = None
-):
-    return _srp_pairs(
-        _srp_withb(t(spark, sf_dir, "embeddings")), max_bucket
-    )
+def v03_bucketed_neardup(spark: SparkSession, sf_dir: str):
+    return _srp_pairs(_srp_withb(t(spark, sf_dir, "embeddings")))
 
 
 def _srp_withb(e):
@@ -223,18 +224,21 @@ def _srp_withb(e):
 
 def _srp_pairs(withb, max_bucket: int | None = None):
     """Bucket-local near-dup pairs from the (vec_id, v, bucket, nrm)
-    rows. ONLY IDS ride the quadratic path (r15 — found by the e05
-    100x probe OOMing an 8 GB heap): the bucket groupBy collects
-    vec_ids alone (6 KB of state for an 800-member bucket, not
-    800 x 64 doubles), i<j id pairs explode bucket-locally (the
-    per-row remainder slice copies 8-byte longs, not 520-byte
-    structs — the struct spelling churned ~42 GB of transient copies
+    rows, via `banding.bucket_pairs` on the SRP bucket (its docstring
+    states the emission and `max_bucket` cap policy; audit a cap with
+    `banding.oversized_buckets(withb, ("bucket",), cap)` — v03b is the
+    registered capped spelling).
+
+    ONLY IDS ride the quadratic path (found by the e05 100x probe
+    OOMing an 8 GB heap): the bucket groupBy collects vec_ids alone
+    (6 KB of state for an 800-member bucket, not 800 x 64 doubles),
+    the per-row remainder slice copies 8-byte longs, not 520-byte
+    structs (the struct spelling churned ~42 GB of transient copies
     at 100x), and the vectors+norms attach via two shuffled-hash
     joins for scoring (exchange weights documented at the hint
-    below). Pair generation is still a groupBy, not a self-join of
-    the bucketed subtree, so the SRP projection pipeline evaluates
-    once for bucketing; the two scoring joins re-scan only the
-    (vec_id, v, nrm) projection — linear, scan-side, no SRP work.
+    below). The SRP projection pipeline evaluates once for bucketing;
+    the two scoring joins re-scan only the (vec_id, v, nrm)
+    projection — linear, scan-side, no SRP work.
 
     The pair dot is the COMPILED column-column chain
     (sqltext.sql_dot_cols — bit-identical fold sequence, whole-stage
@@ -242,46 +246,13 @@ def _srp_pairs(withb, max_bucket: int | None = None):
     dispatch on every one of O(sum bucket^2) pairs — measured 367 s
     for 10.1M pairs at 100x vs 23 s compiled. Norms stay the linear
     scan-side fold. A vector lands in exactly one bucket, so pairs
-    are already distinct.
-
-    `max_bucket` is the adversarial-skew guard (VERDICT r14 item 3 —
-    the d02 `_pairs_from_bands` treatment for the VECTOR side): a
-    near-collinear embedding corpus — a realistic regime after a bad
-    encoder run or a template-heavy crawl — puts a huge fraction of
-    vectors in ONE SRP bucket, whose O(bucket^2) pair explosion is
-    the job-killer (a bucket that hot is a duplicate CLUSTER, better
-    handled by exact dedup than pairwise verification). The size
-    pre-pass aggregates only bucket ids; the hot-bucket list is
-    bounded by construction (count > max_bucket can match at most
-    corpus/max_bucket buckets) and broadcasts into a left_anti
-    filter. Callers that cap should audit what was dropped via
-    `oversized_srp_buckets` — silent truncation reads as full
-    coverage. Default None preserves exact v03 semantics (and its
-    oracle); e05's dedup chain inherits the parameter through
-    v03_bucketed_neardup."""
+    are already distinct."""
+    # capped here, not inside bucket_pairs, so the scoring sides below
+    # read the same capped rows as the pairs (one shared subtree)
     if max_bucket is not None:
-        if max_bucket < 2:
-            raise ValueError(
-                f"max_bucket must be >= 2, got {max_bucket} — a cap "
-                "below 2 drops every pair-generating bucket"
-            )
-        # the filter IS the audit's aggregation (one definition of
-        # "oversized" — a semantic change to the audit and the cap
-        # cannot diverge)
-        hot = oversized_srp_buckets(withb, max_bucket).select("bucket")
-        withb = withb.join(F.broadcast(hot), "bucket", "left_anti")
-    buckets = (
-        withb.groupBy("bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("xs"))
-        .filter(F.size("xs") > 1)
-    )
-    pairs = buckets.select(
-        F.posexplode("xs").alias("pos", "vec_a"), "xs"
-    ).select(
-        "vec_a",
-        F.explode(
-            F.slice(F.col("xs"), F.col("pos") + 2, F.size("xs"))
-        ).alias("vec_b"),
+        withb = drop_oversized_buckets(withb, ("bucket",), max_bucket)
+    pairs = bucket_pairs(withb, ("bucket",), "vec_id").select(
+        F.col("a").alias("vec_a"), F.col("b").alias("vec_b")
     )
     side_a = withb.select(
         F.col("vec_id").alias("vec_a"),
@@ -334,19 +305,6 @@ def _srp_pairs(withb, max_bucket: int | None = None):
     )
 
 
-def oversized_srp_buckets(withb, max_bucket: int):
-    """(bucket, bucket_size) for buckets the `max_bucket` cap would
-    drop — the audit companion of `_srp_pairs(..., max_bucket=...)`
-    (the d02 `oversized_buckets` pattern): one narrow aggregation
-    over the SAME bucketed rows, output bounded by the number of hot
-    buckets (a handful by construction of the cap)."""
-    return (
-        withb.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-    )
-
-
 # Gate-tuned so the cap BITES PARTIALLY on the real SRP bucket mix —
 # the j13b precedent. Measured at registration: sf0.01 buckets are
 # sizes 1-7 (the 21 buckets of 5-7 audit out, sizes 2-4 keep
@@ -389,18 +347,18 @@ SRP_MAX_BUCKET = 4
     """,
     note="V3b: the PRODUCTION spelling of v03 — "
     f"_srp_pairs(max_bucket={SRP_MAX_BUCKET}) executed and "
-    "gate-verified (VERDICT r15 item 2, the j11b/j13b "
-    "registered-twin pattern): near-dup match facet + "
-    "oversized-SRP-bucket audit facet in ONE cell-for-cell-oracled "
-    "output, so the truncation the adversarial-skew cap performs is "
-    "never silent in the gate either. The cap bites partially on "
-    "the real bucket mix at both gate SFs (hot buckets audit out as "
-    "duplicate CLUSTERS for exact dedup to handle, normal buckets "
-    "still pair) — the exact recall contract of the capped path, "
-    "previously pinned only by pytest (tests/test_operators.py "
-    "test_srp_bucket_cap_under_degenerate_collinear_corpus). e05's dedup "
-    "chain inherits max_bucket through v03_bucketed_neardup; this "
-    "row is the driver-visible twin of that production knob.",
+    "gate-verified like the j11b/j13b capped twins: near-dup match "
+    "facet + oversized-SRP-bucket audit facet in ONE "
+    "cell-for-cell-oracled output, so the truncation the "
+    "adversarial-skew cap performs is never silent in the gate "
+    "either. The cap bites partially on the real bucket mix at both "
+    "gate SFs (hot buckets audit out as duplicate CLUSTERS for exact "
+    "dedup to handle, normal buckets still pair) — the exact recall "
+    "contract of the capped path, also pinned by "
+    "tests/test_operators.py "
+    "test_srp_bucket_cap_under_degenerate_collinear_corpus. An e05 "
+    "index refresh on an untrusted corpus swaps v03 for this capped "
+    "spelling.",
 )
 def v03b_bucketed_cosine_capped_audit(spark: SparkSession, sf_dir: str):
     withb = _srp_withb(t(spark, sf_dir, "embeddings"))
@@ -413,7 +371,7 @@ def v03b_bucketed_cosine_capped_audit(spark: SparkSession, sf_dir: str):
         F.col("cosine"),
         nb.alias("bucket_size"),
     )
-    audit = oversized_srp_buckets(withb, SRP_MAX_BUCKET).select(
+    audit = oversized_buckets(withb, ("bucket",), SRP_MAX_BUCKET).select(
         F.lit("oversized_bucket").alias("facet"),
         F.col("bucket").cast("bigint").alias("bkey"),
         nb.alias("vec_a"),

@@ -2735,8 +2735,9 @@ def test_decode_dispatch_fails_closed_all_formats():
     except ValueError as e:
         assert e.__cause__ is not None or "PNG" in str(e)
 
-    # header dimensions that claim a multi-gigapixel raster must fail
-    # with ValueError before the decoder allocates it; decoded in a
+    # header dimensions that claim a multi-gigapixel raster, and a PNG
+    # whose IDAT inflates far past its IHDR size, must fail with
+    # ValueError before the decoder allocates the raster; decoded in a
     # child process whose address space is capped at 4e9 bytes, so an
     # unchecked allocation surfaces as MemoryError instead of paging
     import os
@@ -2769,6 +2770,32 @@ def test_decode_dispatch_fails_closed_all_formats():
         struct.pack_into("<HH", mut, 6, w, h)
         return bytes(mut)
 
+    def png_bomb():
+        # a 1x1 8-bit gray IHDR (2 inflated bytes) over an IDAT that
+        # inflates to 5 GiB of zeros: after a full flush the deflate
+        # state resets, so one 16 MiB zero block compresses to the
+        # same bytes every time and repeats (stream left unterminated)
+        import zlib
+
+        z = zlib.compressobj()
+        zeros = bytes(1 << 24)
+        head = z.compress(zeros) + z.flush(zlib.Z_FULL_FLUSH)
+        block = z.compress(zeros) + z.flush(zlib.Z_FULL_FLUSH)
+        idat = head + block * 319
+
+        def chunk(ctype, data):
+            crc = zlib.crc32(ctype + data)
+            return struct.pack(">I", len(data)) + ctype + data + struct.pack(
+                ">I", crc
+            )
+
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
+            + chunk(b"IDAT", idat)
+            + chunk(b"IEND", b"")
+        )
+
     baseline = encode_jpeg(img, quant=[1] * 64)
     prog = encode_jpeg(img, quant=[1] * 64, progressive=True)
     oversized = [
@@ -2778,6 +2805,7 @@ def test_decode_dispatch_fails_closed_all_formats():
         ("jpeg", jpeg_sof(prog, 0xFFFF, 0xFFFF)),
         ("jpeg", jpeg_sof(prog, 0x8000, 0x8000)),
         ("gif", gif_screen(0xFFFF, 0xFFFF)),
+        ("png", png_bomb()),
     ]
     wide_only = [("gif", gif_screen(0xFFFF, 9))]  # 0.6 Mpx: decodes
     child = (

@@ -2595,7 +2595,7 @@ def test_fuzzy_bucket_cap_under_adversarial_skew(spark, tmp_path):
     (j11) — concentrates O(bucket^2) pair emission in one task; the
     max_bucket cap threaded from the d02 family must drop exactly
     those buckets while keeping ordinary fuzzy pairs, and the
-    fuzzy_oversized_buckets audit must name what was dropped."""
+    oversized_buckets audit must name what was dropped."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
@@ -2658,10 +2658,10 @@ def test_lsh_bucket_cap_under_adversarial_skew(spark):
     and the oversized_buckets audit must name what was dropped."""
     from pyspark.sql import functions as F
 
+    from big_data_bowl_spark.functions.banding import oversized_buckets
     from big_data_bowl_spark.queries.nlp import (
         _minhash_bands,
         _pairs_from_bands,
-        oversized_buckets,
     )
 
     hot_text = "the quick brown fox jumps over the lazy dog again " * 4
@@ -2684,7 +2684,7 @@ def test_lsh_bucket_cap_under_adversarial_skew(spark):
         assert (1000, 1001) in capped
         assert not any(a < 1000 and b < 1000 for a, b in capped)
 
-        audit = oversized_buckets(bands, 50).collect()
+        audit = oversized_buckets(bands, ("band", "bkey"), 50).collect()
         assert audit and all(r.bucket_size == 200 for r in audit)
 
         import pytest
@@ -2705,10 +2705,8 @@ def test_fuzzy_null_blocking_keys_never_pair_and_never_bypass_cap(
     NULL keys), which would re-materialize the unbounded reducer
     array the cap exists to prevent. Plant an oversized NULL-key
     bucket next to a normal pair and check both spellings."""
-    from big_data_bowl_spark.queries.extras import (
-        _fuzzy_blocked_pairs,
-        fuzzy_oversized_buckets,
-    )
+    from big_data_bowl_spark.functions.banding import oversized_buckets
+    from big_data_bowl_spark.queries.extras import _fuzzy_blocked_pairs
     from pyspark.sql import functions as F
 
     # 60 rows whose blocking key is NULL + one genuine near-pair
@@ -2732,7 +2730,7 @@ def test_fuzzy_null_blocking_keys_never_pair_and_never_bypass_cap(
         for r in _fuzzy_blocked_pairs(keyed, "blk", max_bucket=50).collect()
     }
     assert got_capped == {(100, 101)}
-    audit = fuzzy_oversized_buckets(keyed, "blk", 50).collect()
+    audit = oversized_buckets(keyed, ("blk",), 50).collect()
     assert audit == []
 
 
@@ -2744,18 +2742,17 @@ def test_srp_bucket_cap_under_degenerate_collinear_corpus(spark):
     doubles on a single reducer and then explode O(bucket^2) pairs.
     The max_bucket cap must drop exactly that bucket — BEFORE the
     vector-carrying collect — while keeping ordinary near-dup pairs
-    in cold buckets, and oversized_srp_buckets must name what was
-    dropped. e05's dedup chain inherits the parameter through
-    v03_bucketed_neardup."""
+    in cold buckets, and oversized_buckets must name what was
+    dropped."""
     import random
 
     import pytest
 
+    from big_data_bowl_spark.functions.banding import oversized_buckets
     from big_data_bowl_spark.queries.vectors import (
         EMBED_DIM,
         _srp_pairs,
         _srp_withb,
-        oversized_srp_buckets,
     )
 
     rng = random.Random(7)
@@ -2799,7 +2796,7 @@ def test_srp_bucket_cap_under_degenerate_collinear_corpus(spark):
         assert (1000, 1001) in capped  # cold-bucket pair survives
         assert not any(a < 1000 and b < 1000 for a, b in capped)
 
-        audit = oversized_srp_buckets(withb, 50).collect()
+        audit = oversized_buckets(withb, ("bucket",), 50).collect()
         assert [(r.bucket, r.bucket_size) for r in audit] == [
             (hot_bucket, 120)
         ]
@@ -2808,6 +2805,29 @@ def test_srp_bucket_cap_under_degenerate_collinear_corpus(spark):
             _srp_pairs(withb, max_bucket=1)
     finally:
         withb.unpersist()
+
+
+def test_bucket_pairs_emission_policy(spark):
+    """The bucket-pair operator's contract on a 3-member bucket, a
+    singleton and a NULL-key group: exactly the 3 sorted i<j pairs,
+    none from the NULL group (SQL equi-join rule), none from a bucket
+    over the cap, and a cap below 2 rejected up front."""
+    from big_data_bowl_spark.functions.banding import bucket_pairs
+
+    df = spark.createDataFrame(
+        [(7, "k"), (3, "k"), (5, "k"), (9, "solo"), (1, None), (2, None)],
+        "id long, key string",
+    )
+
+    def pairs(max_bucket=None):
+        out = bucket_pairs(df, ("key",), "id", max_bucket).collect()
+        return sorted((r.key, r.a, r.b) for r in out)
+
+    assert pairs() == [("k", 3, 5), ("k", 3, 7), ("k", 5, 7)]
+    assert pairs(max_bucket=3) == pairs()
+    assert pairs(max_bucket=2) == []
+    with pytest.raises(ValueError, match="max_bucket"):
+        bucket_pairs(df, ("key",), "id", max_bucket=1)
 
 
 def test_d12_incremental_union_equals_full_recompute(spark, sf_dir):
@@ -2905,6 +2925,7 @@ def test_fuzzy_capped_registered_facets(spark, sf_dir):
     bucket in the audit facet, and (c) satisfy the cap equivalence:
     capped matches == uncapped matches minus the pairs whose EVERY
     shared blocking key was audited out."""
+    from big_data_bowl_spark.functions.banding import oversized_buckets
     from big_data_bowl_spark.queries.extras import (
         FUZZY_MAX_BUCKET_J13,
         j13_fuzzy_match_deletion_blocking,
@@ -2912,7 +2933,6 @@ def test_fuzzy_capped_registered_facets(spark, sf_dir):
         j13b_fuzzy_capped_audit,
         j11b_fuzzy_capped_audit,
         FUZZY_MAX_BUCKET_J11,
-        fuzzy_oversized_buckets,
         _j11_blocking_table,
         _j13_key_table,
     )
@@ -2956,7 +2976,7 @@ def test_fuzzy_capped_registered_facets(spark, sf_dir):
         for a, b in dropped:
             assert keyed[a] & keyed[b] <= hot
 
-    # j11b at any sf: audit facet == fuzzy_oversized_buckets exactly
+    # j11b at any sf: audit facet == banding.oversized_buckets exactly
     out11 = j11b_fuzzy_capped_audit(spark, sf_dir).collect()
     audit11 = {
         (r.bkey, r.bucket_size)
@@ -2965,8 +2985,8 @@ def test_fuzzy_capped_registered_facets(spark, sf_dir):
     }
     want11 = {
         (r.blk, r.bucket_size)
-        for r in fuzzy_oversized_buckets(
-            _j11_blocking_table(spark, sf_dir), "blk", FUZZY_MAX_BUCKET_J11
+        for r in oversized_buckets(
+            _j11_blocking_table(spark, sf_dir), ("blk",), FUZZY_MAX_BUCKET_J11
         ).collect()
     }
     assert audit11 == want11 and want11

@@ -363,3 +363,43 @@ def test_absolute_imports_resolve():
                     if not _resolves(m)
                 ]
     assert not bad, bad
+
+
+def _is_pair_slice(node) -> bool:
+    """`F.slice(xs, F.col("pos") + 2, ...)`: the remainder slice that
+    emits every i<j pair of a posexploded bucket array."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "slice"
+        and len(node.args) >= 2
+    ):
+        return False
+    start = node.args[1]
+    return (
+        isinstance(start, ast.BinOp)
+        and isinstance(start.op, ast.Add)
+        and isinstance(start.right, ast.Constant)
+        and start.right.value == 2
+        and isinstance(start.left, ast.Call)
+        and isinstance(start.left.func, ast.Attribute)
+        and start.left.func.attr == "col"
+        and [ast.literal_eval(a) for a in start.left.args] == ["pos"]
+    )
+
+
+def test_bucket_pair_emission_lives_in_banding_only():
+    """Every near-dup query emits its bucket-local i<j pairs through
+    functions/banding.bucket_pairs, which owns the emission policy
+    (sorted items, NULL keys never pair, the max_bucket cap). A
+    hand-written copy of the emission idiom anywhere else fails
+    here."""
+    hits = [
+        f"{rel}:{node.lineno}"
+        for p, rel in _py_files()
+        for node in ast.walk(ast.parse(p.read_text()))
+        if _is_pair_slice(node)
+    ]
+    assert hits and all(
+        h.startswith("functions/banding.py:") for h in hits
+    ), hits

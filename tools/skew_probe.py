@@ -1,9 +1,10 @@
-"""Adversarial-skew probe for the perceptual triad's bucket caps
-(VERDICT r16 item 1).
+"""Adversarial-skew probe for the bucket-pair cap, run on mm15's
+image dhash bands.
 
-The claim under test: with `max_bucket` threaded through
-banding.drop_oversized_buckets, reducer-resident state on the
-bucket-pair path is bounded by max_bucket x payload ON ANY CORPUS —
+The claim under test: with `max_bucket` set on
+banding.bucket_pairs (here through mm15's banding.hamming_pairs),
+reducer-resident state on the bucket-pair path is bounded by
+max_bucket x payload ON ANY CORPUS —
 in particular, one PLANTED viral bucket (a hot frame hash / band key
 / frequency bin with N members) must not grow heap or wall as N
 grows, because the count pre-pass + broadcast left_anti drops the
