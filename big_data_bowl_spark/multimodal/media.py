@@ -2049,14 +2049,15 @@ def decode_payload(
         return _fail_closed(_decode_jpeg, payload, "jpeg")
     if fmt == "gif":
         # still image: the FIRST composited frame's BT.601 luma,
-        # color-resolved through the applicable table (r11 — a GIF in
-        # an image column decodes like any other still format;
-        # multi-frame pipelines use decode_gif_frames/_rgb directly)
+        # color-resolved through the applicable table (a GIF in an
+        # image column decodes like any other still format; only the
+        # first image is composited — multi-frame pipelines use
+        # decode_gif_frames/_rgb directly)
         def first_luma(b: bytes):
-            frames = decode_gif_frames_rgb(b)
-            if not frames:
+            first = next(_gif_rgb_composites(b), None)
+            if first is None:
                 raise ValueError("GIF carries no image")
-            rgb = frames[0].astype(np.float64)
+            rgb = first.astype(np.float64)
             luma = (
                 0.299 * rgb[..., 0]
                 + 0.587 * rgb[..., 1]
@@ -3593,8 +3594,14 @@ def encode_gif(
     return bytes(out)
 
 
-def _gif_lzw_decode(data: bytes, min_code_size: int) -> "list[int]":
-    """Inverse of _gif_lzw_encode over the de-blocked code stream."""
+def _gif_lzw_decode(
+    data: bytes, min_code_size: int, limit: int
+) -> "list[int]":
+    """Inverse of _gif_lzw_encode over the de-blocked code stream.
+    Stops once `limit` indices are out (the image's w*h): one code
+    can expand to 4096 indices, so an unbounded decode of a small
+    stream can exhaust memory. Indices past the limit are never
+    read, so the last code's excess is harmless."""
     clear = 1 << min_code_size
     eoi = clear + 1
     code_size = min_code_size + 1
@@ -3621,18 +3628,16 @@ def _gif_lzw_decode(data: bytes, min_code_size: int) -> "list[int]":
             continue
         if code == eoi:
             return out
-        if prev is None:
-            out.extend(table[code])
-            prev = code
-            continue
-        if code < next_code:
+        if prev is None or code < next_code:
             entry = table[code]
         elif code == next_code:  # KwKwK
             entry = table[prev] + table[prev][:1]
         else:
             raise ValueError("corrupt GIF LZW stream")
         out.extend(entry)
-        if next_code < 4096:
+        if len(out) >= limit:
+            return out
+        if prev is not None and next_code < 4096:
             table.append(table[prev] + entry[:1])
             next_code += 1
             if next_code == (1 << code_size) and code_size < 12:
@@ -3659,7 +3664,10 @@ def _parse_gif(payload: bytes):
     "transparent": index or None}. Graphic-control extensions are
     parsed (disposal method, transparency index — GIF89a §23, each
     applying to the NEXT image only); other extensions are skipped.
-    CRC-less format — structural errors raise ValueError."""
+    Each image composites onto its own copy of the logical screen, so
+    the screen times the image count must fit MAX_RASTER_PIXELS; the
+    check runs before each image decodes. CRC-less format — structural
+    errors raise ValueError."""
     import struct
 
     import numpy as np
@@ -3715,6 +3723,7 @@ def _parse_gif(payload: bytes):
             pos += 9
             if x0 + w > sw or y0 + h > sh or w == 0 or h == 0:
                 raise ValueError("GIF image rect outside logical screen")
+            _check_raster(sw, sh * (len(images) + 1), "GIF frames x screen")
             local = None
             if iflags & 0x80:  # local color table (r11: seam closed)
                 n_local = 2 << (iflags & 0x07)
@@ -3745,7 +3754,7 @@ def _parse_gif(payload: bytes):
                 data += payload[pos + 1 : pos + 1 + ln]
                 pos += 1 + ln
             pos += 1
-            idx = _gif_lzw_decode(bytes(data), min_code)
+            idx = _gif_lzw_decode(bytes(data), min_code, w * h)
             if len(idx) < w * h:
                 raise ValueError("GIF frame under-decoded")
             fr = np.array(idx[: w * h], dtype=np.uint8).reshape(h, w)
@@ -3821,6 +3830,12 @@ def decode_gif_frames_rgb(payload: bytes) -> "list[np.ndarray]":
     a stream has no defined colors. The color-true face of
     decode_gif_frames for perceptual pipelines (mm15's dHash luma,
     viz)."""
+    return list(_gif_rgb_composites(payload))
+
+
+def _gif_rgb_composites(payload: bytes):
+    """Yield decode_gif_frames_rgb's frames one at a time, so a caller
+    that needs only the first composites only the first image."""
     import numpy as np
 
     images, palette, (sw, sh, bg) = _parse_gif(payload)
@@ -3828,7 +3843,6 @@ def decode_gif_frames_rgb(payload: bytes) -> "list[np.ndarray]":
         palette[bg] if palette is not None else np.zeros(3, np.uint8)
     )
     canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).astype(np.uint8)
-    out = []
     for im in images:
         table = im["local"] if im["local"] is not None else palette
         if table is None:
@@ -3846,12 +3860,11 @@ def decode_gif_frames_rgb(payload: bytes) -> "list[np.ndarray]":
             region[m] = table[im["idx"][m]]
         else:
             region[...] = table[im["idx"]]
-        out.append(canvas.copy())
+        yield canvas.copy()
         if im["disposal"] == 2:
             canvas[y0 : y0 + h, x0 : x0 + w] = bg_rgb
         elif im["disposal"] == 3:
             canvas = before
-    return out
 
 
 def image_dhash(media: DataFrame) -> DataFrame:

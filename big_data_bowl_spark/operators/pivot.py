@@ -57,17 +57,15 @@ def pivot_wide_multi(
         }
     else:
         renames = {f"{cat}": f"{value_cols[0]}_{cat}" for cat in categories}
-    for old, new in renames.items():
-        wide = wide.withColumnRenamed(old, new)
+    wide = wide.withColumnsRenamed(renames)
     if fill_value is not None:
         # per-column coalesce rather than fillna: DataFrame.fillna
         # with a numeric silently SKIPS non-numeric columns, so a
         # string value column under agg='first' would keep its NULLs
-        # despite the documented values_fill parity (review r7). The
-        # cast alone is NOT a type check — casting 0 to a StringType
-        # column succeeds and fills '0' — so validate the fill's
-        # Python type against each column's family first and raise on
-        # mismatch (review r8).
+        # despite the reference's values_fill. The cast alone is NOT
+        # a type check — casting 0 to a StringType column succeeds
+        # and fills '0' — so validate the fill's Python type against
+        # each column's family first and raise on mismatch.
         from pyspark.sql.types import BooleanType, NumericType, StringType
 
         def _family(dt):
@@ -88,20 +86,21 @@ def pivot_wide_multi(
             if isinstance(fill_value, str)
             else type(fill_value).__name__
         )
+        schema = wide.schema
         for c in renames.values():
-            col_family = _family(wide.schema[c].dataType)
+            col_family = _family(schema[c].dataType)
             if col_family != fill_family:
                 raise TypeError(
                     f"pivot fill_value {fill_value!r} ({fill_family}) is "
                     f"incompatible with column {c!r} of type "
-                    f"{wide.schema[c].dataType.simpleString()}"
+                    f"{schema[c].dataType.simpleString()}"
                 )
-        for c in renames.values():
-            wide = wide.withColumn(
-                c,
-                F.coalesce(
-                    F.col(c),
-                    F.lit(fill_value).cast(wide.schema[c].dataType),
-                ),
-            )
+        wide = wide.withColumns(
+            {
+                c: F.coalesce(
+                    F.col(c), F.lit(fill_value).cast(schema[c].dataType)
+                )
+                for c in renames.values()
+            }
+        )
     return wide

@@ -23,6 +23,52 @@ def test_rf_accuracy_floor(spark, sf_dir):
     assert acc >= 0.9, f"separable label should score >=0.9, got {acc}"
 
 
+def test_train_eval_runs_one_task_per_core(spark):
+    """train_eval coalesces its input to the core count, so a training
+    table that arrives in 32 persisted partitions (as the season
+    feature table does, out of a 32-partition shuffle) trains and
+    scores with at most one task per core in every stage."""
+    from pyspark.sql import functions as F
+
+    from big_data_bowl_spark.ml.coverage import train_eval
+
+    sc = spark.sparkContext
+    x = F.col("id") % 97
+    df = (
+        spark.range(400)
+        .select(
+            "id",
+            x.cast("double").alias("x"),
+            (F.col("id") % 13).cast("double").alias("y"),
+            F.when(x > 48, "hi").otherwise("lo").alias("label"),
+        )
+        .repartition(32)
+        .persist()
+    )
+    df.count()
+    group = "test-train-eval-one-task-per-core"
+    sc.setJobGroup(group, "train_eval over 32 partitions")
+    try:
+        _model, _scored, acc = train_eval(
+            df, ["x", "y"], label_col="label", id_cols=["id"], num_trees=5
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        df.unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    ran = {
+        sid: info.numCompletedTasks + info.numFailedTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if (info := tracker.getStageInfo(sid)) is not None
+    }
+    assert ran and max(ran.values()) > 0, ran
+    assert max(ran.values()) <= sc.defaultParallelism, ran
+    assert acc >= 0.9
+
+
 def test_confusion_matrix_shape(spark, sf_dir):
     feats = order_features(spark, sf_dir)
     from big_data_bowl_spark.ml.coverage import train_eval

@@ -2735,9 +2735,10 @@ def test_decode_dispatch_fails_closed_all_formats():
     except ValueError as e:
         assert e.__cause__ is not None or "PNG" in str(e)
 
-    # header dimensions that claim a multi-gigapixel raster, and a PNG
-    # whose IDAT inflates far past its IHDR size, must fail with
-    # ValueError before the decoder allocates the raster; decoded in a
+    # header dimensions that claim a multi-gigapixel raster, a GIF
+    # whose frames x screen does, a GIF LZW stream and a PNG IDAT that
+    # expand far past their image size, must fail with ValueError
+    # before the decoder allocates the raster; decoded in a
     # child process whose address space is capped at 4e9 bytes, so an
     # unchecked allocation surfaces as MemoryError instead of paging
     import os
@@ -2796,8 +2797,41 @@ def test_decode_dispatch_fails_closed_all_formats():
             + chunk(b"IEND", b"")
         )
 
+    def gif_lzw_flood():
+        # one 64x64 image whose LZW stream grows the code table along
+        # the KwKwK chain (code k expands to k - 256 zeros), then
+        # repeats the longest code, 4095, 200,000 times: ~770M indices
+        # from 307 kB. The GIF has no color table, so a decode bounded
+        # at 64x64 indices ends in ValueError, an unbounded one first
+        # exhausts memory
+        codes, size = [(256, 9), (0, 9)], 9
+        for nxt in range(258, 4096):
+            codes.append((nxt, size))
+            if nxt + 1 == 1 << size and size < 12:
+                size += 1
+        codes += [(4095, 12)] * 200_000
+        data, acc, nbits = bytearray(), 0, 0
+        for code, width in codes:
+            acc |= code << nbits
+            nbits += width
+            while nbits >= 8:
+                data.append(acc & 0xFF)
+                acc >>= 8
+                nbits -= 8
+        data.append(acc)
+        blocks = b"".join(
+            bytes([len(data[i : i + 255])]) + data[i : i + 255]
+            for i in range(0, len(data), 255)
+        )
+        return (
+            b"GIF89a" + struct.pack("<HHBBB", 64, 64, 0, 0, 0)
+            + b"\x2c" + struct.pack("<HHHHB", 0, 0, 64, 64, 0)
+            + b"\x08" + blocks + b"\x00\x3b"
+        )
+
     baseline = encode_jpeg(img, quant=[1] * 64)
     prog = encode_jpeg(img, quant=[1] * 64, progressive=True)
+    one_px = np.zeros((1, 1), np.uint8)
     oversized = [
         ("bmp", bmp_rle(8, 1)),
         ("bmp", bmp_rle(4, 2)),
@@ -2805,6 +2839,15 @@ def test_decode_dispatch_fails_closed_all_formats():
         ("jpeg", jpeg_sof(prog, 0xFFFF, 0xFFFF)),
         ("jpeg", jpeg_sof(prog, 0x8000, 0x8000)),
         ("gif", gif_screen(0xFFFF, 0xFFFF)),
+        # forty 1x1 frames on a 64 Mpx screen: each frame composites
+        # onto its own screen copy, 40 x 64 Mpx in all
+        (
+            "gif",
+            encode_gif(
+                [one_px] * 40, offsets=[(0, 0)] * 40, screen=(8192, 8192)
+            ),
+        ),
+        ("gif", gif_lzw_flood()),
         ("png", png_bomb()),
     ]
     wide_only = [("gif", gif_screen(0xFFFF, 9))]  # 0.6 Mpx: decodes

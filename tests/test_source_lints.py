@@ -403,3 +403,28 @@ def test_bucket_pair_emission_lives_in_banding_only():
     assert hits and all(
         h.startswith("functions/banding.py:") for h in hits
     ), hits
+
+
+def _imports_pyspark_ml(node) -> bool:
+    if isinstance(node, ast.Import):
+        mods = [a.name for a in node.names]
+    elif isinstance(node, ast.ImportFrom) and node.level == 0:
+        mods = [node.module]
+        if node.module == "pyspark":
+            mods += [f"pyspark.{a.name}" for a in node.names]
+    else:
+        return False
+    return any(m == "pyspark.ml" or m.startswith("pyspark.ml.") for m in mods)
+
+
+def test_mllib_lives_in_ml_only():
+    """pyspark.ml is imported only under ml/, so every MLlib fit goes
+    through ml/coverage.train_eval, which caps the training input at
+    one partition per core."""
+    hits = [
+        f"{rel}:{node.lineno}"
+        for p, rel in _py_files()
+        for node in ast.walk(ast.parse(p.read_text()))
+        if _imports_pyspark_ml(node)
+    ]
+    assert hits and all(h.startswith("ml/") for h in hits), hits
