@@ -19,45 +19,35 @@ Design for 100 TB of media:
   Anything that must shuffle (e.g. grouping frames) should carry only
   (media_id, frame_idx, small features), never the payload.
 
-Codecs: heavyweight libs (PIL/ffmpeg/librosa) are not in this
-container, so ``decode_payload`` implements, pure-Python:
+Codecs are pure Python over numpy and the stdlib (no PIL/ffmpeg).
+``decode_payload`` returns a (height, width) uint8 BT.601 luma plane:
 
-- 'fake'  — payload bytes tiled into the declared (height, width)
+- 'fake' — payload bytes tiled into the declared (height, width)
   grid; deterministic, used by the DuckDB-oracle queries.
-- 'pgm' / 'ppm' — binary netpbm P5 (grayscale) and P6 (RGB -> BT.601
-  luma): real image formats, stdlib-decodable.
-- 'bmp' — uncompressed 8-bit-palette or 24-bit Windows bitmaps
-  (BITMAPINFOHEADER), incl. bottom-up row order + 4-byte row padding.
-- 'png' — a REAL compressed format (VERDICT r3 #5): baseline PNG via
-  stdlib zlib — 8-bit grayscale/truecolor, all five row filters
-  (None/Sub/Up/Average/Paeth), non-interlaced. Exercises the full
-  decompress + unfilter pipeline a production codec runs.
-- 'wav' (via ``decode_audio``) — PCM via the stdlib ``wave`` module.
+- 'pgm' / 'ppm' — binary netpbm P5 / P6, 8- and 16-bit samples.
+- 'bmp' — BI_RGB at 1/4/8/16/24/32 bits, BI_RLE8, BI_RLE4 and
+  BI_BITFIELDS (16/32-bit); bottom-up or top-down rows.
+- 'png' — every color type, bit depth and row filter, plain or Adam7
+  interlaced.
+- 'jpeg' — Huffman-coded sequential (SOF0/SOF1, 8- and 12-bit) and
+  progressive (SOF2: spectral selection and successive
+  approximation); sampling factors 1..4; interleaved, partially
+  interleaved and single-component scans; restart intervals. Every
+  scan fills a per-component coefficient grid and one IDCT of the Y
+  grid runs at EOI; JPEG's Y is the luma plane.
+- 'gif' — the first composited frame; ``decode_gif_frames`` and
+  ``decode_gif_frames_rgb`` return every frame (GIF87a/89a, global
+  and local color tables, interlace, partial frames with disposal
+  methods 0-3 and transparency).
 
-- 'jpeg' — baseline sequential JPEG (ITU T.81): Huffman entropy
-  decode, dequantize, zigzag, float IDCT, restart intervals
-  (DRI/RSTn with DC-predictor reset + sequence verification), and
-  interleaved MCUs with subsampled chroma (4:2:0/4:2:2/4:4:4 — the
-  full T.81 1..4 sampling-factor range), fully OR partially
-  interleaved scans (any
-  component subset per scan, r11). The Y plane is returned; JPEG's Y
-  IS the BT.601 luma. Encoder emits grayscale sequential (8- or
-  12-bit) or grayscale-content 4:2:0 color with the Annex K standard
-  tables, in interleaved / per-component / grouped-scan layouts,
-  optionally with restart markers.
-
-Formats needing non-stdlib codecs (real video codecs inside mp4,
-compressed audio, arithmetic/lossless/hierarchical JPEG) still raise
-NotImplementedError at the same seam — plug PIL/ffmpeg into
-``decode_payload`` where the marked dispatch is. JPEG decodes 8- AND
-12-bit sequential (SOF0/SOF1) plus full progressive (SOF2). PNG decodes
-every legal depth/color/filter/interlace combination (16-bit
-included); netpbm decodes 8- and 16-bit P5/P6; BMP decodes
-uncompressed 8/24-bit and RLE8; GIF decodes the full GIF89a layout
-space (r11): global AND per-frame local color tables (with or
-without a global table), Appendix-E interlaced frames, and
-partial-frame delta animations with disposal methods 0-3 and
-transparency, composited per §23 — no GIF seams remain.
+``decode_audio`` decodes 'wav' PCM to mono int16. MP4 is parsed, not
+decoded: ``parse_mp4_metadata``, ``parse_mp4_sample_index`` and
+``parse_mp4_sample_ranges`` (plain and fragmented) read the box tree.
+``parse_exif`` reads a JPEG's Exif APP1. Malformed payloads raise
+ValueError; anything else — other formats, arithmetic, lossless or
+hierarchical JPEG, other BMP compressions — raises
+NotImplementedError at ``decode_payload``, the seam where a real codec
+plugs in.
 """
 
 from __future__ import annotations
@@ -211,14 +201,8 @@ def _decode_bmp(payload: bytes) -> "np.ndarray":
     hdr_size, w, h = struct.unpack_from("<Iii", payload, 14)
     planes, bpp, compression = struct.unpack_from("<HHI", payload, 26)
     _check_raster(w, abs(h), "BMP")
-    if compression == 1 and bpp == 8:
-        return _decode_bmp_rle8(
-            payload, data_offset, hdr_size, w, h
-        )
-    if compression == 2 and bpp == 4:
-        return _decode_bmp_rle4(
-            payload, data_offset, hdr_size, w, h
-        )
+    if (compression, bpp) in ((1, 8), (2, 4)):
+        return _decode_bmp_rle(payload, data_offset, hdr_size, w, h, bpp)
     masks = None
     if compression == 3 and bpp in (16, 32):
         # BI_BITFIELDS (r11 seam closed): three DWORD channel masks.
@@ -293,11 +277,8 @@ def _decode_bmp(payload: bytes) -> "np.ndarray":
             ).astype(np.uint8)
         elif bpp == 8:
             row = lut[packed]
-        elif bpp == 4:  # high nibble first (r11: sub-byte seam closed)
-            nib = np.empty(len(packed) * 2, np.uint8)
-            nib[0::2] = packed >> 4
-            nib[1::2] = packed & 0x0F
-            row = lut[nib[:w]]
+        elif bpp == 4:
+            row = lut[_bmp_nibbles(packed)[:w]]
         else:  # 1-bit, MSB first
             bits = np.unpackbits(packed)[:w]
             row = lut[bits]
@@ -327,16 +308,27 @@ def _bmp_palette_lut(
     ).astype(np.uint8)
 
 
-def _decode_bmp_rle8(
-    payload: bytes, data_offset: int, hdr_size: int, w: int, h: int
-) -> "np.ndarray":
-    """BI_RLE8 (the Windows BMP spec's 8-bit run-length coding):
-    (count, index) pairs paint `count` pixels; count == 0 escapes to
-    0 = end of line, 1 = end of bitmap, 2 = (dx, dy) delta (skipped
-    pixels stay index 0), else absolute mode — `second` literal
-    indices follow, padded to a 2-byte boundary."""
+def _bmp_nibbles(packed: "np.ndarray") -> "np.ndarray":
+    """Packed 4-bit indices -> one index per nibble, high nibble first."""
     import numpy as np
 
+    return np.stack([packed >> 4, packed & 0x0F], axis=1).reshape(-1)
+
+
+def _decode_bmp_rle(
+    payload: bytes, data_offset: int, hdr_size: int, w: int, h: int, bpp: int
+) -> "np.ndarray":
+    """BI_RLE8 / BI_RLE4 (the Windows BMP spec's run-length coding of
+    8- or 4-bit indices): (count, value) pairs paint `count` pixels,
+    RLE8 repeating the index and RLE4 alternating the byte's high and
+    low nibbles; count == 0 escapes to 0 = end of line, 1 = end of
+    bitmap, 2 = (dx, dy) delta (skipped pixels stay index 0), else
+    absolute mode — `value` literal indices follow (bytes, or packed
+    nibbles high first), padded to a 2-byte boundary."""
+    import numpy as np
+
+    unpack = _bmp_nibbles if bpp == 4 else (lambda packed: packed)
+    truncated = f"truncated BMP RLE{bpp} data"
     bottom_up = h > 0
     h = abs(h)
     idx = np.zeros((h, w), np.uint8)
@@ -347,54 +339,8 @@ def _decode_bmp_rle8(
         pos += 2
         if count > 0:  # encoded run
             end = min(x + count, w)
-            idx[y, x:end] = val
-            x = end
-        elif val == 0:  # end of line
-            x, y = 0, y + 1
-        elif val == 1:  # end of bitmap
-            break
-        elif val == 2:  # delta
-            if pos + 1 >= len(payload):  # same contract as the GIF
-                raise ValueError("truncated BMP RLE8 data")  # walkers
-            x = min(x + payload[pos], w)
-            y += payload[pos + 1]
-            pos += 2
-        else:  # absolute mode: `val` literal indices, word-aligned
-            if pos + val > len(payload):
-                raise ValueError("truncated BMP RLE8 data")
-            end = min(x + val, w)
-            lit = np.frombuffer(payload, np.uint8, count=val, offset=pos)
-            idx[y, x:end] = lit[: end - x]
-            x = end
-            pos += val + (val & 1)
-    lut = _bmp_palette_lut(payload, hdr_size)
-    img = lut[idx]
-    return img[::-1] if bottom_up else img
-
-
-def _decode_bmp_rle4(
-    payload: bytes, data_offset: int, hdr_size: int, w: int, h: int
-) -> "np.ndarray":
-    """BI_RLE4 (r11 seam closure): like RLE8 but nibble-granular —
-    an encoded run's data byte paints `count` pixels ALTERNATING its
-    high and low nibbles; absolute mode carries `val` literal pixels
-    as packed nibbles (high first), padded so the mode spans a
-    2-byte boundary. Escapes (end-of-line / end-of-bitmap / delta)
-    are byte-identical to RLE8."""
-    import numpy as np
-
-    bottom_up = h > 0
-    h = abs(h)
-    idx = np.zeros((h, w), np.uint8)
-    x = y = 0
-    pos = data_offset
-    while pos + 1 < len(payload) and y < h:
-        count, val = payload[pos], payload[pos + 1]
-        pos += 2
-        if count > 0:  # encoded run: alternate the two nibbles
-            end = min(x + count, w)
-            pair = np.array([val >> 4, val & 0x0F], np.uint8)
-            idx[y, x:end] = np.tile(pair, (count + 1) // 2)[: end - x]
+            run = np.resize(unpack(np.array([val], np.uint8)), count)
+            idx[y, x:end] = run[: end - x]
             x = end
         elif val == 0:  # end of line
             x, y = 0, y + 1
@@ -402,26 +348,20 @@ def _decode_bmp_rle4(
             break
         elif val == 2:  # delta
             if pos + 1 >= len(payload):
-                raise ValueError("truncated BMP RLE4 data")
+                raise ValueError(truncated)
             x = min(x + payload[pos], w)
             y += payload[pos + 1]
             pos += 2
-        else:  # absolute mode: `val` packed nibbles, word-aligned
-            nbytes = (val + 1) // 2
+        else:  # absolute mode: `val` literal indices, word-aligned
+            nbytes = (val * bpp + 7) // 8
             if pos + nbytes > len(payload):
-                raise ValueError("truncated BMP RLE4 data")
-            packed = np.frombuffer(
-                payload, np.uint8, count=nbytes, offset=pos
-            )
-            nib = np.empty(nbytes * 2, np.uint8)
-            nib[0::2] = packed >> 4
-            nib[1::2] = packed & 0x0F
+                raise ValueError(truncated)
+            lit = unpack(np.frombuffer(payload, np.uint8, nbytes, pos))
             end = min(x + val, w)
-            idx[y, x:end] = nib[:val][: end - x]
+            idx[y, x:end] = lit[: end - x]
             x = end
             pos += nbytes + (nbytes & 1)
-    lut = _bmp_palette_lut(payload, hdr_size, 16)
-    img = lut[idx]
+    img = _bmp_palette_lut(payload, hdr_size, 1 << bpp)[idx]
     return img[::-1] if bottom_up else img
 
 
@@ -720,7 +660,8 @@ class _BitWriter:
 
 class _BitReader:
     """MSB-first bit reader over entropy-coded data with 0xFF00
-    unstuffing; raises on marker bytes (restart intervals unsupported)."""
+    unstuffing; a marker inside entropy data raises, RSTn is consumed
+    only through consume_restart."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
@@ -754,6 +695,22 @@ class _BitReader:
         for _ in range(n):
             v = (v << 1) | self.read_bit()
         return v
+
+    def receive(self, s: int) -> int:
+        """Read an s-bit magnitude and sign-extend it (T.81 F.2.2.1
+        EXTEND); 0 bits is the value 0."""
+        v = self.read_bits(s)
+        return v if not s or v >= 1 << (s - 1) else v - (1 << s) + 1
+
+    def read_symbol(self, table: dict[tuple[int, int], int]) -> int:
+        """Decode one Huffman symbol; table maps (length, code)."""
+        code = 0
+        for ln in range(1, 17):
+            code = (code << 1) | self.read_bit()
+            sym = table.get((ln, code))
+            if sym is not None:
+                return sym
+        raise ValueError("invalid JPEG Huffman code")
 
     def consume_restart(self) -> int:
         """Byte-align and consume an RSTn marker; returns n (0..7)."""
@@ -1411,33 +1368,17 @@ def encode_jpeg(
     return b"\xff\xd8" + dqt + sof + dht + dri + scans + b"\xff\xd9"
 
 
-def _decode_progressive_scan(
-    br,
-    comps,
-    sof_idx,
-    scan_comps,
-    htables,
-    comp_coefs,
-    ss,
-    se,
-    ah,
-    al,
-    mcu_x,
-    mcu_y,
-    restart_interval,
-    read_symbol,
-    extend,
-    comp_blocks,
+def _decode_scan(
+    br, scan, htables, ss, se, ah, al, rows, cols, restart_interval
 ) -> None:
-    """Decode ONE progressive (SOF2) scan into the accumulating
-    per-component coefficient grids (T.81 Annex G) — both progressive
-    dimensions:
+    """Decode ONE scan into the per-component coefficient grids
+    (T.81 Annex G). A sequential scan is the Ss=0, Se=63, Ah=Al=0
+    case: DC plus the full AC band in each block, its EOB an EOB run
+    of 0. Progressive scans cover both dimensions:
 
-    - Spectral selection: a DC scan (Ss=Se=0, interleaved over the
-      frame MCU grid or Ns=1 over the component grid) or an AC band
-      scan (Ns=1, band [Ss, Se], with EOB-run codes: RRRR|0 encodes
-      a run of 2^RRRR + extra-bits blocks whose remaining band is
-      all zero).
+    - Spectral selection: a DC scan (Ss=Se=0) or an AC band scan
+      (Ns=1, band [Ss, Se], with EOB-run codes: RRRR|0 encodes a run
+      of 2^RRRR + extra-bits blocks whose remaining band is all zero).
     - Successive approximation: first scans (Ah=0, Al>0) deliver
       point-transformed coefficients (stored << Al); refinement
       scans (Ah=Al+1) deliver one more magnitude bit each — DC: one
@@ -1447,102 +1388,41 @@ def _decode_progressive_scan(
       consume one appended correction bit each, and EOB runs STILL
       carry correction bits for their nonzero history).
 
-    Restart intervals reset the DC predictors / the EOB run with
-    per-scan RST numbering, same as baseline.
+    ``scan`` lists (coefficient grid, hs, vs, DC table id, AC table
+    id) per scan component in scan-header order. The scan walks
+    rows x cols MCUs, each holding every component's hs x vs blocks
+    (T.81 A.2). Restart intervals count those MCUs, reset the DC
+    predictors and the EOB run, and their RST numbering restarts at 0
+    each scan.
     """
-    import numpy as np
+    import itertools
 
-    ns = len(scan_comps)
-    if ah and al != ah - 1:
-        raise ValueError(
-            "successive-approximation refinement must have Al = Ah - 1"
-        )
-    # zigzag-indexed coefficient grids persist across scans
-    for idx in set(sof_idx):
-        if idx not in comp_coefs:
-            comp_coefs[idx] = np.zeros(
-                (mcu_y * comps[idx][2], mcu_x * comps[idx][1], 64),
-                np.int32,
-            )
-
-    state = {"rst": 0}
-
-    def restart_due(unit_idx: int) -> bool:
-        if (
-            restart_interval
-            and unit_idx
-            and unit_idx % restart_interval == 0
+    def data_units():
+        """(restart, scan component, coefficient cell) in scan order;
+        restart is True for the first unit after an RSTn."""
+        expected_rst = 0
+        for n, (my, mx) in enumerate(
+            itertools.product(range(rows), range(cols))
         ):
-            n = br.consume_restart()
-            if n != state["rst"]:
-                raise ValueError(
-                    f"JPEG restart marker out of sequence "
-                    f"(got RST{n}, expected RST{state['rst']})"
-                )
-            state["rst"] = (state["rst"] + 1) % 8
-            return True
-        return False
-
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise ValueError(
-                "progressive DC scan must have Se=0 (T.81 G.1.1.1.1)"
+            restart = bool(
+                restart_interval and n and n % restart_interval == 0
             )
-        prev_dc = [0] * ns
+            if restart:
+                got = br.consume_restart()
+                if got != expected_rst:
+                    raise ValueError(
+                        f"JPEG restart marker out of sequence "
+                        f"(got RST{got}, expected RST{expected_rst})"
+                    )
+                expected_rst = (expected_rst + 1) % 8
+            for ci, (grid, hs, vs, _td, _ta) in enumerate(scan):
+                for v in range(vs):
+                    for u in range(hs):
+                        yield restart, ci, grid[my * vs + v, mx * hs + u]
+                        restart = False
 
-        def dc_block(ci: int, td: int, cell) -> None:
-            if ah:  # refinement: one raw bit, ORed into bit Al
-                if br.read_bit():
-                    cell[0] = int(cell[0]) | (1 << al)
-                return
-            s = read_symbol(htables[(0, td)])
-            diff = extend(br.read_bits(s), s) if s else 0
-            prev_dc[ci] += diff
-            cell[0] = prev_dc[ci] << al
-
-        if ns > 1:  # (partially-)interleaved over the frame MCU grid
-            mcu_idx = 0
-            for my in range(mcu_y):
-                for mx in range(mcu_x):
-                    if restart_due(mcu_idx):
-                        prev_dc = [0] * ns
-                    mcu_idx += 1
-                    for ci, (_cs, td, _ta) in enumerate(scan_comps):
-                        idx = sof_idx[ci]
-                        hs, vs = comps[idx][1], comps[idx][2]
-                        for v in range(vs):
-                            for u in range(hs):
-                                dc_block(
-                                    ci,
-                                    td,
-                                    comp_coefs[idx][
-                                        my * vs + v, mx * hs + u
-                                    ],
-                                )
-        else:  # Ns=1: the component's own block grid
-            idx = sof_idx[0]
-            td = scan_comps[0][1]
-            by, bx = comp_blocks(idx)
-            blk = 0
-            for my in range(by):
-                for mx in range(bx):
-                    if restart_due(blk):
-                        prev_dc = [0]
-                    blk += 1
-                    dc_block(0, td, comp_coefs[idx][my, mx])
-        return
-
-    # AC band scan
-    if ns != 1:
-        raise ValueError(
-            "progressive AC scan must have Ns=1 (T.81 G.1.1.1.1)"
-        )
-    idx = sof_idx[0]
-    ta = scan_comps[0][2]
-    by, bx = comp_blocks(idx)
-    coefs = comp_coefs[idx]
+    prev_dc = [0] * len(scan)
     eobrun = 0
-    blk = 0
     p1, m1 = 1 << al, -(1 << al)
 
     def refine_nonzero(cell, k: int) -> None:
@@ -1553,115 +1433,104 @@ def _decode_progressive_scan(
         if br.read_bit() and (abs(v) & p1) == 0:
             cell[k] = v + (p1 if v > 0 else m1)
 
-    if ah == 0:
-        # first scan of the band: run/size coding with EOB runs,
-        # values stored point-transformed (<< Al)
-        for my in range(by):
-            for mx in range(bx):
-                if restart_due(blk):
-                    eobrun = 0  # EOB runs cannot cross a restart
-                blk += 1
-                if eobrun:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = read_symbol(htables[(1, ta)])
-                    run, size = rs >> 4, rs & 0x0F
-                    if size == 0:
-                        if run == 15:  # ZRL: 16 zeros within the band
-                            k += 16
-                            continue
-                        eobrun = (1 << run) - 1  # this block + more
-                        if run:
-                            eobrun += br.read_bits(run)
-                        break
-                    k += run
-                    if k > se:
-                        raise ValueError(
-                            "JPEG AC index overflows the scan band"
-                        )
-                    coefs[my, mx, k] = (
-                        extend(br.read_bits(size), size) << al
-                    )
-                    k += 1
-    else:
-        # refinement scan (G.1.2.3, the libjpeg AC-refine algorithm):
+    for restart, ci, cell in data_units():
+        _grid, _hs, _vs, td, ta = scan[ci]
+        if restart:
+            prev_dc, eobrun = [0] * len(scan), 0
+        if ss == 0:
+            if ah:  # DC refinement: one raw bit, ORed into bit Al
+                if br.read_bit():
+                    cell[0] = int(cell[0]) | p1
+            else:
+                prev_dc[ci] += br.receive(br.read_symbol(htables[(0, td)]))
+                cell[0] = prev_dc[ci] << al
+        if se == 0:
+            continue
+        k = max(ss, 1)
+        if ah == 0:
+            # first pass over the band: run/size coding with EOB runs,
+            # values stored point-transformed (<< Al)
+            if eobrun:
+                eobrun -= 1
+                continue
+            while k <= se:
+                rs = br.read_symbol(htables[(1, ta)])
+                run, size = rs >> 4, rs & 0x0F
+                if size == 0:
+                    if run == 15:  # ZRL: 16 zeros within the band
+                        k += 16
+                        continue
+                    eobrun = (1 << run) - 1  # this block + more
+                    if run:
+                        eobrun += br.read_bits(run)
+                    break
+                k += run
+                if k > se:
+                    raise ValueError("JPEG AC index overflows the scan band")
+                cell[k] = br.receive(size) << al
+                k += 1
+            continue
+        # refinement (G.1.2.3, the libjpeg AC-refine algorithm):
         # newly-significant coefficients arrive as run/size codes with
         # s=1 (sign bit follows); every already-nonzero coefficient
         # passed over — including inside ZRL runs and EOB runs —
         # consumes one correction bit
-        for my in range(by):
-            for mx in range(bx):
-                if restart_due(blk):
-                    eobrun = 0
-                blk += 1
-                cell = coefs[my, mx]
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = read_symbol(htables[(1, ta)])
-                        run, size = rs >> 4, rs & 0x0F
-                        if size == 0:
-                            if run != 15:
-                                # EOBn INCLUDES this block; its tail
-                                # still refines below
-                                eobrun = 1 << run
-                                if run:
-                                    eobrun += br.read_bits(run)
-                                break
-                            newval = 0  # ZRL: skip 16 zero-history
-                        else:
-                            if size != 1:
-                                raise ValueError(
-                                    "AC refinement run/size must have "
-                                    "s=1"
-                                )
-                            newval = p1 if br.read_bit() else m1
-                        # advance over `run` zero-history positions,
-                        # refining nonzero-history ones in passing
-                        while k <= se:
-                            if int(cell[k]) != 0:
-                                refine_nonzero(cell, k)
-                            else:
-                                if run == 0:
-                                    break
-                                run -= 1
-                            k += 1
-                        if newval and k <= se:
-                            cell[k] = newval
-                        k += 1
-                if eobrun > 0:
-                    # inside an EOB run: only correction bits for the
-                    # remaining nonzero history of this block's band
-                    while k <= se:
-                        if int(cell[k]) != 0:
-                            refine_nonzero(cell, k)
-                        k += 1
-                    eobrun -= 1
+        if eobrun == 0:
+            while k <= se:
+                rs = br.read_symbol(htables[(1, ta)])
+                run, size = rs >> 4, rs & 0x0F
+                if size == 0:
+                    if run != 15:
+                        # EOBn INCLUDES this block; its tail still
+                        # refines below
+                        eobrun = 1 << run
+                        if run:
+                            eobrun += br.read_bits(run)
+                        break
+                    newval = 0  # ZRL: skip 16 zero-history
+                else:
+                    if size != 1:
+                        raise ValueError(
+                            "AC refinement run/size must have s=1"
+                        )
+                    newval = p1 if br.read_bit() else m1
+                # advance over `run` zero-history positions, refining
+                # nonzero-history ones in passing
+                while k <= se:
+                    if int(cell[k]) != 0:
+                        refine_nonzero(cell, k)
+                    else:
+                        if run == 0:
+                            break
+                        run -= 1
+                    k += 1
+                if newval and k <= se:
+                    cell[k] = newval
+                k += 1
+        if eobrun > 0:
+            # inside an EOB run: only correction bits for the remaining
+            # nonzero history of this block's band
+            while k <= se:
+                if int(cell[k]) != 0:
+                    refine_nonzero(cell, k)
+                k += 1
+            eobrun -= 1
 
 
 def _decode_jpeg(payload: bytes) -> "np.ndarray":
     """JPEG decode: sequential (SOF0 baseline / SOF1 extended, 8- and
-    12-bit) and spectral-selection progressive (SOF2). Grayscale or
-    YCbCr with any 1/2/4 sampling factors (4:4:4, 4:2:2, 4:2:0).
-    Sequential scan layouts: fully interleaved (MCUs over the frame
-    grid), PARTIALLY interleaved (1 < Ns < Nf, r11 — any component
-    subset per scan, frame-derived MCU geometry per T.81 B.2.2), or
-    one component per scan (MCU = one block over the component's own
-    block grid, the libjpeg non-interleaved form). Progressive: an
-    interleaved (full or subset) or Ns=1 DC scan plus
-    per-component AC band scans with EOB-run codes — including
-    successive approximation (point-transformed first scans and
-    Ah=Al+1 refinement scans with correction bits); coefficients
-    accumulate across scans and are IDCT'd once at EOI. The Y plane
-    is returned — JPEG's Y is already the BT.601 luma this pipeline
-    standardizes on, so chroma blocks are entropy-decoded to advance
-    the stream but not color-converted. Restart intervals (DRI/RSTn)
-    are honored with DC-predictor / EOB-run reset and
-    marker-sequence verification; RST numbering restarts each scan.
-    Arithmetic coding and lossless/hierarchical modes raise at the
-    documented seam."""
+    12-bit) and progressive (SOF2, spectral selection and successive
+    approximation). Grayscale or YCbCr with sampling factors 1..4.
+    Scans may be fully interleaved, partially interleaved (1 < Ns <
+    Nf) or single-component, in any order relative to the SOF; see
+    _decode_scan for the data-unit order and restart handling. Every
+    scan adds to its components' coefficient grids; each component's
+    quant table is latched at its first scan, and one dequantize +
+    IDCT of the Y grid runs at EOI. The Y plane is returned — JPEG's
+    Y is already the BT.601 luma this pipeline standardizes on, so
+    chroma is entropy-decoded to advance the stream and nothing more.
+    Arithmetic coding and lossless/hierarchical modes raise
+    NotImplementedError."""
     import struct
 
     import numpy as np
@@ -1676,10 +1545,10 @@ def _decode_jpeg(payload: bytes) -> "np.ndarray":
     precision = 8  # sample precision: 8 (baseline) or 12 (extended)
     restart_interval = 0
     comps: list[tuple[int, int, int, int]] = []  # id, hs, vs, tq
-    comp_planes: dict[int, "np.ndarray"] = {}  # SOF comp idx -> plane
-    # progressive: per-component DCT coefficients accumulate across
-    # scans (natural zigzag index per block), IDCT'd only at EOI
+    # per-component DCT coefficients (zigzag index per block) accumulate
+    # across scans and are IDCT'd once at EOI
     comp_coefs: dict[int, "np.ndarray"] = {}  # idx -> (by, bx, 64)
+    comp_q: dict[int, list[int]] = {}  # idx -> latched quant table
     while pos + 4 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("bad JPEG marker alignment")
@@ -1727,7 +1596,7 @@ def _decode_jpeg(payload: bytes) -> "np.ndarray":
         elif marker in (0xC0, 0xC1, 0xC2):
             # SOF0 baseline / SOF1 extended sequential / SOF2
             # progressive — SOF1 is decode-identical to SOF0, it just
-            # admits 12-bit samples (T.81 Table B.2; r11 seam closed)
+            # admits 12-bit samples (T.81 Table B.2)
             prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
             _check_raster(w, h, "JPEG")
             if prec not in (8, 12):
@@ -1742,8 +1611,8 @@ def _decode_jpeg(payload: bytes) -> "np.ndarray":
                 for _, hs, vs, _ in comps
             ):
                 # T.81 B.2.2: Hi/Vi legal range is exactly 1..4 —
-                # factor 3 decodes like any other (r11), above 4 the
-                # stream is invalid, not unsupported
+                # factor 3 decodes like any other, above 4 the stream
+                # is invalid, not unsupported
                 raise ValueError(
                     "JPEG sampling factor outside T.81's 1..4 range"
                 )
@@ -1770,7 +1639,7 @@ def _decode_jpeg(payload: bytes) -> "np.ndarray":
             # Bind each scan component to its SOF component by the Cs
             # selector (T.81 B.2.3) — scan order is NOT required to
             # match SOF order, so positional binding decodes a
-            # spec-valid reordered scan silently wrong (ADVICE r5).
+            # spec-valid reordered scan silently wrong.
             cid_to_idx = {cid: i for i, (cid, _, _, _) in enumerate(comps)}
             if len(cid_to_idx) != nc:
                 raise ValueError("JPEG SOF has duplicate component ids")
@@ -1794,201 +1663,78 @@ def _decode_jpeg(payload: bytes) -> "np.ndarray":
             vmax = max(vs for _, _, vs, _ in comps)
             mcu_x = -(-w // (8 * hmax))
             mcu_y = -(-h // (8 * vmax))
-            br = _BitReader(payload, pos)
-
-            def read_symbol(table: dict[tuple[int, int], int]) -> int:
-                code, ln = 0, 0
-                while ln < 16:
-                    code = (code << 1) | br.read_bit()
-                    ln += 1
-                    sym = table.get((ln, code))
-                    if sym is not None:
-                        return sym
-                raise ValueError("invalid JPEG Huffman code")
-
-            def extend(v: int, s: int) -> int:
-                return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-            def comp_blocks(idx: int) -> tuple:
-                """Non-interleaved block-grid dims for component idx
-                (T.81 A.2.2): ceil(ceil(dim * samp / max_samp) / 8)."""
-                _cid, hs, vs, _tq = comps[idx]
-                return (
-                    -(-(-(-h * vs // vmax)) // 8),
-                    -(-(-(-w * hs // hmax)) // 8),
-                )
-
-            if progressive:
-                _decode_progressive_scan(
-                    br, comps, sof_idx, scan_comps, htables,
-                    comp_coefs, ss, se, ah, al, mcu_x, mcu_y,
-                    restart_interval, read_symbol, extend, comp_blocks,
-                )
-                pos = br.pos
-                continue
-            if (ss, se, ah, al) != (0, 63, 0, 0):
+            if not progressive and (ss, se, ah, al) != (0, 63, 0, 0):
                 raise ValueError(
                     "baseline JPEG scan must cover the full band "
                     "(Ss=0, Se=63, Ah=Al=0)"
                 )
-            c = _dct_matrix()
-            # per-component planes persist ACROSS scans: a
-            # non-interleaved file fills them one scan at a time
-            for idx in sof_idx:
-                if idx not in comp_planes:
-                    comp_planes[idx] = np.zeros(
-                        (
-                            mcu_y * comps[idx][2] * 8,
-                            mcu_x * comps[idx][1] * 8,
-                        ),
-                        np.uint8 if precision == 8 else np.uint16,
-                    )
-            deq = []
-            for ci, (_cs, _td, _ta) in enumerate(scan_comps):
-                q = np.empty(64, np.float64)
-                q[_JPEG_ZIGZAG] = qtables[comps[sof_idx[ci]][3]]
-                deq.append(q.reshape(8, 8))
-
-            def decode_block(td, ta, dq, dc_in):
-                """Entropy-decode + dequantize + IDCT one 8x8 block;
-                returns (uint8 block, new DC predictor)."""
-                zz = np.zeros(64, np.float64)
-                s = read_symbol(htables[(0, td)])
-                diff = extend(br.read_bits(s), s) if s else 0
-                dc = dc_in + diff
-                zz[0] = dc
-                k = 1
-                while k < 64:
-                    rs = read_symbol(htables[(1, ta)])
-                    run, size = rs >> 4, rs & 0x0F
-                    if size == 0:
-                        if run == 15:  # ZRL
-                            k += 16
-                            continue
-                        break  # EOB
-                    k += run
-                    if k > 63:
-                        raise ValueError("JPEG AC index overflow")
-                    zz[k] = extend(br.read_bits(size), size)
-                    k += 1
-                coef = np.zeros(64, np.float64)
-                coef[_JPEG_ZIGZAG] = zz
-                block = c.T @ (coef.reshape(8, 8) * dq) @ c
-                level = 1 << (precision - 1)
-                return (
-                    np.clip(
-                        np.rint(block) + level, 0, 2 * level - 1
-                    ).astype(np.uint8 if precision == 8 else np.uint16),
-                    dc,
+            if ah and al != ah - 1:
+                raise ValueError(
+                    "successive-approximation refinement must have "
+                    "Al = Ah - 1"
                 )
-
-            def check_restart(unit_idx, expected_rst, prev_dc):
-                """Consume + verify an RSTn if the interval says one is
-                due before decoding unit `unit_idx`; returns the
-                updated (expected_rst, prev_dc)."""
-                if (
-                    restart_interval
-                    and unit_idx
-                    and unit_idx % restart_interval == 0
-                ):
-                    n = br.consume_restart()
-                    if n != expected_rst:
-                        raise ValueError(
-                            f"JPEG restart marker out of sequence "
-                            f"(got RST{n}, expected RST{expected_rst})"
-                        )
-                    return (expected_rst + 1) % 8, [0] * len(prev_dc)
-                return expected_rst, prev_dc
-
-            prev_dc = [0] * ns
-            expected_rst = 0
-            if ns > 1:
-                # interleaved (ns == nc) or PARTIALLY interleaved
-                # (1 < ns < nc, r11 seam closed): one pass over the
-                # frame MCU grid — T.81 B.2.2 defines Hmax/Vmax over
-                # the FRAME's components, so the MCU geometry is
-                # unchanged when a scan carries only a subset; each
-                # scan component still contributes its own hs x vs
-                # data units per MCU
-                mcu_idx = 0
-                for my in range(mcu_y):
-                    for mx in range(mcu_x):
-                        expected_rst, prev_dc = check_restart(
-                            mcu_idx, expected_rst, prev_dc
-                        )
-                        mcu_idx += 1
-                        for ci, (_cs, td, ta) in enumerate(scan_comps):
-                            hs = comps[sof_idx[ci]][1]
-                            vs = comps[sof_idx[ci]][2]
-                            for v in range(vs):
-                                for u in range(hs):
-                                    blk, prev_dc[ci] = decode_block(
-                                        td, ta, deq[ci], prev_dc[ci]
-                                    )
-                                    y0 = (my * vs + v) * 8
-                                    x0 = (mx * hs + u) * 8
-                                    comp_planes[sof_idx[ci]][
-                                        y0 : y0 + 8, x0 : x0 + 8
-                                    ] = blk
-            else:
-                # non-interleaved (Ns == 1, T.81 A.2.2): the MCU is a
-                # single data unit and the scan covers the COMPONENT'S
-                # own block grid — ceil(comp_dim / 8) per axis with
-                # comp_dim = ceil(frame_dim * sampling / max_sampling)
-                # — row-major; the restart interval counts blocks and
-                # RST numbering restarts at 0 each scan
-                idx = sof_idx[0]
-                _cs0, td0, ta0 = scan_comps[0]
-                hs, vs = comps[idx][1], comps[idx][2]
-                comp_w = -(-(w * hs) // hmax)
-                comp_h = -(-(h * vs) // vmax)
-                blocks_x = -(-comp_w // 8)
-                blocks_y = -(-comp_h // 8)
-                blk_idx = 0
-                for my in range(blocks_y):
-                    for mx in range(blocks_x):
-                        expected_rst, prev_dc = check_restart(
-                            blk_idx, expected_rst, prev_dc
-                        )
-                        blk_idx += 1
-                        blk, prev_dc[0] = decode_block(
-                            td0, ta0, deq[0], prev_dc[0]
-                        )
-                        comp_planes[idx][
-                            my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8
-                        ] = blk
-            # resume marker parsing after this scan's entropy data (a
-            # non-interleaved file has nc scans; interleaved has one)
+            if progressive and ss == 0 and se != 0:
+                raise ValueError(
+                    "progressive DC scan must have Se=0 (T.81 G.1.1.1.1)"
+                )
+            if ss and ns != 1:
+                raise ValueError(
+                    "progressive AC scan must have Ns=1 (T.81 G.1.1.1.1)"
+                )
+            for idx in sof_idx:
+                if idx not in comp_coefs:
+                    # a component's first scan latches its quant table
+                    # (libjpeg latch_quant_tables): a later DQT may
+                    # redefine the slot for another component
+                    comp_coefs[idx] = np.zeros(
+                        (mcu_y * comps[idx][2], mcu_x * comps[idx][1], 64),
+                        np.int32,
+                    )
+                    comp_q[idx] = qtables[comps[idx][3]]
+            scan = [
+                (comp_coefs[idx], comps[idx][1], comps[idx][2], td, ta)
+                for idx, (_cs, td, ta) in zip(sof_idx, scan_comps)
+            ]
+            rows, cols = mcu_y, mcu_x
+            if ns == 1:
+                # one block per MCU over the component's own block
+                # grid, ceil(ceil(dim * samp / max_samp) / 8) (T.81
+                # A.2.2), not the frame's MCU grid
+                grid, hs, vs, td, ta = scan[0]
+                rows = -(-(-(-h * vs // vmax)) // 8)
+                cols = -(-(-(-w * hs // hmax)) // 8)
+                scan = [(grid, 1, 1, td, ta)]
+            br = _BitReader(payload, pos)
+            _decode_scan(
+                br, scan, htables, ss, se, ah, al, rows, cols,
+                restart_interval,
+            )
+            # resume marker parsing after this scan's entropy data
             pos = br.pos
         # APPn / COM / other: skipped via the length field
-    if sof is not None and progressive and 0 in comp_coefs:
-        # progressive: all scans accumulated coefficients — one
-        # vectorized dequantize + IDCT over the Y grid at the end
-        h, w, _nc = sof
-        coefs = comp_coefs[0]
-        q = np.empty(64, np.float64)
-        q[_JPEG_ZIGZAG] = qtables[comps[0][3]]
-        q = q.reshape(8, 8)
-        by, bx, _ = coefs.shape
-        nat = np.zeros((by, bx, 64), np.float64)
-        nat[:, :, _JPEG_ZIGZAG] = coefs
-        c = _dct_matrix()
-        blocks = np.einsum(
-            "ji,yxjk,kl->yxil", c, nat.reshape(by, bx, 8, 8) * q, c
-        )
-        level = 1 << (precision - 1)
-        plane = (
-            np.clip(np.rint(blocks) + level, 0, 2 * level - 1)
-            .transpose(0, 2, 1, 3)
-            .reshape(by * 8, bx * 8)
-        )
-        return _jpeg_to_uint8(plane[:h, :w], precision)
-    if sof is not None and 0 in comp_planes:
-        # Y == BT.601 luma == FIRST SOF component, wherever the scans
-        # happened to place it
-        h, w, _nc = sof
-        return _jpeg_to_uint8(comp_planes[0][:h, :w], precision)
-    raise ValueError("JPEG has no scan data")
+    if sof is None or 0 not in comp_coefs:
+        raise ValueError("JPEG has no scan data")
+    # one dequantize + IDCT over the Y grid: Y == BT.601 luma == the
+    # FIRST SOF component, wherever the scans placed it
+    h, w, _nc = sof
+    coefs = comp_coefs[0]
+    q = np.empty(64, np.float64)
+    q[_JPEG_ZIGZAG] = comp_q[0]
+    q = q.reshape(8, 8)
+    by, bx, _ = coefs.shape
+    nat = np.zeros((by, bx, 64), np.float64)
+    nat[:, :, _JPEG_ZIGZAG] = coefs
+    c = _dct_matrix()
+    blocks = np.einsum(
+        "ji,yxjk,kl->yxil", c, nat.reshape(by, bx, 8, 8) * q, c
+    )
+    level = 1 << (precision - 1)
+    plane = (
+        np.clip(np.rint(blocks) + level, 0, 2 * level - 1)
+        .transpose(0, 2, 1, 3)
+        .reshape(by * 8, bx * 8)
+    )
+    return _jpeg_to_uint8(plane[:h, :w], precision)
 
 
 def _jpeg_to_uint8(plane: "np.ndarray", precision: int) -> "np.ndarray":
@@ -2054,7 +1800,7 @@ def decode_payload(
         # first image is composited — multi-frame pipelines use
         # decode_gif_frames/_rgb directly)
         def first_luma(b: bytes):
-            first = next(_gif_rgb_composites(b), None)
+            first = next(_gif_composites(_parse_gif(b), rgb=True), None)
             if first is None:
                 raise ValueError("GIF carries no image")
             rgb = first.astype(np.float64)
@@ -2875,31 +2621,34 @@ def parse_mp4_sample_index(payload: bytes) -> list:
                     break
                 path = nxt
             if path is not None:
-                sizes = _read_stsz_sizes(payload, *path)
-                if sizes:
+                n, fixed, table = _read_stsz(payload, *path)
+                if n:
                     entry.update(
-                        n_samples=len(sizes),
-                        total_bytes=sum(sizes),
-                        max_bytes=max(sizes),
-                        min_bytes=min(sizes),
+                        n_samples=n,
+                        total_bytes=fixed * n if fixed else sum(table),
+                        max_bytes=fixed or max(table),
+                        min_bytes=fixed or min(table),
                     )
             tracks.append(entry)
     return tracks
 
 
-def _read_stsz_sizes(payload: bytes, s0: int, s1: int) -> list:
-    """Decode an stsz body (14496-12 8.7.3) into a per-sample size
-    list, bounds-checked against the box end."""
+def _read_stsz(payload: bytes, s0: int, s1: int) -> "tuple[int, int, list]":
+    """Decode an stsz body (14496-12 8.7.3) into (sample_count,
+    constant sample_size or 0, per-sample size table). The constant
+    form has an empty table: its count is an untrusted 32-bit field
+    that no box bounds. The table form is bounds-checked against the
+    box end."""
     import struct
 
     if s0 + 12 > s1:
         raise ValueError("stsz box too short for its header")
     _vf, fixed, n = struct.unpack_from(">III", payload, s0)
     if fixed:
-        return [fixed] * n
+        return n, fixed, []
     if s0 + 12 + 4 * n > s1:
         raise ValueError("stsz sample_count overruns the stsz box")
-    return [
+    return n, 0, [
         struct.unpack_from(">I", payload, s0 + 12 + 4 * i)[0]
         for i in range(n)
     ]
@@ -2995,7 +2744,7 @@ def parse_mp4_sample_ranges(payload: bytes) -> list:
                 wide = co is not None
             if stsz is None or stsc is None or co is None:
                 continue
-            sizes = _read_stsz_sizes(payload, *stsz)
+            n_samples, fixed, table = _read_stsz(payload, *stsz)
 
             sc0, sc1 = stsc
             if sc0 + 8 > sc1:
@@ -3023,8 +2772,12 @@ def parse_mp4_sample_ranges(payload: bytes) -> list:
                 for i in range(n_chunks)
             ]
 
-            if not sizes:
+            if not n_samples:
                 continue
+            if fixed * n_samples > len(payload):
+                # samples are disjoint byte ranges of the file, which
+                # bounds a constant-size count no box does
+                raise ValueError("sample byte range overruns the file")
             if not runs or not offsets:
                 raise ValueError(
                     "track has samples but no usable chunk layout"
@@ -3040,11 +2793,12 @@ def parse_mp4_sample_ranges(payload: bytes) -> list:
                     for fc, cnt in reversed(runs)
                     if fc <= ci
                 )
-                take = min(spc, len(sizes) - si)
+                take = min(spc, n_samples - si)
                 within = 0
                 for k in range(take):
                     off = offsets[ci - 1] + within
-                    if off + sizes[si] > len(payload):
+                    size = fixed or table[si]
+                    if off + size > len(payload):
                         raise ValueError(
                             "sample byte range overruns the file"
                         )
@@ -3054,14 +2808,14 @@ def parse_mp4_sample_ranges(payload: bytes) -> list:
                             "sample_idx": si,
                             "chunk_idx": ci - 1,
                             "offset": off,
-                            "size": sizes[si],
+                            "size": size,
                         }
                     )
-                    within += sizes[si]
+                    within += size
                     si += 1
-                if si >= len(sizes):
+                if si >= n_samples:
                     break
-            if si < len(sizes):
+            if si < n_samples:
                 raise ValueError(
                     "stsc/stco chunk layout holds fewer samples than stsz"
                 )
@@ -3784,39 +3538,15 @@ def decode_gif_frames(payload: bytes) -> "tuple[list, np.ndarray]":
     frame carries a LOCAL table; use decode_gif_frames_rgb to resolve
     per-frame colors).
 
-    Covers what encode_gif emits plus plain single/multi-frame GIFs:
-    global color table, per-frame local color tables (r11 — the
-    optimized-animation layout real GIF corpora are full of),
-    table-less index streams, Appendix-E interlaced frames (r11),
-    and PARTIAL-FRAME images with disposal methods 0-3 and
-    transparency (r11 — the delta-encoded animations GIF optimizers
-    emit): each emitted frame is the full logical screen AFTER
-    compositing that image (paint subrect, transparent indices leave
-    the canvas untouched; disposal then keeps / restores background /
-    restores previous per GIF89a §23). Full-frame GIFs compose to
-    exactly their raw rasters, so the pre-r11 contract is unchanged.
+    Covers global and per-frame local color tables, table-less index
+    streams, Appendix-E interlaced frames and partial-frame images
+    with disposal methods 0-3 and transparency: each emitted frame
+    is the full logical screen after compositing that image (see
+    _gif_composites). Full-frame GIFs compose to exactly their raw
+    rasters.
     """
-    import numpy as np
-
-    images, palette, (sw, sh, bg) = _parse_gif(payload)
-    frames = []
-    canvas = np.full((sh, sw), bg, np.uint8)
-    for im in images:
-        before = canvas.copy() if im["disposal"] == 3 else None
-        y0, x0 = im["y0"], im["x0"]
-        h, w = im["idx"].shape
-        region = canvas[y0 : y0 + h, x0 : x0 + w]
-        if im["transparent"] is not None:
-            m = im["idx"] != im["transparent"]
-            region[m] = im["idx"][m]
-        else:
-            region[...] = im["idx"]
-        frames.append(canvas.copy())
-        if im["disposal"] == 2:  # restore background
-            canvas[y0 : y0 + h, x0 : x0 + w] = bg
-        elif im["disposal"] == 3:  # restore previous
-            canvas = before
-    return frames, palette
+    parsed = _parse_gif(payload)
+    return list(_gif_composites(parsed, rgb=False)), parsed[1]
 
 
 def decode_gif_frames_rgb(payload: bytes) -> "list[np.ndarray]":
@@ -3830,40 +3560,48 @@ def decode_gif_frames_rgb(payload: bytes) -> "list[np.ndarray]":
     a stream has no defined colors. The color-true face of
     decode_gif_frames for perceptual pipelines (mm15's dHash luma,
     viz)."""
-    return list(_gif_rgb_composites(payload))
+    return list(_gif_composites(_parse_gif(payload), rgb=True))
 
 
-def _gif_rgb_composites(payload: bytes):
-    """Yield decode_gif_frames_rgb's frames one at a time, so a caller
-    that needs only the first composites only the first image."""
+def _gif_composites(parsed, rgb: bool):
+    """Yield the logical screen after each image of a parsed GIF
+    (GIF89a §23): paint the image's subrect, where transparent
+    indices leave the canvas untouched, then dispose — keep, restore
+    the background, or restore the previous screen. The canvas holds
+    color-table indices, or with ``rgb`` the colors of each image's
+    own table. A generator, so a caller that needs only the first
+    frame composites only the first image."""
     import numpy as np
 
-    images, palette, (sw, sh, bg) = _parse_gif(payload)
-    bg_rgb = (
-        palette[bg] if palette is not None else np.zeros(3, np.uint8)
-    )
-    canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).astype(np.uint8)
+    images, palette, (sw, sh, bg) = parsed
+    if rgb:
+        bg = palette[bg] if palette is not None else np.zeros(3, np.uint8)
+    canvas = np.full((sh, sw) + np.shape(bg), bg, np.uint8)
     for im in images:
-        table = im["local"] if im["local"] is not None else palette
-        if table is None:
-            raise ValueError(
-                "GIF frame has neither a local nor a global color table"
-            )
-        if int(im["idx"].max(initial=0)) >= table.shape[0]:
-            raise ValueError("GIF index exceeds its color table")
+        idx = im["idx"]
+        pixels = idx
+        if rgb:
+            table = im["local"] if im["local"] is not None else palette
+            if table is None:
+                raise ValueError(
+                    "GIF frame has neither a local nor a global color table"
+                )
+            if int(idx.max(initial=0)) >= table.shape[0]:
+                raise ValueError("GIF index exceeds its color table")
+            pixels = table[idx]
         before = canvas.copy() if im["disposal"] == 3 else None
         y0, x0 = im["y0"], im["x0"]
-        h, w = im["idx"].shape
+        h, w = idx.shape
         region = canvas[y0 : y0 + h, x0 : x0 + w]
         if im["transparent"] is not None:
-            m = im["idx"] != im["transparent"]
-            region[m] = table[im["idx"][m]]
+            m = idx != im["transparent"]
+            region[m] = pixels[m]
         else:
-            region[...] = table[im["idx"]]
+            region[...] = pixels
         yield canvas.copy()
-        if im["disposal"] == 2:
-            canvas[y0 : y0 + h, x0 : x0 + w] = bg_rgb
-        elif im["disposal"] == 3:
+        if im["disposal"] == 2:  # restore background
+            canvas[y0 : y0 + h, x0 : x0 + w] = bg
+        elif im["disposal"] == 3:  # restore previous
             canvas = before
 
 

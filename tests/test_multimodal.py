@@ -571,6 +571,32 @@ def test_jpeg_progressive_invalid_sa_header_rejected():
             )
 
 
+def test_jpeg_quant_table_latched_at_first_scan():
+    """A component's quant table is the one defined when its first
+    scan starts (libjpeg's latch_quant_tables): a DQT that redefines
+    slot 0 before the last progressive scan must not change the
+    decode. In the sequential control the DQT comes before the only
+    scan, so it must."""
+    from big_data_bowl_spark.multimodal.media import _decode_jpeg, encode_jpeg
+
+    img = np.random.default_rng(61).integers(0, 256, (16, 24), np.uint8)
+    dqt = b"\xff\xdb\x00\x43\x00" + bytes([2] * 64)
+
+    def spliced(payload):
+        i = payload.rindex(b"\xff\xda")
+        return payload[:i] + dqt + payload[i:]
+
+    for kw in (dict(), dict(successive=True)):
+        payload = encode_jpeg(img, quant=[1] * 64, progressive=True, **kw)
+        assert np.array_equal(
+            _decode_jpeg(spliced(payload)), _decode_jpeg(payload)
+        ), kw
+    payload = encode_jpeg(img, quant=[1] * 64)
+    assert not np.array_equal(
+        _decode_jpeg(spliced(payload)), _decode_jpeg(payload)
+    )
+
+
 def test_jpeg_partially_interleaved_scans_roundtrip():
     """r11 seam closure: 1 < Ns < Nf. A color stream split as
     ([Y, Cb] interleaved, [Cr] non-interleaved) — and the reverse
@@ -1682,9 +1708,9 @@ def test_mm17_peak_detection_exact(spark, sf_dir):
 
 
 def test_bmp_rle8_truncation_raises_value_error():
-    """RLE8 payloads cut mid-delta or mid-absolute-run must raise the
-    documented ValueError, not IndexError (the GIF walkers' contract,
-    applied to BMP)."""
+    """RLE8 and RLE4 payloads cut mid-delta or mid-absolute-run must
+    raise the documented ValueError, not IndexError (the GIF walkers'
+    contract, applied to BMP)."""
     import struct
 
     import pytest
@@ -1692,7 +1718,7 @@ def test_bmp_rle8_truncation_raises_value_error():
     w, h = 6, 3
     palette = b"".join(bytes([i, i, i, 0]) for i in range(256))
 
-    def bmp(rle: bytes) -> bytes:
+    def bmp(rle: bytes, bpp: int = 8, compression: int = 1) -> bytes:
         data_offset = 14 + 40 + len(palette)
         hdr = (
             b"BM"
@@ -1700,7 +1726,7 @@ def test_bmp_rle8_truncation_raises_value_error():
                 "<IHHI", data_offset + len(rle), 0, 0, data_offset
             )
             + struct.pack("<Iii", 40, w, h)
-            + struct.pack("<HHI", 1, 8, 1)
+            + struct.pack("<HHI", 1, bpp, compression)
             + struct.pack("<IiiII", len(rle), 0, 0, 256, 0)
         )
         return hdr + palette + rle
@@ -1714,6 +1740,10 @@ def test_bmp_rle8_truncation_raises_value_error():
     # absolute mode announcing 5 literals but carrying 2
     with pytest.raises(ValueError, match="truncated BMP RLE8"):
         decode_payload(bmp(bytes([0, 5, 7, 7])), "bmp", w, h)
+    # the same three cuts in BI_RLE4 (5 literals need 3 bytes)
+    for rle in ([4, 1, 0, 2], [4, 1, 0, 2, 1], [0, 5, 7]):
+        with pytest.raises(ValueError, match="truncated BMP RLE4"):
+            decode_payload(bmp(bytes(rle), 4, 2), "bmp", w, h)
 
 
 def test_play_frames_reference_orientation(spark):
@@ -2738,7 +2768,8 @@ def test_decode_dispatch_fails_closed_all_formats():
     # header dimensions that claim a multi-gigapixel raster, a GIF
     # whose frames x screen does, a GIF LZW stream and a PNG IDAT that
     # expand far past their image size, must fail with ValueError
-    # before the decoder allocates the raster; decoded in a
+    # before the decoder allocates the raster, and an MP4 sample count
+    # no box bounds must parse to stats, [] or ValueError; run in a
     # child process whose address space is capped at 4e9 bytes, so an
     # unchecked allocation surfaces as MemoryError instead of paging
     import os
@@ -2829,6 +2860,18 @@ def test_decode_dispatch_fails_closed_all_formats():
             + b"\x08" + blocks + b"\x00\x3b"
         )
 
+    def box(typ, body):
+        return struct.pack(">I", 8 + len(body)) + typ + body
+
+    def mp4_stsz_flood(*tables):
+        # moov/trak/mdia/minf/stbl/stsz of constant size 1 declaring
+        # 2^32 - 1 samples: a 32-bit count that no box bounds
+        tree = box(b"stsz", struct.pack(">III", 0, 1, 0xFFFFFFFF))
+        tree += b"".join(tables)
+        for typ in (b"stbl", b"minf", b"mdia", b"trak", b"moov"):
+            tree = box(typ, tree)
+        return tree
+
     baseline = encode_jpeg(img, quant=[1] * 64)
     prog = encode_jpeg(img, quant=[1] * 64, progressive=True)
     one_px = np.zeros((1, 1), np.uint8)
@@ -2851,31 +2894,57 @@ def test_decode_dispatch_fails_closed_all_formats():
         ("png", png_bomb()),
     ]
     wide_only = [("gif", gif_screen(0xFFFF, 9))]  # 0.6 Mpx: decodes
+    # each mp4 input runs through both sample-table parsers
+    empty = struct.pack(">II", 0, 0)
+    mp4 = [
+        ("mp4", mp4_stsz_flood()),
+        ("mp4", mp4_stsz_flood(box(b"stsc", empty), box(b"stco", empty))),
+    ]
     child = (
         "import pickle, resource, sys\n"
         "resource.setrlimit(resource.RLIMIT_AS, (4_000_000_000,) * 2)\n"
-        "from big_data_bowl_spark.multimodal.media import decode_payload\n"
+        "from big_data_bowl_spark.multimodal import media\n"
         "out = []\n"
         "for fmt, payload in pickle.load(sys.stdin.buffer):\n"
-        "    try:\n"
-        "        decode_payload(payload, fmt, 11, 9)\n"
-        "        out.append('ok')\n"
-        "    except Exception as e:\n"
-        "        out.append(type(e).__name__)\n"
-        "print(','.join(out))\n"
+        "    def image(payload, fmt=fmt):\n"
+        "        media.decode_payload(payload, fmt, 11, 9)\n"
+        "        return 'ok'\n"
+        "    calls = [image]\n"
+        "    if fmt == 'mp4':\n"
+        "        calls = [\n"
+        "            media.parse_mp4_sample_index,\n"
+        "            media.parse_mp4_sample_ranges,\n"
+        "        ]\n"
+        "    for call in calls:\n"
+        "        try:\n"
+        "            out.append(call(payload))\n"
+        "        except Exception as e:\n"
+        "            out.append(type(e).__name__)\n"
+        "pickle.dump(out, sys.stdout.buffer)\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     res = subprocess.run(
         [sys.executable, "-c", child],
-        input=pickle.dumps(oversized + wide_only),
+        input=pickle.dumps(oversized + wide_only + mp4),
         capture_output=True,
         cwd=repo,
         env={**os.environ, "OPENBLAS_NUM_THREADS": "1"},
         timeout=300,
     )
     assert res.returncode == 0, res.stderr.decode()[-2000:]
-    outcomes = res.stdout.decode().strip().split(",")
-    assert outcomes == ["ValueError"] * len(oversized) + ["ok"], outcomes
+    outcomes = pickle.loads(res.stdout)
+    stats = [
+        {
+            "track_idx": 0,
+            "n_samples": 0xFFFFFFFF,
+            "total_bytes": 0xFFFFFFFF,
+            "max_bytes": 1,
+            "min_bytes": 1,
+        }
+    ]
+    assert outcomes == ["ValueError"] * len(oversized) + ["ok"] + [
+        stats, [], stats, "ValueError"
+    ], outcomes
 
 
 # ---------------------------------------------------------------------------

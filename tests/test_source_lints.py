@@ -428,3 +428,32 @@ def test_mllib_lives_in_ml_only():
         if _imports_pyspark_ml(node)
     ]
     assert hits and all(h.startswith("ml/") for h in hits), hits
+
+
+def test_jpeg_decoder_has_one_idct():
+    """Sequential and progressive JPEG scans fill one coefficient grid
+    per component, and one batched dequantize + IDCT runs at EOI:
+    _dct_matrix() is called once across _decode_jpeg and the
+    media.py functions it reaches."""
+    tree = ast.parse((ROOT / "multimodal" / "media.py").read_text())
+    defs = {
+        n.name: n
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+    }
+
+    def called(node):
+        return [
+            c.func.id
+            for c in ast.walk(node)
+            if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
+        ]
+
+    reached, todo = set(), ["_decode_jpeg"]
+    while todo:
+        name = todo.pop()
+        if name in defs and name not in reached and name != "_dct_matrix":
+            reached.add(name)
+            todo += called(defs[name])
+    n = sum(called(defs[name]).count("_dct_matrix") for name in reached)
+    assert n == 1, (n, sorted(reached))
