@@ -2874,13 +2874,27 @@ def parse_mp4_sample_ranges(payload: bytes) -> list:
             fi = frag_count.get(idx, 0)
             frag_count[idx] = fi + 1
             next_data = None  # running cursor for offset-less truns
-            for t3, d0, _d1 in _mp4_children(payload, c0, c1):
+            for t3, d0, d1 in _mp4_children(payload, c0, c1):
                 if t3 != b"trun":
                     continue
+                if d0 + 8 > d1:
+                    raise ValueError("trun box too short for its header")
                 tr_flags = (
                     struct.unpack_from(">I", payload, d0)[0] & 0xFFFFFF
                 )
                 count = struct.unpack_from(">I", payload, d0 + 4)[0]
+                # every optional header field and per-sample field is
+                # 4 bytes: the count is bounded by the trun box, and
+                # (samples being byte ranges of the file) by the file
+                head = 4 * bin(tr_flags & 0x5).count("1")
+                per_sample = 4 * bin(tr_flags & 0xF00).count("1")
+                if d0 + 8 + head + per_sample * count > d1:
+                    raise ValueError("trun sample_count overruns the trun box")
+                size = None if tr_flags & 0x200 else default_size
+                if count * max(size or 0, 1) > len(payload):
+                    raise ValueError(
+                        "fragment sample byte range overruns the file"
+                    )
                 off = d0 + 8
                 if tr_flags & 0x1:
                     data_offset = struct.unpack_from(">i", payload, off)[0]
@@ -2898,7 +2912,6 @@ def parse_mp4_sample_ranges(payload: bytes) -> list:
                 if tr_flags & 0x4:
                     off += 4  # first_sample_flags
                 for _ in range(count):
-                    size = default_size
                     if tr_flags & 0x100:
                         off += 4  # sample_duration
                     if tr_flags & 0x200:

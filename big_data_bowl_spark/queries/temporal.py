@@ -280,7 +280,7 @@ def t07_streaming_tumbling(spark: SparkSession, sf_dir: str):
     "(applyInPandasWithState sessionization, streaming/stateful.py) "
     "gated on a FULL value oracle: closed sessions must hash-match "
     "the batch gaps-and-islands SQL minus each user's still-open "
-    "final session (which stays in O(1) state awaiting its timeout). "
+    "final session (which stays open in O(1) state). "
     "State: one tuple per key; emission on session close",
 )
 def t08_streaming_sessionization(spark: SparkSession, sf_dir: str):
@@ -1455,6 +1455,35 @@ def t24_streaming_merge_sink(spark: SparkSession, sf_dir: str):
     )
 
 
+def _running_stats_upsert(spark: SparkSession, sf_dir: str, sink: str):
+    """Drain running_user_stats over the events stream into `sink` and
+    keep each user's max-n_events emission (n_events strictly
+    increases across a key's emissions): the batch per-user
+    (n_events, n_high, last_us) however the backlog splits."""
+    from ..streaming.stateful import running_user_stats
+    from ..streaming.windows import read_events_stream, run_to_memory
+
+    stream = read_events_stream(spark, sf_dir).select(
+        "user_id", "ts", "value"
+    )
+    run_to_memory(
+        running_user_stats(stream),
+        sink,
+        output_mode="append",
+        n_partitions=8,
+    )
+    return (
+        spark.table(sink)
+        .groupBy("user_id")
+        .agg(
+            F.max_by(
+                F.struct("n_events", "n_high", "last_us"), "n_events"
+            ).alias("s")
+        )
+        .select("user_id", "s.n_events", "s.n_high", "s.last_us")
+    )
+
+
 @register(
     "t25_stateful_running_stats",
     oracle=f"""
@@ -1466,75 +1495,24 @@ def t24_streaming_merge_sink(spark: SparkSession, sf_dir: str):
     FROM events
     GROUP BY user_id
     """,
-    note="T25 arbitrary stateful streaming on Spark 4's "
-    "transformWithStateInPandas (the successor API to t16's "
-    "applyInPandasWithState: named typed state handles + explicit "
-    "lifecycle): per-user running (n_events, n_high, last_ts) folded "
-    "across micro-batches, each batch's emission superseding the "
-    "last; the query applies the max-n_events upsert so the result "
-    "equals the batch aggregate however the backlog splits. RUNTIME "
-    "CAPABILITY DISPATCH (VERDICT r7 item 4): transformWithState's "
-    "Python state server speaks protobuf, so where google.protobuf "
-    "is absent (this test container) the query runs "
-    "running_user_stats_legacy — the SAME emission contract on the "
-    "legacy API — keeping the semantics driver-verifiable in every "
-    "environment; tests/test_stateful.py additionally drives the "
-    "Spark-4 API path end-to-end wherever protobuf imports. O(1) "
-    "state per key; shuffle on user_id only.",
+    note="T25 arbitrary stateful streaming: per-user (n_events, "
+    "n_high, last_ts) — event count, count of value > 5.0 and latest "
+    "event time — folded across micro-batches by applyInPandasWithState "
+    "(streaming/stateful.py running_user_stats). Each batch's emission "
+    "supersedes the last; the query keeps each user's max-n_events "
+    "emission, so the result equals the batch aggregate however the "
+    "backlog splits. The fold emits last_us as epoch-micros LONG and "
+    "the timestamp is cast in-plan (timestamp_micros), never by "
+    "pandas in the worker. O(1) state per key; shuffle on user_id "
+    "only.",
 )
 def t25_stateful_running_stats(spark: SparkSession, sf_dir: str):
-    from ..streaming.stateful import (
-        has_transform_with_state_runtime,
-        rocksdb_state_provider,
-        running_user_stats,
-        running_user_stats_legacy,
-    )
-    from ..streaming.windows import read_events_stream, run_to_memory
-
-    stream = read_events_stream(spark, sf_dir).select(
-        "user_id", "ts", "value"
-    )
-    op = (
-        running_user_stats
-        if has_transform_with_state_runtime()
-        else running_user_stats_legacy
-    )
-    if op is running_user_stats:
-        # Spark-4 path: per-handle column families need RocksDB
-        with rocksdb_state_provider(spark):
-            run_to_memory(
-                op(stream),
-                "t25_stats_sink",
-                output_mode="update",
-                n_partitions=8,
-            )
-    else:
-        run_to_memory(
-            op(stream),
-            "t25_stats_sink",
-            output_mode="append",
-            n_partitions=8,
-        )
-    sink = spark.table("t25_stats_sink")
-    # the upsert step: per user keep the max-n_events emission
-    # (n_events strictly increases across a key's emissions). The
-    # stateful op emits last_us as epoch-micros LONG; the timestamp is
-    # materialized HERE by Spark SQL (timestamp_micros), so the value
-    # on the oracle hash path is produced the same way as every other
-    # timestamp query — not by pandas→Arrow conversion in the worker.
-    return (
-        sink.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "n_high", "last_us"), "n_events"
-            ).alias("s")
-        )
-        .select(
-            "user_id",
-            "s.n_events",
-            "s.n_high",
-            F.timestamp_micros(F.col("s.last_us")).alias("last_ts"),
-        )
+    stats = _running_stats_upsert(spark, sf_dir, "t25_stats_sink")
+    return stats.select(
+        "user_id",
+        "n_events",
+        "n_high",
+        F.timestamp_micros(F.col("last_us")).alias("last_ts"),
     )
 
 
@@ -1549,55 +1527,14 @@ def t25_stateful_running_stats(spark: SparkSession, sf_dir: str):
     FROM events
     GROUP BY user_id
     """,
-    note="T25's bisection twin (VERDICT r8 item 1): identical "
-    "stateful fold but last_us stays a plain epoch-micros LONG end "
-    "to end — no timestamp anywhere on the hash path. If t25 ever "
-    "hash-mismatches again while t25b is green, the divergence is "
-    "in timestamp normalization; if both mismatch, it's the fold.",
+    note="T25 with last_us kept as plain epoch-micros LONG end to end: "
+    "per-user (n_events, n_high, last_us) from the same fold and "
+    "upsert, with no timestamp anywhere on the hash path. If t25 "
+    "mismatches while t25b passes, the divergence is in timestamp "
+    "normalization; if both mismatch, it is in the fold.",
 )
 def t25b_stateful_running_stats_us(spark: SparkSession, sf_dir: str):
-    from ..streaming.stateful import (
-        has_transform_with_state_runtime,
-        rocksdb_state_provider,
-        running_user_stats,
-        running_user_stats_legacy,
-    )
-    from ..streaming.windows import read_events_stream, run_to_memory
-
-    stream = read_events_stream(spark, sf_dir).select(
-        "user_id", "ts", "value"
-    )
-    op = (
-        running_user_stats
-        if has_transform_with_state_runtime()
-        else running_user_stats_legacy
-    )
-    if op is running_user_stats:
-        # Spark-4 path: per-handle column families need RocksDB
-        with rocksdb_state_provider(spark):
-            run_to_memory(
-                op(stream),
-                "t25b_stats_sink",
-                output_mode="update",
-                n_partitions=8,
-            )
-    else:
-        run_to_memory(
-            op(stream),
-            "t25b_stats_sink",
-            output_mode="append",
-            n_partitions=8,
-        )
-    sink = spark.table("t25b_stats_sink")
-    return (
-        sink.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "n_high", "last_us"), "n_events"
-            ).alias("s")
-        )
-        .select("user_id", "s.n_events", "s.n_high", "s.last_us")
-    )
+    return _running_stats_upsert(spark, sf_dir, "t25b_stats_sink")
 
 
 @register(
@@ -2060,8 +1997,7 @@ def t33_streaming_reach(spark: SparkSession, sf_dir: str):
 
 
 # ---------------------------------------------------------------------------
-# T34: per-user x event-type running counts via MapState (Spark-4
-# composite state — the API surface t25's ValueState doesn't touch)
+# T34: per-user x event-type running counts
 # ---------------------------------------------------------------------------
 
 
@@ -2072,47 +2008,26 @@ def t33_streaming_reach(spark: SparkSession, sf_dir: str):
     FROM events
     GROUP BY user_id, event_type
     """,
-    note="T34 arbitrary stateful streaming, MapState face: per-user "
-    "keyed sub-map (event_type -> count) on Spark 4's "
-    "transformWithStateInPandas — the composite-state shape (user x "
-    "action counters, device x error codes) every per-entity feature "
-    "map needs, which t25's single ValueState doesn't exercise and "
-    "the legacy API can only fake by widening the group key. Same "
-    "capability dispatch as t25: MapState where google.protobuf "
-    "imports, the key-widened applyInPandasWithState spelling "
-    "otherwise — identical emission contract (Update-mode re-emission "
-    "of the user's map, counts strictly non-decreasing), so the "
-    "max-n upsert recovers the batch GROUP BY under ANY micro-batch "
-    "split. State O(|event types|) per user; shuffle on user_id only.",
+    note="T34 arbitrary stateful streaming: per (user_id, event_type) "
+    "event count n, folded across micro-batches by "
+    "applyInPandasWithState (streaming/stateful.py per_type_counts) "
+    "with one count of state per key. Each batch a key appears in "
+    "re-emits its count, which strictly increases, so the max-n "
+    "upsert recovers the batch GROUP BY under any micro-batch split.",
 )
 def t34_stateful_type_counts(spark: SparkSession, sf_dir: str):
-    from ..streaming.stateful import (
-        has_transform_with_state_runtime,
-        per_type_counts,
-        per_type_counts_legacy,
-        rocksdb_state_provider,
-    )
+    from ..streaming.stateful import per_type_counts
     from ..streaming.windows import read_events_stream, run_to_memory
 
     stream = read_events_stream(spark, sf_dir).select(
         "user_id", "event_type"
     )
-    if has_transform_with_state_runtime():
-        # Spark-4 path: per-handle column families need RocksDB
-        with rocksdb_state_provider(spark):
-            run_to_memory(
-                per_type_counts(stream),
-                "t34_counts_sink",
-                output_mode="update",
-                n_partitions=8,
-            )
-    else:
-        run_to_memory(
-            per_type_counts_legacy(stream),
-            "t34_counts_sink",
-            output_mode="append",
-            n_partitions=8,
-        )
+    run_to_memory(
+        per_type_counts(stream),
+        "t34_counts_sink",
+        output_mode="append",
+        n_partitions=8,
+    )
     sink = spark.table("t34_counts_sink")
     # upsert: counts strictly increase across a key's emissions
     return sink.groupBy("user_id", "event_type").agg(
@@ -2159,42 +2074,30 @@ _T35_GAP_MS = _T35_GAP_MIN * 60_000
        OR epoch_us(session_last) // 1000 + {_T35_GAP_MS}
             < epoch_us(mx) // 1000 - {_T35_WM_MS}
     """,
-    note="T35 timer-closed sessionization, driver-checkable: a "
-    "session emits when the NEXT event reveals the gap (inline) or "
-    "when the event-time watermark passes last + gap with no further "
-    "events (registerTimer/handleExpiredTimer on Spark 4's "
-    "transformWithStateInPandas; GroupStateTimeout.EventTimeTimeout "
-    "on the legacy fallback where google.protobuf is absent — same "
-    "capability dispatch as t25/t34). The drained result is exactly "
-    "expressible in SQL: every gaps-and-islands session EXCEPT each "
-    "user's final one, which emits only if its gap elapsed before "
-    "the final watermark (MAX(ts) - delay) — so the oracle checks "
-    "BOTH close paths with full values. Boundary contract (r11, "
-    "ADVICE): both stream arms close a final session iff "
-    "watermark_ms > floor(last_us/1000) + gap_ms — the legacy "
-    "EventTimeTimeout fires strictly past its expiry while "
-    "transformWithState fires inclusively AT it (observed at exact "
-    "ms equality), so the TWS arm arms its timer one ms later to "
-    "equalize — and the oracle applies the identical ms-floored "
-    "strict inequality, so a last event landing in the exact 1 ms "
-    "equality window stays OPEN everywhere instead of flaking the "
-    "gate (pinned by test_timer_sessions_millisecond_boundary_"
-    "window). Both timeout flavors used "
-    "here are deterministic functions of the STREAM (the watermark), "
-    "never wall clock; correctness inherits the watermark contract "
-    "itself (arrival disorder bounded by the delay — Spark drops "
-    "later rows before they reach the operator, like every "
-    "event-time operator t07+). State O(1) per key + one timer; "
-    "shuffle on user_id only; sessions never re-emit (state clears "
-    "on close).",
+    note="T35 timer-closed sessionization: per user, every session "
+    "(session_start, session_last, n_events) with a 10-minute gap "
+    "rule, closed either when the NEXT event reveals the gap or when "
+    "the event-time watermark passes last + gap with no further "
+    "events (applyInPandasWithState with EventTimeTimeout, "
+    "streaming/stateful.py timer_closed_sessions). The drained result "
+    "is exactly expressible in SQL: every gaps-and-islands session "
+    "EXCEPT each user's final one, which emits only if its gap "
+    "elapsed before the final watermark (MAX(ts) - delay) — so the "
+    "oracle checks BOTH close paths with full values. Boundary: the "
+    "timeout fires only when the watermark strictly exceeds its "
+    "timestamp, so a final session closes iff watermark_ms > "
+    "floor(last_us/1000) + gap_ms, and the oracle applies the same "
+    "ms-floored strict inequality (pinned by "
+    "test_timer_sessions_millisecond_boundary_window). The timeout "
+    "follows the STREAM (the watermark), never wall clock; "
+    "correctness inherits the watermark contract itself (arrival "
+    "disorder bounded by the delay — Spark drops later rows before "
+    "they reach the operator, like every event-time operator t07+). "
+    "State O(1) per key; shuffle on user_id only; sessions never "
+    "re-emit (state clears on close).",
 )
 def t35_timer_closed_sessions(spark: SparkSession, sf_dir: str):
-    from ..streaming.stateful import (
-        has_transform_with_state_runtime,
-        rocksdb_state_provider,
-        timer_closed_sessions,
-        timer_closed_sessions_legacy,
-    )
+    from ..streaming.stateful import timer_closed_sessions
     from ..streaming.windows import read_events_stream, run_to_memory
 
     stream = (
@@ -2202,23 +2105,12 @@ def t35_timer_closed_sessions(spark: SparkSession, sf_dir: str):
         .select("user_id", "ts")
         .withWatermark("ts", _T35_WM)
     )
-    if has_transform_with_state_runtime():
-        with rocksdb_state_provider(spark):
-            run_to_memory(
-                timer_closed_sessions(stream, gap_minutes=_T35_GAP_MIN),
-                "t35_sessions_sink",
-                output_mode="update",
-                n_partitions=8,
-            )
-    else:
-        run_to_memory(
-            timer_closed_sessions_legacy(
-                stream, gap_minutes=_T35_GAP_MIN
-            ),
-            "t35_sessions_sink",
-            output_mode="append",
-            n_partitions=8,
-        )
+    run_to_memory(
+        timer_closed_sessions(stream, gap_minutes=_T35_GAP_MIN),
+        "t35_sessions_sink",
+        output_mode="append",
+        n_partitions=8,
+    )
     sink = spark.table("t35_sessions_sink")
     # timestamps materialized in-plan from the LONG emissions — the
     # t25 discipline: nothing on the hash path converts via pandas

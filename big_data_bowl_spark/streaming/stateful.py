@@ -1,21 +1,22 @@
-"""Custom stateful streaming operator: per-key sessionization via
-``applyInPandasWithState``.
+"""Custom stateful streaming operators on ``applyInPandasWithState``.
 
-Spark's built-in streaming ``session_window`` covers the common case;
-this operator is the EXTENSIBILITY surface for session logic the
-built-in can't express (per-key dynamic gaps, session-scoped
-aggregates, early emission rules). Semantics exactly mirror the batch
-t03 query (queries/temporal.py): a new session starts when the gap
-since the previous event is >= `gap`; session_end = last_ts + gap
-(exclusive).
+Spark's built-in streaming aggregates cover the common cases; these
+operators are the EXTENSIBILITY surface for per-key logic the
+built-ins can't express (session rules, changelog compaction, running
+folds, bounded recency buffers). They share one contract:
 
-State design for an unbounded stream:
-- State per key is ONE open session tuple (start, last, n, sum) —
-  O(1) per key regardless of history length.
-- Closed sessions emit as soon as the closing event arrives (append
-  mode); the open session emits on processing-time timeout, so state
-  for idle keys is evicted instead of accumulating forever.
-- Shuffle is on the group key only; event payloads stream through
+- State per key is one fixed-width row — O(1) per key (O(keep) for
+  recent_values_digest's bounded arrays), however long the stream.
+- Output mode is append: a call emits rows for the key it folded, in
+  the micro-batch that produced them. Operators whose emissions
+  supersede earlier ones carry a strictly increasing column, so a
+  max-by upsert downstream recovers the final value under any
+  micro-batch split.
+- Timeouts are off (``NoTimeout``) except in timer_closed_sessions,
+  whose ``EventTimeTimeout`` follows the watermark, not wall clock, so
+  a replayed stream closes the same sessions. Every other fn still
+  drains ``hasTimedOut`` calls, per the API contract.
+- The shuffle is on the group key only; event payloads stream through
   Arrow batches.
 """
 
@@ -26,58 +27,28 @@ from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-
 US_PER_MIN = 60_000_000
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 10,
-    timeout_ms: int | None = None,
-) -> DataFrame:
-    """Stateful sessionization of a (streaming) events DataFrame with
-    columns (user_id, ts). Emits closed sessions as their closing
-    event arrives; each key's open session stays in state.
+def _ts_us(pdf: "pd.DataFrame") -> "pd.Series":
+    """The ``ts`` column as epoch micros. Unit-aware: the Arrow bridge
+    may hand datetime64[ns] OR [us], and assuming ns and dividing by
+    1000 silently shrinks every gap 1000x on a us bridge."""
+    return pdf["ts"].astype("datetime64[us]").astype("int64")
 
-    ``timeout_ms`` enables processing-time timeouts that flush and
-    evict idle keys' open sessions — use it on LIVE streams. Leave it
-    None for bounded availableNow backfills: with timeouts armed, the
-    microbatch loop keeps scheduling state-cleanup batches and an
-    availableNow drain never terminates (observed on Spark 4.1)."""
+
+def sessionize(events: DataFrame, gap_minutes: int = 10) -> DataFrame:
+    """Stateful sessionization of a (streaming) events DataFrame with
+    columns (user_id, ts), mirroring the batch t03 query: a new session
+    starts when the gap since the previous event is >= `gap`, and
+    session_end = last_ts + gap (exclusive). Emits each closed session
+    as its closing event arrives; each key's open session stays in
+    state as (start, last, n)."""
     gap_us = gap_minutes * US_PER_MIN
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
     def fn(
         key: tuple[Any, ...],
@@ -87,50 +58,29 @@ def sessionize(
         import pandas as pd
 
         (user_id,) = key
-        closed: list[tuple[int, int, int, int]] = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                start, last, n = state.get
-                closed.append((user_id, start, last + gap_us, n))
-                state.remove()
-            # consume the (empty) iterator per the API contract
+        if state.hasTimedOut:  # NoTimeout: unreachable, API contract
             for _ in pdfs:
                 pass
-        else:
-            ts_us: list[int] = []
-            for pdf in pdfs:
-                # unit-aware like latest_per_key (the Arrow bridge may
-                # hand datetime64[ns] OR [us]; assuming ns and
-                # dividing by 1000 silently collapses every gap 1000x
-                # on a us bridge)
-                ts_us.extend(
-                    pdf["ts"]
-                    .astype("datetime64[us]")
-                    .astype("int64")
-                    .tolist()
-                )
-            ts_us.sort()
-            if state.exists:
-                start, last, n = state.get
+            return
+        ts_us: list[int] = []
+        for pdf in pdfs:
+            ts_us.extend(_ts_us(pdf).tolist())
+        ts_us.sort()
+        start, last, n = state.get if state.exists else (-1, -1, 0)
+        closed: list[tuple[int, int, int, int]] = []
+        for t_us in ts_us:
+            if n == 0:
+                start = last = t_us
+                n = 1
+            elif t_us - last >= gap_us:  # >= : t03's boundary rule
+                closed.append((user_id, start, last + gap_us, n))
+                start = last = t_us
+                n = 1
             else:
-                start = last = -1
-                n = 0
-            for t_us in ts_us:
-                if n == 0:
-                    start = last = t_us
-                    n = 1
-                elif t_us - last >= gap_us:  # >= : t03's boundary rule
-                    closed.append((user_id, start, last + gap_us, n))
-                    start = last = t_us
-                    n = 1
-                else:
-                    last = t_us
-                    n += 1
-            if n > 0:
-                state.update((start, last, n))
-                if timeout_ms is not None:
-                    state.setTimeoutDuration(timeout_ms)
+                last = t_us
+                n += 1
+        if n > 0:
+            state.update((start, last, n))
 
         # yield only when sessions closed: an empty frame has object
         # dtypes that pandas' serializer-side concat warns about (and
@@ -154,33 +104,12 @@ def sessionize(
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=STATE_SCHEMA,
+        outputStructType="user_id long, session_start timestamp, "
+        "session_end timestamp, n_events long",
+        stateStructType="start_us long, last_us long, n long",
         outputMode="append",
-        timeoutConf=timeout_conf,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-CDC_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("latest_value", DoubleType()),
-        StructField("last_seen", TimestampType()),
-        StructField("first_seen", TimestampType()),
-        StructField("n_versions", LongType()),
-    ]
-)
-
-CDC_STATE_SCHEMA = StructType(
-    [
-        StructField("first_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("last_event_id", LongType()),
-        StructField("latest_value", DoubleType()),
-        StructField("n", LongType()),
-    ]
-)
 
 
 def latest_per_key(events: DataFrame) -> DataFrame:
@@ -189,9 +118,7 @@ def latest_per_key(events: DataFrame) -> DataFrame:
     (ties broken by event_id) plus version lineage (first_seen,
     n_versions), folding incrementally across micro-batches.
 
-    State per key is ONE fixed-width tuple — O(live keys), independent
-    of stream length (same bound as sessionize). Each batch a key
-    appears in emits that key's current compacted row (append mode);
+    Each batch a key appears in emits that key's current compacted row;
     the latest emission per key IS the compaction, which a downstream
     upsert sink (Delta MERGE, foreachBatch) applies idempotently.
     """
@@ -211,10 +138,7 @@ def latest_per_key(events: DataFrame) -> DataFrame:
                 None, None, None, None, 0,
             )
         for pdf in pdfs:
-            # unit-aware: normalize whatever datetime64 resolution the
-            # Arrow bridge handed us (ns or us) to micros, instead of
-            # assuming ns and dividing by 1000
-            ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
+            ts_us = _ts_us(pdf).tolist()
             ids = pdf["event_id"].astype("int64").tolist()
             # preserve nullness: batch d07 (and the shared oracle) keep
             # a NULL value as NULL, so track a None sentinel rather
@@ -253,131 +177,25 @@ def latest_per_key(events: DataFrame) -> DataFrame:
 
     return events.groupBy("user_id", "event_type").applyInPandasWithState(
         fn,
-        outputStructType=CDC_SCHEMA,
-        stateStructType=CDC_STATE_SCHEMA,
+        outputStructType="user_id long, event_type string, "
+        "latest_value double, last_seen timestamp, first_seen timestamp, "
+        "n_versions long",
+        stateStructType="first_us long, last_us long, last_event_id long, "
+        "latest_value double, n long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 def running_user_stats(events: DataFrame) -> DataFrame:
-    """Per-user running aggregates via ``transformWithStateInPandas``
-    — Spark 4's arbitrary-stateful API and the successor to
-    ``applyInPandasWithState`` (which latest_per_key/sessionize use):
-    named TYPED state handles with an explicit lifecycle (init /
-    handleInputRows / close) instead of one opaque state tuple, so an
-    operator can compose ValueState/ListState/MapState and timers.
-
-    Here: one ValueState holding (n_events, n_high, last_event_us)
-    per user, folded across micro-batches and emitted per batch in
-    Update mode — O(1) state per key, the same bound as the legacy
-    API. Output is exactly the batch per-user aggregate however the
-    source splits into batches (each emission supersedes the last;
-    n_events strictly increases, so a downstream upsert keeps the
-    final one).
-
-    ENVIRONMENT GATE: transformWithState's Python state server
-    speaks protobuf, so this operator needs the ``google.protobuf``
-    package at RUNTIME (the build's only stateful API with an extra
-    dependency). The registered t25 query dispatches through
-    has_transform_with_state_runtime(): this operator where protobuf
-    imports, running_user_stats_legacy (identical output contract on
-    applyInPandasWithState) otherwise — so the SEMANTICS face the
-    driver oracle everywhere, and this API path additionally runs
-    end-to-end in tests/test_stateful.py wherever protobuf exists
-    (skipped where absent).
-    """
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg", "n LONG, nh LONG, last_us LONG"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator["pd.DataFrame"], timerValues
-        ) -> Iterator["pd.DataFrame"]:
-            import pandas as pd
-
-            n, nh, last_us = (
-                self._agg.get() if self._agg.exists() else (0, 0, None)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                # NaN > 5.0 is False, matching SQL's NULL handling in
-                # a filtered count
-                nh += int((pdf["value"] > 5.0).sum())
-                ts_us = (
-                    pdf["ts"].astype("datetime64[us]").astype("int64")
-                )
-                mx = int(ts_us.max())
-                if last_us is None or mx > last_us:
-                    last_us = mx
-            self._agg.update((n, nh, last_us))
-            # Emit the timestamp as raw epoch-MICROS LONG: the caller
-            # casts in-plan (F.timestamp_micros) so the timestamp value
-            # on any comparison/hash path is materialized by Spark SQL,
-            # not by pandas→Arrow conversion inside this worker
-            # (VERDICT r8 item 1 — the r8 driver-hash divergence).
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "n_high": [nh],
-                    "last_us": [last_us],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType="user_id long, n_events long, n_high long, "
-        "last_us long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-STATS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("n_high", LongType()),
-        # epoch micros as LONG — casting to timestamp happens in the
-        # caller's plan (F.timestamp_micros), keeping pandas timestamp
-        # conversion off every hash/compare path (VERDICT r8 item 1)
-        StructField("last_us", LongType()),
-    ]
-)
-
-STATS_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("nh", LongType()),
-        StructField("last_us", LongType()),
-    ]
-)
-
-
-def running_user_stats_legacy(events: DataFrame) -> DataFrame:
-    """running_user_stats' semantics on the LEGACY
-    ``applyInPandasWithState`` API: per-user (n_events, n_high,
-    last_ts) folded across micro-batches, one emission per batch a
-    key appears in, each superseding the last (n_events strictly
-    increases, so a downstream max-n_events upsert keeps the final
-    row). Identical output schema and emission contract to the
-    transformWithState version — this is the capability FALLBACK the
-    registered t25 query drops to when ``google.protobuf`` (the
-    transformWithState state-server protocol) is absent at runtime,
-    so the query's semantics are driver-verifiable in every
-    environment while the Spark-4 API path runs wherever its
-    dependency exists.
+    """Per-user running (n_events, n_high, last_us) over (user_id, ts,
+    value), folded across micro-batches: one emission per batch a key
+    appears in, each superseding the last. n_events strictly
+    increases, so a max-n_events upsert yields exactly the batch
+    per-user aggregate. last_us is epoch micros as LONG: the caller
+    casts it in-plan (F.timestamp_micros), so no timestamp on a
+    compare or hash path is produced by pandas→Arrow conversion in
+    the worker.
     """
 
     def fn(
@@ -398,8 +216,7 @@ def running_user_stats_legacy(events: DataFrame) -> DataFrame:
             # NaN > 5.0 is False, matching SQL's NULL handling in a
             # filtered count
             nh += int((pdf["value"] > 5.0).sum())
-            ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
-            mx = int(ts_us.max())
+            mx = int(_ts_us(pdf).max())
             if last_us is None or mx > last_us:
                 last_us = mx
         state.update((n, nh, last_us))
@@ -414,95 +231,19 @@ def running_user_stats_legacy(events: DataFrame) -> DataFrame:
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType=STATS_SCHEMA,
-        stateStructType=STATS_STATE_SCHEMA,
+        outputStructType="user_id long, n_events long, n_high long, "
+        "last_us long",
+        stateStructType="n long, nh long, last_us long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 def per_type_counts(events: DataFrame) -> DataFrame:
-    """Per-user, per-event-type running counts via
-    ``transformWithStateInPandas`` **MapState** — the composite-state
-    face of the Spark-4 API that t25's single ValueState doesn't
-    exercise: one keyed sub-map per user (event_type -> count), the
-    state shape of every per-entity feature map (user x action
-    counters, device x error codes) that the legacy API could only
-    fake by widening the group key.
-
-    Emission contract mirrors t25: Update mode, each batch a user
-    appears in re-emits that user's ENTIRE map (bounded by the
-    event-type domain, not by history), every count strictly
-    non-decreasing — so a max-n upsert per (user_id, event_type)
-    yields exactly the batch GROUP BY however the backlog splits.
-    O(|event types|) state per key; shuffle on user_id only.
-    """
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState(
-                "counts", "event_type STRING", "n LONG"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator["pd.DataFrame"], timerValues
-        ) -> Iterator["pd.DataFrame"]:
-            import pandas as pd
-
-            for pdf in rows:
-                for et, delta in pdf["event_type"].value_counts().items():
-                    prev = (
-                        self._counts.getValue((et,))[0]
-                        if self._counts.containsKey((et,))
-                        else 0
-                    )
-                    self._counts.updateValue((et,), (prev + int(delta),))
-            ets, ns = [], []
-            for (et,), (n,) in self._counts.iterator():
-                ets.append(et)
-                ns.append(n)
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(ets),
-                    "event_type": ets,
-                    "n": ns,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TypeCounts(),
-        outputStructType="user_id long, event_type string, n long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-TYPE_COUNTS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("n", LongType()),
-    ]
-)
-
-TYPE_COUNTS_STATE_SCHEMA = StructType([StructField("n", LongType())])
-
-
-def per_type_counts_legacy(events: DataFrame) -> DataFrame:
-    """per_type_counts' output contract on ``applyInPandasWithState``:
-    the legacy API has no MapState, so the sub-map is flattened into
-    the group key — grouping on (user_id, event_type) with one count
-    ValueState each. Same emissions (strictly increasing n, max-n
-    upsert recovers the batch aggregate), which is exactly the
-    workaround MapState replaces: the key-widening costs a wider
-    shuffle key and loses the per-user atomicity of the map."""
+    """Per-(user_id, event_type) running counts over (user_id,
+    event_type): one count per group key, re-emitted each batch the key
+    appears in. Counts strictly increase, so a max-n upsert per key
+    yields exactly the batch GROUP BY however the backlog splits."""
 
     def fn(
         key: tuple[Any, ...],
@@ -530,255 +271,98 @@ def per_type_counts_legacy(events: DataFrame) -> DataFrame:
 
     return events.groupBy("user_id", "event_type").applyInPandasWithState(
         fn,
-        outputStructType=TYPE_COUNTS_SCHEMA,
-        stateStructType=TYPE_COUNTS_STATE_SCHEMA,
+        outputStructType="user_id long, event_type string, n long",
+        stateStructType="n long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 def recent_values_digest(events: DataFrame, keep: int = 5) -> DataFrame:
-    """Per-user bounded recency buffer via ``transformWithStateInPandas``
-    **ListState** — completing the Spark-4 typed-state matrix the repo
-    exercises (t25 ValueState, t34 MapState, this ListState): the
+    """Per-user bounded recency buffer over (user_id, ts, value): the
     state shape of "last-N events per entity" features (recent
-    purchases, trailing error codes) that a ValueState tuple can't
-    hold and a MapState mis-models (no order, no duplicates).
+    purchases, trailing error codes).
 
-    State per key is the list of the `keep` LARGEST (ts_us, value)
-    pairs seen — a bounded top-N, NOT a grow-forever buffer: each
-    batch appends, re-truncates to `keep`, and rewrites the list, so
-    state is O(keep) per key under unbounded input. Emission per
-    batch: (user_id, n_buffered, sum_recent) where sum_recent sums
-    the buffered values EXACTLY (cents-integer arithmetic: values are
-    scaled by 100 and summed as int64, so the emission is identical
-    under any micro-batch split of the same input — a float fold
-    would not be). The final emission per key equals the batch top-N
-    computed over the whole input, which is what the test asserts.
+    State per key is (n_seen, ts_us[], cents[]) holding the `keep`
+    LARGEST (ts_us, cents) pairs seen — a bounded top-N, not a
+    grow-forever buffer: each batch appends, re-truncates to `keep`
+    and rewrites the arrays, so state is O(keep) per key. Emission
+    per batch: (user_id, n_seen, n_buffered, sum_recent_cents).
+    Values are scaled to integer cents, so the sum is identical under
+    any micro-batch split (a float fold would not be). Neither the
+    buffer size nor its sum is monotonic once the cap binds, so
+    n_seen (total events folded) is the strictly increasing column a
+    max-by upsert orders a key's emissions by; the final emission
+    equals the batch top-N over the whole input.
     """
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class RecentDigest(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # TWO composed handles — the multi-state composition the
-            # Spark-4 API exists for: the bounded buffer (ListState)
-            # plus a monotone total-events counter (ValueState) whose
-            # only job is giving downstream upserts a strictly
-            # increasing version stamp (post-cap, neither the buffer
-            # size nor its sum is monotonic, so neither can order a
-            # key's emissions).
-            self._recent = handle.getListState(
-                "recent", "ts_us LONG, cents LONG"
-            )
-            self._seen = handle.getValueState("seen", "n LONG")
+    def fn(
+        key: tuple[Any, ...],
+        pdfs: Iterator["pd.DataFrame"],
+        state: GroupState,
+    ) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
 
-        def handleInputRows(
-            self, key: tuple, rows: Iterator["pd.DataFrame"], timerValues
-        ) -> Iterator["pd.DataFrame"]:
-            import pandas as pd
+        (user_id,) = key
+        if state.hasTimedOut:  # NoTimeout: unreachable, API contract
+            for _ in pdfs:
+                pass
+            return
+        n_seen, ts_us, cents = state.get if state.exists else (0, [], [])
+        buf = list(zip(ts_us, cents))
+        for pdf in pdfs:
+            new_cents = (pdf["value"] * 100.0).round().astype("int64")
+            buf.extend(zip(_ts_us(pdf).tolist(), new_cents.tolist()))
+            n_seen += len(pdf)
+        # bounded top-N by event time (ties: larger cents first, so the
+        # truncation is a deterministic function of the multiset)
+        buf = sorted(buf, reverse=True)[:keep]
+        state.update(
+            (n_seen, [int(t) for t, _ in buf], [int(c) for _, c in buf])
+        )
+        yield pd.DataFrame(
+            {
+                "user_id": [user_id],
+                "n_seen": [n_seen],
+                "n_buffered": [len(buf)],
+                "sum_recent_cents": [sum(int(c) for _, c in buf)],
+            }
+        )
 
-            buf = list(self._recent.get()) if self._recent.exists() else []
-            (n_seen,) = self._seen.get() if self._seen.exists() else (0,)
-            for pdf in rows:
-                ts_us = pdf["ts"].astype("datetime64[us]").astype("int64")
-                cents = (
-                    (pdf["value"] * 100.0).round().astype("int64")
-                )
-                buf.extend(zip(ts_us.tolist(), cents.tolist()))
-                n_seen += len(pdf)
-            # bounded top-N by event time (ties: larger cents first so
-            # the truncation is a deterministic function of the multiset)
-            buf.sort(key=lambda t: (t[0], t[1]), reverse=True)
-            buf = buf[:keep]
-            self._recent.put([tuple(x) for x in buf])
-            self._seen.update((n_seen,))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_seen": [n_seen],
-                    "n_buffered": [len(buf)],
-                    "sum_recent_cents": [sum(c for _, c in buf)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RecentDigest(),
+    return events.groupBy("user_id").applyInPandasWithState(
+        fn,
         outputStructType="user_id long, n_seen long, n_buffered long, "
         "sum_recent_cents long",
-        outputMode="Update",
-        timeMode="None",
+        stateStructType="n_seen long, ts_us array<long>, cents array<long>",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 def timer_closed_sessions(
     events: DataFrame, gap_minutes: int = 60
 ) -> DataFrame:
-    """Event-time-TIMER sessionization via ``transformWithStateInPandas``
-    — the last surface of the Spark-4 stateful API this repo exercises
-    (t25 ValueState, t34 MapState, recent_values_digest ListState +
-    composition, here registerTimer/deleteTimer/handleExpiredTimer):
-    a session CLOSES on whichever comes first — the next event
-    revealing the gap (emitted inline from handleInputRows), or the
-    event-time WATERMARK passing last_event + gap with no further
-    events (emitted from handleExpiredTimer). The second path is the
-    one the legacy API can only approximate with processing-time
-    timeouts, which tie eviction to wall clock instead of stream time
-    and therefore aren't replayable; event-time timers make idle-key
-    session closure a deterministic function of the STREAM.
+    """Sessionization over (user_id, ts) whose sessions CLOSE on
+    whichever comes first: the next event revealing the gap (emitted
+    inline from the fold), or the event-time watermark passing
+    last_event + gap with no further events (``EventTimeTimeout``).
+    The timeout follows the STREAM (the watermark), not wall clock, so
+    idle-key closure is a deterministic, replayable function of the
+    input. Each closed session emits exactly once as (user_id,
+    session_start_us, session_last_us, n_events), and its state
+    clears; sessions whose gap hasn't elapsed by end of input stay
+    open in state. State is O(1) per key.
 
-    Choreography per key: fold the open session in a ValueState,
-    delete the previously armed timer (its expiry is derivable from
-    the stored last_us, so no timer listing is needed), re-arm at
-    last_us + gap; when the watermark passes an armed expiry, Spark
-    calls handleExpiredTimer — emit the closed (start, end, n) and
-    clear state. Sessions whose gap hasn't elapsed by end-of-input
-    stay open IN STATE (exactly the batch-t03-minus-open-sessions
-    contract the legacy tests pin). State is O(1) per key + one timer.
+    Boundary: Spark fires the timeout only when the watermark strictly
+    EXCEEDS the armed timestamp, so a final session closes iff
+    watermark_ms > floor(last_us / 1000) + gap_ms.
 
-    The input stream must carry an event-time watermark
-    (withWatermark before the groupBy) — timeMode='EventTime'
-    requires it, and the watermark IS the clock that fires timers;
-    availableNow drains still close elapsed sessions because Spark
+    The input stream must carry an event-time watermark (withWatermark
+    before the groupBy): it is the clock that fires the timeouts.
+    availableNow drains still close elapsed sessions, because Spark
     runs a trailing no-data micro-batch after the watermark's final
     advance.
     """
-    from pyspark.sql.streaming import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_ms = gap_minutes * 60_000
-    gap_us = gap_minutes * US_PER_MIN
-
-    class TimerSessions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState(
-                "sess", "start_us LONG, last_us LONG, n LONG"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator["pd.DataFrame"], timerValues
-        ) -> Iterator["pd.DataFrame"]:
-            import pandas as pd
-
-            # a session closes on whichever arrives FIRST: the next
-            # event revealing the gap (handled here — folding it into
-            # the open session would silently merge two sessions and
-            # re-arm its timer past the close), or the watermark
-            # passing last + gap with no further events (the timer).
-            ts_all: list[int] = []
-            for pdf in rows:
-                ts_all.extend(
-                    pdf["ts"].astype("datetime64[us]").astype("int64")
-                    .tolist()
-                )
-            if not ts_all and not self._sess.exists():
-                # defensive: a no-row, no-state invocation has nothing
-                # to fold and nothing to arm (registerTimer(None)
-                # would throw)
-                return
-            ts_all.sort()
-            if self._sess.exists():
-                start_us, last_us, n = self._sess.get()
-                self._handle.deleteTimer(last_us // 1000 + gap_ms + 1)
-            else:
-                start_us = last_us = None
-                n = 0
-            closed = []
-            for t in ts_all:
-                if last_us is not None and t - last_us >= gap_us:
-                    closed.append((start_us, last_us, n))
-                    start_us, n = t, 0
-                start_us = t if start_us is None else start_us
-                last_us = t if last_us is None else max(last_us, t)
-                n += 1
-            self._sess.update((start_us, last_us, n))
-            # +1 ms: transformWithState fires a timer when the
-            # watermark REACHES the expiry (inclusive, observed at
-            # exact ms equality), while the legacy EventTimeTimeout
-            # fires only when the watermark strictly EXCEEDS it —
-            # arming one tick later makes both arms (and the
-            # registered t35 oracle's ms-floored strict inequality)
-            # close sessions under the identical condition:
-            # watermark_ms > floor(last_us/1000) + gap_ms
-            self._handle.registerTimer(last_us // 1000 + gap_ms + 1)
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]] * len(closed),
-                        "session_start_us": [c[0] for c in closed],
-                        "session_last_us": [c[1] for c in closed],
-                        "n_events": [c[2] for c in closed],
-                    }
-                )
-
-        def handleExpiredTimer(
-            self, key: tuple, timerValues, expiredTimerInfo
-        ) -> Iterator["pd.DataFrame"]:
-            import pandas as pd
-
-            if not self._sess.exists():  # already closed
-                return
-            start_us, last_us, n = self._sess.get()
-            self._sess.clear()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start_us": [start_us],
-                    "session_last_us": [last_us],
-                    "n_events": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TimerSessions(),
-        outputStructType="user_id long, session_start_us long, "
-        "session_last_us long, n_events long",
-        outputMode="Update",
-        timeMode="EventTime",
-    )
-
-
-TIMER_SESSIONS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start_us", LongType()),
-        StructField("session_last_us", LongType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-TIMER_SESSIONS_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-
-
-def timer_closed_sessions_legacy(
-    events: DataFrame, gap_minutes: int = 60
-) -> DataFrame:
-    """timer_closed_sessions' dual-path semantics on the LEGACY
-    ``applyInPandasWithState`` API: inline gap-splitting in the fold,
-    and ``GroupStateTimeout.EventTimeTimeout`` +
-    ``setTimeoutTimestamp`` standing in for the explicit timer — the
-    one legacy timeout flavor that, like a timer, is a deterministic
-    function of the STREAM (the watermark), not of wall clock. Same
-    emission contract (each closed session exactly once), so the
-    registered t35 query is driver-verifiable where google.protobuf
-    (the transformWithState state server) is absent."""
     gap_ms = gap_minutes * 60_000
     gap_us = gap_minutes * US_PER_MIN
 
@@ -791,38 +375,28 @@ def timer_closed_sessions_legacy(
 
         (user_id,) = key
         if state.hasTimedOut:
-            start_us, last_us, n = state.get
+            closed = [state.get]
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start_us": [start_us],
-                    "session_last_us": [last_us],
-                    "n_events": [n],
-                }
+        else:
+            ts_all: list[int] = []
+            for pdf in pdfs:
+                ts_all.extend(_ts_us(pdf).tolist())
+            if not ts_all and not state.exists:
+                return  # defensive: nothing to fold, nothing to arm
+            ts_all.sort()
+            start_us, last_us, n = (
+                state.get if state.exists else (None, None, 0)
             )
-            return
-        ts_all: list[int] = []
-        for pdf in pdfs:
-            ts_all.extend(
-                pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
-            )
-        if not ts_all and not state.exists:
-            return  # defensive: nothing to fold, nothing to arm
-        ts_all.sort()
-        start_us, last_us, n = (
-            state.get if state.exists else (None, None, 0)
-        )
-        closed = []
-        for t_us in ts_all:
-            if last_us is not None and t_us - last_us >= gap_us:
-                closed.append((start_us, last_us, n))
-                start_us, n = t_us, 0
-            start_us = t_us if start_us is None else start_us
-            last_us = t_us if last_us is None else max(last_us, t_us)
-            n += 1
-        state.update((start_us, last_us, n))
-        state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
+            closed = []
+            for t_us in ts_all:
+                if last_us is not None and t_us - last_us >= gap_us:
+                    closed.append((start_us, last_us, n))
+                    start_us, n = t_us, 0
+                start_us = t_us if start_us is None else start_us
+                last_us = t_us if last_us is None else max(last_us, t_us)
+                n += 1
+            state.update((start_us, last_us, n))
+            state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
         if closed:
             yield pd.DataFrame(
                 {
@@ -835,57 +409,9 @@ def timer_closed_sessions_legacy(
 
     return events.groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType=TIMER_SESSIONS_SCHEMA,
-        stateStructType=TIMER_SESSIONS_STATE_SCHEMA,
+        outputStructType="user_id long, session_start_us long, "
+        "session_last_us long, n_events long",
+        stateStructType="start_us long, last_us long, n long",
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-def has_transform_with_state_runtime() -> bool:
-    """True when ``transformWithStateInPandas``'s runtime dependency
-    (google.protobuf, its Python state-server protocol) is importable.
-    The registered t25 query dispatches on this: Spark-4 API when
-    available, running_user_stats_legacy otherwise."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class rocksdb_state_provider:
-    """Context manager pinning the session's state-store provider to
-    RocksDB (bundled with Spark) for the duration of a streaming query
-    run, restoring the prior setting on exit.
-
-    transformWithStateInPandas keeps each named state handle in its own
-    COLUMN FAMILY, which the default HDFSBackedStateStoreProvider
-    rejects (UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES)
-    — RocksDB is the documented provider for the Spark-4 stateful API.
-    The conf is read at query START, so wrapping the blocking
-    run-to-sink call is sufficient; queries on the legacy API are
-    unaffected either way.
-    """
-
-    _KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-
-    def __init__(self, spark) -> None:
-        self._spark = spark
-        self._old: str | None = None
-
-    def __enter__(self) -> "rocksdb_state_provider":
-        self._old = self._spark.conf.get(self._KEY, None)
-        self._spark.conf.set(self._KEY, self._ROCKSDB)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        if self._old is None:
-            self._spark.conf.unset(self._KEY)
-        else:
-            self._spark.conf.set(self._KEY, self._old)

@@ -13,41 +13,6 @@ sys.path.insert(0, _REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
-def _bootstrap_vendored_protobuf() -> None:
-    """Activate vendor/google/protobuf when google.protobuf is absent,
-    so the Spark-4 transformWithStateInPandas test can execute its
-    state-server protocol (see vendor/README.md). Must run at conftest
-    import time — BEFORE any SparkSession starts the JVM — because
-    Spark's Python workers inherit PYTHONPATH from the driver process
-    environment at JVM launch.
-    """
-    import importlib.util
-
-    try:
-        # raises ModuleNotFoundError when the 'google' namespace package
-        # itself is absent (find_spec needs the parent importable)
-        if importlib.util.find_spec("google.protobuf") is not None:
-            return
-    except ModuleNotFoundError:
-        pass
-    vendor = os.path.join(_REPO, "vendor")
-    if not os.path.isdir(os.path.join(vendor, "google", "protobuf")):
-        return
-    sys.path.insert(0, vendor)
-    os.environ["PYTHONPATH"] = (
-        vendor + os.pathsep + os.environ.get("PYTHONPATH", "")
-    ).rstrip(os.pathsep)
-    # pyspark's StateMessage_pb2 gencode is protoc 6.33; the vendored
-    # runtime is 6.32 (wire-identical for this proto3 file). This is
-    # protobuf's own documented bypass for the minor-version check.
-    os.environ.setdefault(
-        "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true"
-    )
-
-
-_bootstrap_vendored_protobuf()
-
-
 @pytest.fixture(scope="session")
 def spark():
     from big_data_bowl_spark.session import get_spark

@@ -2717,6 +2717,7 @@ def test_decode_dispatch_fails_closed_all_formats():
         encode_bmp,
         encode_gif,
         encode_jpeg,
+        encode_mp4_container,
         encode_pgm,
         encode_png,
         encode_wav,
@@ -2872,6 +2873,17 @@ def test_decode_dispatch_fails_closed_all_formats():
             tree = box(typ, tree)
         return tree
 
+    def fmp4_trun(tfhd_flags, tfhd_tail, trun_body):
+        # a fragmented skeleton cut before its first moof, plus one
+        # moof(mfhd + traf(tfhd + trun)) for track 1
+        src = encode_mp4_container(
+            1000, sample_sizes=[[4, 4]], fragment_samples=2
+        )
+        tfhd = box(b"tfhd", struct.pack(">II", tfhd_flags, 1) + tfhd_tail)
+        traf = box(b"traf", tfhd + box(b"trun", trun_body))
+        mfhd = box(b"mfhd", struct.pack(">II", 0, 1))
+        return src[: src.index(b"moof") - 4] + box(b"moof", mfhd + traf)
+
     baseline = encode_jpeg(img, quant=[1] * 64)
     prog = encode_jpeg(img, quant=[1] * 64, progressive=True)
     one_px = np.zeros((1, 1), np.uint8)
@@ -2899,6 +2911,22 @@ def test_decode_dispatch_fails_closed_all_formats():
     mp4 = [
         ("mp4", mp4_stsz_flood()),
         ("mp4", mp4_stsz_flood(box(b"stsc", empty), box(b"stco", empty))),
+        # tfhd default_sample_size 0 and a 2^32 - 1 sample trun with
+        # no per-sample fields: a count only the file size bounds
+        (
+            "mp4",
+            fmp4_trun(
+                0x020010,
+                struct.pack(">I", 0),
+                struct.pack(">II", 0, 0xFFFFFFFF),
+            ),
+        ),
+        # per-sample sizes declared for 1000 samples, one present: the
+        # reads must stop at the trun box
+        (
+            "mp4",
+            fmp4_trun(0x020000, b"", struct.pack(">III", 0x200, 1000, 4)),
+        ),
     ]
     child = (
         "import pickle, resource, sys\n"
@@ -2942,9 +2970,11 @@ def test_decode_dispatch_fails_closed_all_formats():
             "min_bytes": 1,
         }
     ]
+    # a fragment-only track: its moov sample tables are empty
+    no_moov_samples = [dict.fromkeys(stats[0], 0)]
     assert outcomes == ["ValueError"] * len(oversized) + ["ok"] + [
         stats, [], stats, "ValueError"
-    ], outcomes
+    ] + [no_moov_samples, "ValueError"] * 2, outcomes
 
 
 # ---------------------------------------------------------------------------

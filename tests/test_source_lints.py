@@ -271,14 +271,14 @@ def test_streaming_audit_lists_cover_every_draining_query():
 
     import ast as _ast
 
-    def _drains(fn) -> bool:
+    def _drains(fn, hops: int = 1) -> bool:
         # walk CALL NODES (not raw text — a docstring merely
         # MENTIONING run_to_memory must not force a batch query
-        # into the audit lists). Direct calls only: a drain routed
-        # through a new wrapper helper still needs a list update,
-        # which this test then forces by failing on the wrapper's
-        # absence from the detected set — extend the detector
-        # alongside the wrapper if one ever appears.
+        # into the audit lists). Direct calls, plus one hop into a
+        # helper function of the query's own module (t25 and t25b
+        # drain through one): a drain routed through anything deeper
+        # still needs a list update, which this test then forces by
+        # failing on the query's absence from the detected set.
         tree = _ast.parse(
             inspect.getsource(fn).lstrip(), mode="exec"
         )
@@ -293,6 +293,18 @@ def test_streaming_audit_lists_cover_every_draining_query():
                     else None
                 )
                 if name in ("run_to_memory", "run_to_merge_snapshot"):
+                    return True
+                helper = (
+                    fn.__globals__.get(name)
+                    if isinstance(f, _ast.Name)
+                    else None
+                )
+                if (
+                    hops
+                    and inspect.isfunction(helper)
+                    and helper.__module__ == fn.__module__
+                    and _drains(helper, hops - 1)
+                ):
                     return True
         return False
 
@@ -457,3 +469,37 @@ def test_jpeg_decoder_has_one_idct():
             todo += called(defs[name])
     n = sum(called(defs[name]).count("_dct_matrix") for name in reached)
     assert n == 1, (n, sorted(reached))
+
+
+def _breaks_one_stateful_api(node) -> bool:
+    """A transformWithState* call, or an import from the google
+    namespace package (that API's protobuf runtime)."""
+    if isinstance(node, ast.Import):
+        mods = [a.name for a in node.names]
+    elif isinstance(node, ast.ImportFrom) and node.level == 0:
+        mods = [node.module]
+    else:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr.startswith("transformWithState")
+        )
+    return any(m.split(".")[0] == "google" for m in mods)
+
+
+def test_one_stateful_api():
+    """Every arbitrary-stateful operator runs on
+    applyInPandasWithState, which needs nothing beyond pyspark and
+    pandas: the package, tests and tools neither call the typed-state
+    API nor import its protobuf runtime, and no vendored third-party
+    tree exists to put one on the path."""
+    repo = ROOT.parent
+    hits = [
+        f"{p.relative_to(repo)}:{node.lineno}"
+        for sub in ("big_data_bowl_spark", "tests", "tools")
+        for p in sorted((repo / sub).rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if _breaks_one_stateful_api(node)
+    ]
+    assert not hits, hits
+    assert not (repo / "vendor").exists()

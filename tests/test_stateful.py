@@ -253,71 +253,9 @@ def test_stream_stream_join_matches_across_microbatches(
     assert got == [(1, 3, 7, 9.5)]
 
 
-def test_transform_with_state_running_stats(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas operator: per-user running
-    stats must equal the batch aggregate. Requires google.protobuf
-    (the API's state-server protocol) — skipped where absent."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState needs google.protobuf")
-
-    from pyspark.sql import functions as F
-
-    from big_data_bowl_spark.sources.io import load_table
-    from big_data_bowl_spark.streaming.stateful import running_user_stats
-    from big_data_bowl_spark.streaming.windows import (
-        read_events_stream,
-        run_to_memory,
-    )
-
-    from big_data_bowl_spark.streaming.stateful import (
-        rocksdb_state_provider,
-    )
-
-    stream = read_events_stream(spark, sf_dir).select(
-        "user_id", "ts", "value"
-    )
-    # transformWithState stores each state handle in its own column
-    # family, which the default HDFS-backed provider does not support
-    with rocksdb_state_provider(spark):
-        run_to_memory(
-            running_user_stats(stream), "tws_stats", output_mode="update"
-        )
-    sink = spark.table("tws_stats")
-    got = {
-        (r.user_id): (r.n_events, r.n_high, r.last_us)
-        for r in sink.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "n_high", "last_us"), "n_events"
-            ).alias("s")
-        )
-        .select("user_id", "s.*")
-        .collect()
-    }
-    want = {
-        r.user_id: (r.n, r.nh, r.mx)
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("value") > 5.0, 1).otherwise(0))
-            .cast("long")
-            .alias("nh"),
-            F.unix_micros(F.max("ts").cast("timestamp")).alias("mx"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_legacy_running_stats_matches_batch(spark, sf_dir):
-    """The applyInPandasWithState fallback behind t25 must fold to the
-    exact batch per-user aggregate across micro-batches (same contract
-    the transformWithState path is tested to above)."""
+def test_running_stats_matches_batch(spark, sf_dir):
+    """t25's running_user_stats fold plus its max-n_events upsert must
+    equal the exact batch per-user aggregate across micro-batches."""
     from pyspark.sql import functions as F
 
     from big_data_bowl_spark.queries import REGISTRY
@@ -343,63 +281,13 @@ def test_legacy_running_stats_matches_batch(spark, sf_dir):
     assert got == want and got
 
 
-def test_transform_with_state_map_state_counts(spark, sf_dir):
-    """Spark 4 MapState (t34): per-user event_type->count sub-maps
-    folded across micro-batches must equal the batch GROUP BY.
-    Requires google.protobuf — skipped where absent."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState needs google.protobuf")
-
+def test_type_counts_matches_batch(spark, sf_dir):
+    """t34's per_type_counts fold plus its max-n upsert must equal the
+    batch GROUP BY (user_id, event_type)."""
     from pyspark.sql import functions as F
 
     from big_data_bowl_spark.sources.io import load_table
-    from big_data_bowl_spark.streaming.stateful import (
-        per_type_counts,
-        rocksdb_state_provider,
-    )
-    from big_data_bowl_spark.streaming.windows import (
-        read_events_stream,
-        run_to_memory,
-    )
-
-    stream = read_events_stream(spark, sf_dir).select(
-        "user_id", "event_type"
-    )
-    with rocksdb_state_provider(spark):
-        run_to_memory(
-            per_type_counts(stream), "tws_type_counts",
-            output_mode="update",
-        )
-    sink = spark.table("tws_type_counts")
-    got = {
-        (r.user_id, r.event_type): r.n
-        for r in sink.groupBy("user_id", "event_type")
-        .agg(F.max("n").alias("n"))
-        .collect()
-    }
-    want = {
-        (r.user_id, r.event_type): r.n
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_legacy_type_counts_matches_batch(spark, sf_dir):
-    """t34's key-widened applyInPandasWithState fallback must fold to
-    the same batch GROUP BY (the contract shared with MapState)."""
-    from pyspark.sql import functions as F
-
-    from big_data_bowl_spark.sources.io import load_table
-    from big_data_bowl_spark.streaming.stateful import (
-        per_type_counts_legacy,
-    )
+    from big_data_bowl_spark.streaming.stateful import per_type_counts
     from big_data_bowl_spark.streaming.windows import (
         read_events_stream,
         run_to_memory,
@@ -409,12 +297,11 @@ def test_legacy_type_counts_matches_batch(spark, sf_dir):
         "user_id", "event_type"
     )
     run_to_memory(
-        per_type_counts_legacy(stream), "legacy_type_counts",
-        output_mode="append",
+        per_type_counts(stream), "type_counts", output_mode="append"
     )
     got = {
         (r.user_id, r.event_type): r.n
-        for r in spark.table("legacy_type_counts")
+        for r in spark.table("type_counts")
         .groupBy("user_id", "event_type")
         .agg(F.max("n").alias("n"))
         .collect()
@@ -429,26 +316,14 @@ def test_legacy_type_counts_matches_batch(spark, sf_dir):
     assert got == want
 
 
-def test_transform_with_state_list_state_digest(spark, sf_dir):
-    """Spark 4 ListState (the third typed-state shape after t25's
-    ValueState and t34's MapState): a bounded per-user top-N recency
-    buffer must converge, across micro-batches, to the batch top-N
-    over the whole input — with O(keep) state per key. Requires
-    google.protobuf — skipped where absent."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState needs google.protobuf")
-
+def test_recent_values_digest_matches_batch(spark, sf_dir):
+    """A bounded per-user top-N recency buffer (array-valued state)
+    must converge, across micro-batches, to the batch top-N over the
+    whole input — with O(keep) state per key."""
     from pyspark.sql import functions as F
 
     from big_data_bowl_spark.sources.io import load_table
-    from big_data_bowl_spark.streaming.stateful import (
-        recent_values_digest,
-        rocksdb_state_provider,
-    )
+    from big_data_bowl_spark.streaming.stateful import recent_values_digest
     from big_data_bowl_spark.streaming.windows import (
         read_events_stream,
         run_to_memory,
@@ -457,16 +332,15 @@ def test_transform_with_state_list_state_digest(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir).select(
         "user_id", "ts", "value"
     )
-    with rocksdb_state_provider(spark):
-        run_to_memory(
-            recent_values_digest(stream, keep=5),
-            "tws_recent",
-            output_mode="update",
-        )
-    sink = spark.table("tws_recent")
-    # upsert by n_seen: the composed ValueState counter is strictly
-    # increasing across a key's emissions (post-cap, neither buffer
-    # size nor sum is monotonic), so max-n_seen IS the final emission
+    run_to_memory(
+        recent_values_digest(stream, keep=5),
+        "recent_digest",
+        output_mode="append",
+    )
+    sink = spark.table("recent_digest")
+    # upsert by n_seen: the events-seen counter is strictly increasing
+    # across a key's emissions (post-cap, neither buffer size nor sum
+    # is monotonic), so max-n_seen IS the final emission
     got = {
         (r.user_id): (r.n_buffered, r.sum_recent_cents)
         for r in sink.groupBy("user_id")
@@ -503,29 +377,17 @@ def test_transform_with_state_list_state_digest(spark, sf_dir):
 
 
 def test_list_state_digest_across_microbatches(spark, tmp_path):
-    """The ListState buffer must fold across REAL micro-batch
+    """The recency buffer must fold across REAL micro-batch
     boundaries: a planted 3-file lake (forced processing order) where
     a user's top-5 window slides — later batches evict older buffered
     events — and the max-n_seen upsert must land on the final buffer,
-    not an intermediate one whose sum happens to be larger. Requires
-    google.protobuf — skipped where absent."""
+    not an intermediate one whose sum happens to be larger."""
     import os
-
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState needs google.protobuf")
-
     from datetime import datetime
 
     from pyspark.sql import functions as F
 
-    from big_data_bowl_spark.streaming.stateful import (
-        recent_values_digest,
-        rocksdb_state_provider,
-    )
+    from big_data_bowl_spark.streaming.stateful import recent_values_digest
     from big_data_bowl_spark.streaming.windows import run_to_memory
 
     # user 1: batch 1 has 5 HIGH values (sum 50.00), batches 2-3 add
@@ -559,13 +421,12 @@ def test_list_state_digest_across_microbatches(spark, tmp_path):
         .option("recursiveFileLookup", "true")
         .parquet(str(src))
     )
-    with rocksdb_state_provider(spark):
-        run_to_memory(
-            recent_values_digest(stream, keep=5),
-            "tws_recent_split",
-            output_mode="update",
-        )
-    sink = spark.table("tws_recent_split")
+    run_to_memory(
+        recent_values_digest(stream, keep=5),
+        "recent_digest_split",
+        output_mode="append",
+    )
+    sink = spark.table("recent_digest_split")
     emissions = {
         r.n_seen: (r.n_buffered, r.sum_recent_cents)
         for r in sink.filter(F.col("user_id") == 1).collect()
@@ -586,30 +447,18 @@ def test_list_state_digest_across_microbatches(spark, tmp_path):
     assert (final.n_buffered, final.sum_recent_cents) == (5, 5)
 
 
-def test_transform_with_state_event_time_timers(spark, tmp_path):
-    """Event-time timers (the last Spark-4 stateful surface): sessions
-    close when the WATERMARK passes last_event + gap — emission on
-    time passing, not on a closing event. Planted 2-file lake:
+def test_timer_sessions_close_on_watermark(spark, tmp_path):
+    """Event-time timeouts: sessions close when the WATERMARK passes
+    last_event + gap — emission on time passing, not on a closing
+    event. Planted 2-file lake:
     user 1's first session (2 events) and user 2's only session must
-    be closed by timers once the batch-2 watermark passes their
+    be closed by timeouts once the batch-2 watermark passes their
     expiries (fired in the trailing no-data micro-batch); user 1's
-    final session (gap not yet elapsed) must stay open in state.
-    Requires google.protobuf — skipped where absent."""
+    final session (gap not yet elapsed) must stay open in state."""
     import os
-
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState needs google.protobuf")
-
     from datetime import datetime
 
-    from big_data_bowl_spark.streaming.stateful import (
-        rocksdb_state_provider,
-        timer_closed_sessions,
-    )
+    from big_data_bowl_spark.streaming.stateful import timer_closed_sessions
     from big_data_bowl_spark.streaming.windows import run_to_memory
 
     us = lambda h, m: (  # noqa: E731
@@ -637,71 +486,21 @@ def test_transform_with_state_event_time_timers(spark, tmp_path):
         .parquet(str(src))
         .withWatermark("ts", "1 minute")
     )
-    with rocksdb_state_provider(spark):
-        run_to_memory(
-            timer_closed_sessions(stream, gap_minutes=60),
-            "tws_timer_sessions",
-            output_mode="update",
-        )
+    run_to_memory(
+        timer_closed_sessions(stream, gap_minutes=60),
+        "timer_sessions",
+        output_mode="append",
+    )
     got = {
         (r.user_id, r.session_start_us, r.session_last_us, r.n_events)
-        for r in spark.table("tws_timer_sessions").collect()
+        for r in spark.table("timer_sessions").collect()
     }
-    # closed: user 1's (00:00..00:10, 2 events) — timer at 01:10,
-    # watermark reaches 04:59; user 2's (00:05, 1 event) — timer at
-    # 01:05. Open (NOT emitted): user 1's 05:00 session — timer at
+    # closed: user 1's (00:00..00:10, 2 events) — timeout at 01:10,
+    # watermark reaches 04:59; user 2's (00:05, 1 event) — timeout at
+    # 01:05. Open (NOT emitted): user 1's 05:00 session — timeout at
     # 06:00 > final watermark.
     assert got == {
         (1, us(0, 0), us(0, 10), 2),
         (2, us(0, 5), us(0, 5), 1),
     }
 
-
-def test_t35_timer_arm_matches_legacy_arm(spark, sf_dir):
-    """t35's two capability-dispatch arms must agree: the Spark-4
-    timer path (transformWithState, exercised here under the vendored
-    protobuf) and the legacy EventTimeTimeout path (what the driver
-    verifies against the oracle) produce the same closed-session set.
-    Requires google.protobuf — skipped where absent."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithState needs google.protobuf")
-
-    from big_data_bowl_spark.streaming.stateful import (
-        rocksdb_state_provider,
-        timer_closed_sessions,
-        timer_closed_sessions_legacy,
-    )
-    from big_data_bowl_spark.streaming.windows import (
-        read_events_stream,
-        run_to_memory,
-    )
-
-    def drain(op, sink, mode, rocksdb):
-        stream = (
-            read_events_stream(spark, sf_dir)
-            .select("user_id", "ts")
-            .withWatermark("ts", "1 minute")
-        )
-        if rocksdb:
-            with rocksdb_state_provider(spark):
-                run_to_memory(
-                    op(stream, gap_minutes=10), sink, output_mode=mode
-                )
-        else:
-            run_to_memory(
-                op(stream, gap_minutes=10), sink, output_mode=mode
-            )
-        return {
-            (r.user_id, r.session_start_us, r.session_last_us, r.n_events)
-            for r in spark.table(sink).collect()
-        }
-
-    tws = drain(timer_closed_sessions, "t35_tws", "update", True)
-    legacy = drain(
-        timer_closed_sessions_legacy, "t35_legacy", "append", False
-    )
-    assert tws == legacy and tws

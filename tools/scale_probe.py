@@ -87,13 +87,14 @@ PIPELINES = [
     # round-10 batch 2: the round's registrations (j13's exact-recall
     # pairs are density-squared under the replica lake — see TABLES
     # note; d12's delta join, n24's candidate-only calibration and
-    # t34's MapState fold should all be plan-stable)
+    # t34's per-(user, event_type) count fold should all be
+    # plan-stable)
     "j13_fuzzy_match_deletion_blocking",
     "t34_stateful_type_counts",
     "d12_incremental_lsh_maintenance",
     "n24_minhash_calibration",
-    # round-10 batch 3: timer sessionization (O(1) state + one timer
-    # per key; the fold is the only data-sized stage)
+    # round-10 batch 3: timer sessionization (O(1) state + one
+    # event-time timeout per key; the fold is the only data-sized stage)
     "t35_timer_closed_sessions",
     # round-10 batch 4: scan-bound audits (2-row / 5-row outputs)
     "o13_temporal_split",
@@ -145,11 +146,12 @@ def build_probe_lake(
 def build_key_exploded_events(spark, sf_dir: str, out_dir: str, factor: int):
     """The t35 timer-coalescing probe lake (VERDICT r10 item 7): the
     replica explode shifts USER ids (not event ids), so the key count
-    — and therefore the number of live ValueStates AND armed timers —
+    — and therefore the number of live session states AND armed
+    event-time timeouts —
     grows by `factor` while per-key event volume stays fixed. The
     default lake does the opposite (same keys, 10x events/key); this
-    one stresses the state/timer registry itself: 100x keys means
-    100x timers armed, deleted and re-armed per micro-batch, the axis
+    one stresses the per-key state and timeouts themselves: 100x keys
+    means 100x timeouts re-armed per micro-batch, the axis
     a 100 TB user corpus actually grows along."""
     from pyspark.sql import functions as F
 
@@ -457,14 +459,14 @@ def main() -> None:
         metavar="FACTOR",
         help="run the t35 timer-coalescing probe instead: explode "
         "events by FACTOR along the USER-ID axis (FACTORx keys => "
-        "FACTORx live timers) and compare walls/plans",
+        "FACTORx live timeouts) and compare walls/plans",
     )
     ap.add_argument(
         "--keys-query",
         default="t35_timer_closed_sessions",
         help="which stateful query the --t35-keys lake drives "
-        "(t34_stateful_type_counts probes the MapState axis: FACTORx "
-        "keys => FACTORx live per-user sub-maps)",
+        "(t34_stateful_type_counts probes the per-key count state: "
+        "FACTORx users => FACTORx live (user, event_type) counts)",
     )
     ap.add_argument(
         "--fuzzy-buckets",
