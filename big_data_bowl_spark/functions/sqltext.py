@@ -1,23 +1,22 @@
-"""Exact-double SQL-text builders shared by the literal-model family.
+"""Exact-double SQL-text builders for driver-side model parameters.
 
-The ANN/k-means operators embed driver-side model parameters (coarse
-centroids, PQ codebooks, ADC LUTs) as one-parse SQL literals instead
-of Py4J Column trees or broadcast DataFrames (the r13 v-family
-rebuild; Column-API construction of these trees measured 0.7-1.8 s of
-pure plan-build time — the m13/m11 r12 precedent). Two exactness
-contracts make this safe:
+Centroids, PQ codebooks, ADC lookup tables and query vectors reach a
+plan as SQL literals inside one-parse VALUES or projection text. Two
+exactness contracts make that safe:
 
 - `sql_dlit` uses repr(): the shortest round-trip representation of a
   binary64, and Spark's string->double parse is exact, so the parsed
   value is bit-identical to the collected double (bare SQL numeric
   literals would parse as DECIMAL — hence the CAST).
-- `sql_fold_dot` is the identical left-to-right zip_with/aggregate
-  fold as functions' Column-side `_dot`, so a dot product computed
-  over a literal array equals the one computed over the source column
-  bit-for-bit (same IEEE op sequence over the same doubles).
+- `sql_fold_dot` is the left-to-right zip_with/aggregate fold of
+  functions' Column-side `_dot`, and `pyfold_dot` replays it on the
+  driver, so a dot computed in the plan, on the driver, or by
+  DuckDB's `list_dot_product` is the same double. `sql_dot` is that
+  fold with DuckDB's length check: unequal lengths fail the query.
 
-Shared by queries/extras.py (IVF/PQ serving), queries/vectors.py
-(v05/v06 Lloyd steps) and operators/kmeans.py (the iterative fit).
+Every nearest-centroid decision goes through
+operators/kmeans.nearest_centroid, which builds the model with these
+helpers.
 """
 
 from __future__ import annotations
@@ -38,157 +37,45 @@ def sql_fold_dot(a: str, b: str) -> str:
     )
 
 
+def sql_dot(a: str, b: str) -> str:
+    """sql_fold_dot behind a length check: arrays of unequal length
+    fail the query, as DuckDB's list_dot_product does. array_size is
+    NULL for a NULL array, so a NULL operand yields NULL."""
+    return (
+        f"IF(array_size({a}) <> array_size({b}), raise_error("
+        f"'dot product: array lengths must be equal'), "
+        f"{sql_fold_dot(a, b)})"
+    )
+
+
 def pyfold_dot(a, b) -> float:
     """Driver-side replay of sql_fold_dot's exact IEEE op sequence:
     Python floats are binary64 and * / + map to the same hardware
     ops, so this equals the SQL fold bit-for-bit over the same
-    doubles (the queries/extras._pydot precedent)."""
+    doubles."""
     acc = 0.0
     for x, y in zip(a, b):
         acc = acc + x * y
     return acc
 
 
-def sql_dot_lit(col: str, vals, base: int = 0) -> str:
-    """Dot of an array<double> column with a LITERAL vector, unrolled
-    to flat arithmetic: `0.0 + l0*col[base] + l1*col[base+1] + ...`.
-
-    Bit-identical to sql_fold_dot(col, literal-array): the flat chain
-    parses left-associative, so the op sequence is the fold's
-    (((0+t0)+t1)+...) exactly — the leading literal zero is kept
-    because IEEE 0.0 + (-0.0) == 0.0 while dropping it would leave
-    -0.0, and Spark's double ordering (Double.compare) distinguishes
-    the two in the argmin tie-break.
-
-    Why it exists (r13): aggregate/zip_with higher-order functions
-    evaluate INTERPRETED, one lambda call per element per row —
-    measured ~2x total wall on e05's 100x lake where the argmin runs
-    on every row. Flat arithmetic compiles into whole-stage codegen.
-
-    r18 correction: that advantage holds only while the generated
-    method stays under the JVM JIT's ~8 KB bytecode budget (single
-    dots of <= ~64 terms, e.g. sql_dot_cols' pair scoring). A
-    MULTI-CENTROID kernel built from these chains lands in one huge
-    method the JIT refuses, runs in the bytecode interpreter, and
-    loses 2-3x to the fold — so the assignment kernels now use
-    sql_lit_dot_positional (measurements there); no live call site
-    builds multi-centroid flat kernels anymore.
-
-    Ceiling (r14, measured): codegen of the flat chain is clean only
-    up to ~512 total literal terms per expression (k=8 x dim=64 —
-    exactly the regime every trained model here serves in). Beyond
-    that janino fails with "Code grows beyond 64 KB" and the stage
-    runs interpreted after a wasted compile attempt; by ~300 KB of
-    SQL text a single action costs tens of seconds and at ~1 MB the
-    job fails outright. Above the ceiling use
-    operators/kmeans.broadcast_cells (bit-identical assignments,
-    centroids as a 1-row broadcast relation, plan cost flat in k);
-    operators/kmeans.assign_cells dispatches automatically."""
-    if not len(vals):
-        raise ValueError(
-            "sql_dot_lit: empty literal vector — would emit the "
-            "malformed SQL '(CAST(0.0 AS DOUBLE) + )'; a 0-dim dot "
-            "has no meaning here, fail loud like nearest_cell_sql"
-        )
-    terms = " + ".join(
-        f"{sql_dlit(v)} * {col}[{base + i}]" for i, v in enumerate(vals)
-    )
-    return f"(CAST(0.0 AS DOUBLE) + {terms})"
-
-
 def sql_dot_cols(a: str, b: str, dim: int) -> str:
     """Dot of TWO array<double> COLUMNS unrolled to flat arithmetic:
-    `0.0 + a[0]*b[0] + a[1]*b[1] + ...` — the column-column twin of
-    sql_dot_lit, for hot paths where BOTH operands vary per row (the
-    quadratic pair-scoring inner loop of v03, r15) and the fold's
-    per-element interpreted lambda dispatch dominates (measured:
-    10.1M pairs scored at 100x in 367 s with the fold, 23 s with
-    this chain). Bit-identical to sql_fold_dot(a, b) on length-dim
-    inputs: the flat chain parses left-associative, so the op
-    sequence is the fold's (((0+t0)+t1)+...) exactly, same leading
-    literal zero (IEEE -0.0 tie-break rationale at sql_dot_lit).
-    Positional semantics on OTHER lengths: elements past dim are
-    ignored; shorter arrays hit an out-of-bounds index (ANSI error /
-    non-ANSI NULL) — callers pass the corpus' fixed embedding dim.
-    Term count is dim (64 here), far under the 512-term codegen
-    ceiling documented at sql_dot_lit."""
+    `0.0 + a[0]*b[0] + a[1]*b[1] + ...`, for hot paths where both
+    operands vary per row (the quadratic pair-scoring inner loop of
+    v03) and the fold's per-element interpreted lambda dispatch
+    dominates (measured: 10.1M pairs scored at 100x in 367 s with the
+    fold, 23 s with this chain). Bit-identical to sql_fold_dot(a, b)
+    on length-dim inputs: the flat chain parses left-associative, so
+    the op sequence is the fold's (((0+t0)+t1)+...) exactly. The
+    leading literal zero is kept because IEEE 0.0 + (-0.0) == 0.0
+    while dropping it would leave -0.0, which Spark's double ordering
+    distinguishes. Positional semantics on OTHER lengths: elements
+    past dim are ignored; shorter arrays hit an out-of-bounds index
+    (ANSI error / non-ANSI NULL) — callers pass the corpus' fixed
+    embedding dim. A single dot of dim (64) terms keeps the generated
+    method inside the JIT's bytecode budget."""
     if dim <= 0:
         raise ValueError(f"sql_dot_cols: dim must be positive, got {dim}")
     terms = " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim))
     return f"(CAST(0.0 AS DOUBLE) + {terms})"
-
-
-def sql_lit_dot_positional(col: str, vals) -> str:
-    """dot(col, literal vector) as a zip_with/aggregate fold with
-    sql_dot_lit's POSITIONAL ragged-row semantics (r18): on
-    equal-length inputs the fold's op sequence is the flat chain's
-    (((0+t0)+t1)+...) bit-for-bit (the sql_fold_dot contract); a
-    LONGER col has its extra elements ignored (fold over a slice,
-    taken only on the mismatch branch — a bare zip_with would
-    null-pad the literal side and poison the dot where the flat
-    chain ignores); a SHORTER col hits the same out-of-bounds
-    col[...] access the flat chain hits (ANSI: identical error
-    class, non-ANSI: identical NULL-poisoned value). The
-    literal-array mirror of operators/kmeans._guarded_dot_sql.
-
-    Why a fold and not the flat chain (r18, measured): janino
-    compiles the flat unroll fine below the 512-term ceiling, but a
-    multi-centroid kernel lands in ONE generated method whose
-    bytecode passes the JVM JIT's 8000-byte DontCompileHugeMethods
-    limit somewhere above ~64 total terms — past that the method
-    runs in the BYTECODE INTERPRETER. Measured at k=8 x dim=64
-    (512 terms): flat 0.50 s vs fold 0.16 s on the 2000-row bench
-    corpus, and 1.16 s vs 0.72 s on a 200k-row x 32-partition 100x
-    replica — the fold's small lambda methods JIT at any k. The
-    flat chain stays the right tool for SINGLE dots of <= ~64 terms
-    (sql_dot_cols' 10.1M-pair measurement), where the whole method
-    fits the JIT budget."""
-    dim = len(vals)
-    if not dim:
-        raise ValueError(
-            "sql_lit_dot_positional: empty literal vector (same "
-            "contract as sql_dot_lit — fail loud)"
-        )
-    arr = sql_darr(vals)
-    eq_or_slice = (
-        f"IF(size({col}) = {dim}, {col}, slice({col}, 1, {dim}))"
-    )
-    return (
-        f"IF(size({col}) >= {dim}, "
-        f"{sql_fold_dot(eq_or_slice, arr)}, {col}[{dim - 1}])"
-    )
-
-
-def nearest_cell_sql(cv_name: str, cent_rows) -> str:
-    """Nearest-centroid assignment as ONE per-row expression over
-    literal centroids: argmin of d = dot(kv,kv) - 2*dot(cv,kv) with
-    ties to the lowest cid — exactly min_by(cid, struct(d, cid)) from
-    the broadcast crossJoin + groupBy(vec_id) spelling, minus the
-    k-fold row explosion and the corpus-sized shuffle that groupBy
-    paid (the whole corpus, WITH vectors, rode that exchange at
-    ~420 B/row — tools/shuffle_metrics.py, r13). array_min compares
-    (d, c) structs fieldwise: lowest distance, then lowest cid. The
-    kv.kv term is folded over the literal array by the same sequence
-    as the old column fold, so every d — and therefore every
-    assignment — is bit-identical to the crossJoin spelling's.
-
-    Each per-centroid dot is sql_lit_dot_positional — the guarded
-    literal-array fold — not sql_dot_lit's flat chain (r18): the
-    k x dim flat kernel compiles into one giant method that the JVM
-    JIT refuses past ~8 KB of bytecode, so it ran in the bytecode
-    interpreter (measurements and the ragged-row parity contract at
-    the helper). Values pinned by
-    tests/test_operators.py::test_assignment_kernels_bit_identical
-    and the v05/v06 full-value oracles."""
-    if not cent_rows:
-        raise ValueError(
-            "nearest_cell_sql: no centroid rows — the corpus the "
-            "seeds were drawn from is empty (an empty struct array "
-            "would be malformed SQL, not an empty assignment)"
-        )
-    structs = ",".join(
-        f"struct({sql_dlit(pyfold_dot(kv, kv))} - 2.0 * "
-        f"{sql_lit_dot_positional(cv_name, kv)} AS d, {cid} AS c)"
-        for cid, kv in cent_rows
-    )
-    return f"array_min(array({structs})).c"

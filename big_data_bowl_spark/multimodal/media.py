@@ -2835,9 +2835,16 @@ def parse_mp4_sample_ranges(payload: bytes) -> list:
             tfhd = _mp4_find(payload, c0, c1, b"tfhd")
             if tfhd is None:
                 raise ValueError("traf without tfhd")
-            t0, _t1 = tfhd
+            t0, t1 = tfhd
+            if t0 + 8 > t1:
+                raise ValueError("tfhd box too short for its header")
             tf_flags = struct.unpack_from(">I", payload, t0)[0] & 0xFFFFFF
             trk_id = struct.unpack_from(">I", payload, t0 + 4)[0]
+            # base_data_offset, sample_description_index, default
+            # duration and default size, each present by its flag bit
+            opt = ((0x1, 8), (0x2, 4), (0x8, 4), (0x10, 4))
+            if t0 + 8 + sum(n for bit, n in opt if tf_flags & bit) > t1:
+                raise ValueError("tfhd optional fields overrun the tfhd box")
             off = t0 + 8
             base_data_offset = None
             if tf_flags & 0x1:
@@ -3123,6 +3130,8 @@ def parse_exif(payload: bytes) -> dict:
     out = {"byte_order": order.decode("ascii")}
 
     def read_value(typ, cnt, raw_off):
+        if typ in (3, 4, 5) and cnt == 0:
+            raise ValueError(f"Exif numeric tag of type {typ} has count 0")
         size = type_size.get(typ, 1) * cnt
         if size <= 4:
             data = tiff[raw_off : raw_off + size]
@@ -3138,11 +3147,18 @@ def parse_exif(payload: bytes) -> dict:
         if typ == 4:
             return struct.unpack(bo + "I", data[:4])[0]
         if typ == 5:
-            num, den = struct.unpack(bo + "II", data)
+            num, den = struct.unpack(bo + "II", data[:8])
             return num / den if den else float("nan")
         return data
 
-    def walk_ifd(off):
+    # IFDs are walked from an explicit stack and each offset at most
+    # once, so a pointer cycle or a long pointer chain fails closed
+    seen, todo = set(), [ifd0_off]
+    while todo:
+        off = todo.pop()
+        if off in seen:
+            raise ValueError(f"Exif IFD at offset {off} is visited twice")
+        seen.add(off)
         if off + 2 > len(tiff):
             raise ValueError("Exif IFD offset overruns the TIFF block")
         n = struct.unpack_from(bo + "H", tiff, off)[0]
@@ -3152,12 +3168,9 @@ def parse_exif(payload: bytes) -> dict:
             e = off + 2 + 12 * i
             tag, typ, cnt = struct.unpack_from(bo + "HHI", tiff, e)
             if tag == _EXIF_IFD_POINTER:
-                sub = struct.unpack_from(bo + "I", tiff, e + 8)[0]
-                walk_ifd(sub)
+                todo.append(struct.unpack_from(bo + "I", tiff, e + 8)[0])
             elif tag in _EXIF_TAGS:
                 out[_EXIF_TAGS[tag]] = read_value(typ, cnt, e + 8)
-
-    walk_ifd(ifd0_off)
     return out
 
 

@@ -1,6 +1,6 @@
 from .asof import asof_join
 from .components import connected_components, release_local_checkpoint
-from .kmeans import assign_cells, broadcast_cells, kmeans_fit
+from .kmeans import assign_cells, kmeans_fit, nearest_centroid
 from .mode import grouped_mode
 from .pivot import pivot_wide_multi
 from .sample import deterministic_sample, deterministic_split
@@ -10,7 +10,7 @@ __all__ = [
     "connected_components",
     "release_local_checkpoint",
     "assign_cells",
-    "broadcast_cells",
+    "nearest_centroid",
     "kmeans_fit",
     "grouped_mode",
     "pivot_wide_multi",

@@ -1,33 +1,36 @@
 """Distributed k-means (Lloyd's algorithm) over an array<double>
-embedding column.
+embedding column, and the one nearest-centroid kernel that every
+centroid model in the package (k-means, the IVF coarse quantizer, the
+PQ codebooks) is applied through.
 
-Each iteration is the declarative step proven by the
-`v05_kmeans_step` oracle (queries/vectors.py): assign every vector
-to its nearest centroid via a per-row argmin over driver-side
-centroid state — the codegen'd literal expression up to the
-measured 512-term ceiling, the one-row-broadcast array<struct>
-kernel above it (assign_cells; both bit-identical, and in NEITHER
-regime does the corpus shuffle) — then recompute centroids as
-element-wise means in long (cell, dim) form, whose partial
-aggregation combines map-side to k x dim rows per task.
+The model is data, never generated code. `nearest_centroid` builds
+the centroids into a one-row relation (an inline VALUES query of
+exact `sql_dlit` literals holding array<struct<c, kk, kv>>, with
+kk = kv.kv folded driver-side), reads it as an uncorrelated scalar
+subquery, and picks each row's centroid with one higher-order
+expression. The subquery collects its local relation on the driver
+without a Spark job (a broadcast join would run one per model
+application), the corpus never shuffles, and the generated code does
+not grow with k or dim.
 
-r13 rewrite (found by tools/shuffle_metrics.py): the previous
-spelling assigned via corpus.crossJoin(broadcast(cent)) +
-groupBy(vec_id).min_by — the min_by partials collapse the k-fold
-explosion map-side, but the groupBy exchange still moved the ENTIRE
-corpus, vectors included, once per iteration (~420 B/row measured).
-Centroids are k x dim doubles — driver-side model state by any
-honest reading (the convergence check already collected a scalar per
-round) — so each round now collects the (cell, dim) aggregate
-(k x dim rows, the same payload the old plan shuffled to build
-`new_cent`) and embeds the updated centroids as one-parse SQL
-literals in the next round's assignment (functions/sqltext.py
-exactness contracts). This is how spark.ml's own KMeans iterates:
-centers live on the driver, only sufficient statistics cross the
-network. Per-iteration network cost: k x dim x n_tasks partial rows;
-the corpus never leaves its partitions.
+Contract, for every score:
+- Every dot product is `sqltext.sql_dot`, the left-to-right
+  zip_with/aggregate fold that equals DuckDB's `list_dot_product` and
+  `pyfold_dot` bit for bit. A row whose length differs from the
+  model's fails the query, as `list_dot_product` does; a NULL row
+  scores NULL.
+- Ties go to the lowest centroid id: argmin orders struct(score, c),
+  argmax orders struct(score, -c, c). Spark orders NaN above every
+  number, so a NaN score loses an argmin and wins an argmax.
 
-Scale notes (100 TB):
+Lloyd iteration: each step assigns with the `k.kk - 2 kv.cv` score,
+then recomputes centroids as element-wise means in long (cell, dim)
+form, whose partial aggregation combines map-side to k x dim rows per
+task. The driver collects those k x dim means and feeds them to the
+next step as the new model, the way spark.ml's KMeans keeps its
+centers on the driver and moves only sufficient statistics.
+
+Scale notes:
 - Per-iteration cost: one corpus scan + one map-side-combined
   (cell, dim) aggregation; nothing data-sized shuffles.
 - Convergence is detected on max centroid displacement, computed on
@@ -37,9 +40,6 @@ Scale notes (100 TB):
   re-evaluate upstream lineage (same discipline as
   operators/components.py); a cluster deployment would persist or
   re-scan the lake instead.
-
-The reference repo has no clustering; this backs the IVF ANN path
-(v04) with trained, rather than sampled, coarse centroids.
 """
 
 from __future__ import annotations
@@ -47,211 +47,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import (
-    nearest_cell_sql,
-    pyfold_dot,
-    sql_darr,
-    sql_fold_dot,
-)
-
-# Literal-kernel ceiling (VERDICT r13 item 2, measured — SCALE.md
-# "Round-14 literal-kernel ceiling"): nearest_cell_sql emits
-# ~k x dim literal terms of one-parse SQL text. MEASURED at dim=64:
-# k <= 8 (512 terms) compiles into whole-stage codegen cleanly —
-# the regime every trained model in this repo serves in (KM_K=8,
-# NLIST=8); at k = 9 janino dies with "Code grows beyond 64 KB"
-# and the stage runs INTERPRETED after a wasted compile attempt
-# (k=9 first exec 14.5 s on a 500-row corpus); by k=96 a single
-# action costs ~50 s and at k=256 the job fails outright with a
-# boxed janino exception. assign_cells() therefore dispatches to
-# the broadcast kernel above 512 total terms; the two kernels are
-# bit-identical by the exactness contract (pinned in
-# tests/test_operators.py::test_assignment_kernels_bit_identical).
-LITERAL_KERNEL_MAX_TERMS = 512
+from ..functions.sqltext import pyfold_dot, sql_darr, sql_dlit, sql_dot
 
 
-def nearest_cell_expr(cv_name: str, cent_rows):
-    """Column: argmin-distance cell id for `cv_name` over literal
-    (cid, kv) centroid rows — ONE F.expr parse however many centroids
-    (see functions/sqltext.nearest_cell_sql for the exactness and
-    tie-break contract). For large k use assign_cells(), which
-    dispatches to the broadcast kernel above the measured parse
-    ceiling (LITERAL_KERNEL_MAX_TERMS)."""
-    return F.expr(nearest_cell_sql(cv_name, cent_rows))
-
-
-def broadcast_cells(
-    corp: DataFrame, cent_rows, cv_name: str = "cv",
-    out_name: str = "cell",
+def nearest_centroid(
+    df: DataFrame, model_rows, score: str, out_name: str = "cell",
+    largest: bool = False,
 ) -> DataFrame:
-    """Large-k assignment kernel: centroids travel as DATA — a
-    ONE-ROW broadcast relation carrying array<struct<c, kk, kv>> —
-    instead of SQL-text literals, and the argmin is the same per-row
-    expression evaluated with higher-order functions over that
-    column. No corpus shuffle at ANY k: the single centroid row
-    reaches every partition via BroadcastNestedLoopJoin (the
-    crossJoin(broadcast(grid)) shape e03 uses), the corpus side
-    stays in place, and there is no groupBy — deliberately NOT the
-    pre-r13 crossJoin + groupBy(vec_id).min_by spelling, whose
-    exchange moved the whole corpus with vectors (~420 B/row,
-    tools/shuffle_metrics.py r13).
+    """Add `out_name`: the id of the centroid whose `score` is lowest
+    (highest with largest=True), ties to the lowest id.
 
-    Bit-compatibility with nearest_cell_expr (pinned by test):
-    - k.kk is pyfold_dot(kv, kv) computed driver-side — the same
-      doubles nearest_cell_sql folds into its literal, delivered
-      exactly through createDataFrame's binary64 path;
-    - the dot is sql_fold_dot's zip_with fold — the documented
-      bit-identical IEEE sequence to sql_dot_lit's flat chain —
-      behind size guards that reproduce the literal kernel's
-      positional-indexing semantics on RAGGED rows exactly (longer
-      cv: extra elements ignored; shorter cv: the same
-      out-of-bounds access — ANSI raises the identical error,
-      non-ANSI yields the identical NULL-poisoned distance; a bare
-      zip_with would instead null-pad the shorter side and silently
-      diverge — pinned by the bit-identity test);
-    - ties break by array_min over struct(d, c) — fieldwise, lowest
-      distance then lowest cid, identical to the literal kernel.
-
-    Cost model: HOFs evaluate interpreted (one lambda call per
-    element), measured ~2x the codegen'd literal kernel per term —
-    but per-row work is O(k x dim) in either kernel, and only this
-    one's plan-build cost stays flat in k. Crossover adjudicated in
-    PLANS.md; SCALE.md records the measured literal-parse ceiling."""
-    one = _cents_relation(corp.sparkSession, cent_rows, "broadcast_cells")
-    d = f"k.kk - 2.0 * {_guarded_dot_sql(cv_name)}"
-    argmin = (
-        f"array_min(transform(__cents__, "
-        f"k -> struct({d} AS d, k.c AS c))).c"
-    )
-    return (
-        corp.crossJoin(F.broadcast(one))
-        .withColumn(out_name, F.expr(argmin))
-        .drop("__cents__")
-    )
-
-
-def _cents_relation(spark, cent_rows, caller: str):
-    """The centroid model as a ONE-ROW broadcast relation:
-    array<struct<c, kk, kv>> where kk = pyfold_dot(kv, kv) is the
-    same binary64 the literal kernels fold driver-side, delivered
-    exactly through createDataFrame's binary64 path. Shared by both
-    broadcast kernels (argmin-distance and argmax-dot) so their
-    model bits are byte-for-byte the literal kernels'."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    if not cent_rows:
+    `model_rows` are (cid, kv) pairs. `score` is SQL over the lambda
+    variable `k` (k.c the id, k.kv the vector, k.kk = kv.kv) and the
+    columns of `df`; build its dots with sqltext.sql_dot."""
+    if not model_rows:
         raise ValueError(
-            f"{caller}: no centroid rows (same contract as "
-            "nearest_cell_sql — fail loud, not an empty assignment)"
+            "nearest_centroid: no centroid rows (an empty model has "
+            "no nearest centroid)"
         )
-    cents = [
-        (int(cid), pyfold_dot(kv, kv), [float(x) for x in kv])
-        for cid, kv in cent_rows
-    ]
-    schema = StructType([
-        StructField(
-            "__cents__",
-            ArrayType(
-                StructType([
-                    StructField("c", IntegerType(), False),
-                    StructField("kk", DoubleType(), False),
-                    StructField(
-                        "kv", ArrayType(DoubleType(), False), False
-                    ),
-                ]),
-                False,
-            ),
-            False,
-        )
-    ])
-    return spark.createDataFrame([(cents,)], schema)
-
-
-def _guarded_dot_sql(cv_name: str) -> str:
-    """dot(cv, k.kv) for the broadcast kernels. The fast path is the
-    plain zip_with fold (sql_fold_dot — the documented bit-identical
-    sequence to sql_dot_lit's flat chain on equal-length inputs;
-    index-counter and sequence() spellings measured 3.6x / 1.5x
-    slower). Ragged rows take the guarded branches so the semantics
-    stay the LITERAL kernels' positional-indexing semantics exactly:
-    a LONGER cv has its extra elements ignored (zip over a size(kv)
-    slice — zip_with alone would null-pad kv and poison the dot
-    where the literal kernel ignores); a SHORTER cv hits the same
-    out-of-bounds cv[...] access the literal kernel hits (ANSI:
-    identical error; non-ANSI: identical NULL-poisoned value)."""
-    fast = sql_fold_dot(cv_name, "k.kv")
-    ignore_extra = sql_fold_dot(
-        f"slice({cv_name}, 1, size(k.kv))", "k.kv"
+    cents = ",".join(
+        f"named_struct('c', {int(cid)}, "
+        f"'kk', {sql_dlit(pyfold_dot(kv, kv))}, 'kv', {sql_darr(kv)})"
+        for cid, kv in model_rows
     )
-    return (
-        f"IF(size({cv_name}) = size(k.kv), {fast}, "
-        f"IF(size({cv_name}) > size(k.kv), {ignore_extra}, "
-        f"{cv_name}[size(k.kv) - 1]))"
-    )
-
-
-def broadcast_cells_dot(
-    corp: DataFrame, cent_rows, cv_name: str = "cv",
-    out_name: str = "cell", ragged: str = "positional",
-) -> DataFrame:
-    """Large-k ARGMAX-DOT assignment kernel — the broadcast twin of
-    queries/extras._cell_expr (IVF cell = argmax of dot(cv, kv),
-    ties to the LOWEST cid) the way broadcast_cells is the twin of
-    nearest_cell_expr (argmin distance). The IVF serve/build family
-    (v04/v10/e05) assigns by raw dot, not by distance, so it needs
-    its own kernel above the literal parse ceiling; routing it
-    through broadcast_cells would change assignments wherever
-    centroid norms differ (argmax dot != argmin distance on
-    unnormalized centroids).
-
-    Bit-compatibility with _cell_expr (pinned by
-    tests/test_operators.py::test_dot_assignment_kernels_bit_identical):
-    the dot is sql_fold_dot's zip_with fold — the documented
-    bit-identical IEEE sequence to the compiled kernel's sql_dot_lit
-    chain on equal-length inputs — and the tie-break is array_max
-    over struct(s, -c, c): highest score, then highest -cid ==
-    lowest cid, the literal kernel's struct exactly.
-
-    `ragged` selects which LITERAL kernel's length-mismatch
-    semantics this twin reproduces, because _cell_expr's two kernels
-    themselves diverge on ragged rows (r15 review finding):
-    - "positional" (the compiled sql_dot_lit build kernel — e05):
-      longer cv ignored past dim, shorter cv hits the identical
-      out-of-bounds index (_guarded_dot_sql);
-    - "zip" (the HOF fold serve kernel — v04/v10): plain
-      zip_with(cv, k.kv) — null-padding poisons the score on EITHER
-      length mismatch, exactly like the literal kernel's zip_with
-      against its literal array.
-    _with_cell passes the mode matching its below-ceiling kernel, so
-    each dispatch pair is bit-identical on ALL inputs, ragged
-    included — not just the equal-length happy path. kk rides the
-    shared relation unused here (argmax-dot needs no norm term);
-    one model relation, two kernels."""
-    if ragged not in ("positional", "zip"):
-        raise ValueError(
-            f"ragged must be 'positional' or 'zip', got {ragged!r}"
-        )
-    one = _cents_relation(
-        corp.sparkSession, cent_rows, "broadcast_cells_dot"
-    )
-    s = (
-        _guarded_dot_sql(cv_name)
-        if ragged == "positional"
-        else sql_fold_dot(cv_name, "k.kv")
-    )
-    argmax = (
+    model = f"(SELECT m FROM (VALUES (array({cents}))) AS t(m))"
+    pick = (
         f"array_max(transform(__cents__, "
-        f"k -> struct({s} AS s, -k.c AS nc, k.c AS c))).c"
+        f"k -> struct({score} AS s, -k.c AS nc, k.c AS c))).c"
+        if largest
+        else f"array_min(transform(__cents__, "
+        f"k -> struct({score} AS s, k.c AS c))).c"
     )
+    # Spark rejects a subquery inside a higher-order function, so the
+    # model lands in a column first
     return (
-        corp.crossJoin(F.broadcast(one))
-        .withColumn(out_name, F.expr(argmax))
+        df.withColumn("__cents__", F.expr(model))
+        .withColumn(out_name, F.expr(pick))
         .drop("__cents__")
     )
 
@@ -260,16 +91,12 @@ def assign_cells(
     corp: DataFrame, cent_rows, cv_name: str = "cv",
     out_name: str = "cell",
 ) -> DataFrame:
-    """Nearest-centroid assignment with kernel dispatch: the
-    codegen'd literal kernel below LITERAL_KERNEL_MAX_TERMS total
-    literal terms (k x dim), the flat-plan-cost broadcast kernel
-    above it. Both kernels produce bit-identical assignments."""
-    terms = sum(len(kv) for _, kv in cent_rows)
-    if terms <= LITERAL_KERNEL_MAX_TERMS:
-        return corp.withColumn(
-            out_name, nearest_cell_expr(cv_name, cent_rows)
-        )
-    return broadcast_cells(corp, cent_rows, cv_name, out_name)
+    """Lloyd assignment: argmin of the squared distance less the
+    row's constant cv.cv term, kk - 2 cv.kv."""
+    return nearest_centroid(
+        corp, cent_rows, f"k.kk - 2.0 * {sql_dot(cv_name, 'k.kv')}",
+        out_name,
+    )
 
 
 def seed_centroid_rows(corp: DataFrame, k: int) -> list:
@@ -283,14 +110,12 @@ def seed_centroid_rows(corp: DataFrame, k: int) -> list:
 
 def step_stats(corp: DataFrame, cent_rows) -> DataFrame:
     """One Lloyd step's sufficient statistics: assign via
-    assign_cells (codegen'd literal argmin below the measured
-    512-term ceiling, broadcast array-of-struct kernel above it —
-    either way a per-row computation with no corpus shuffle), then
-    the (cell, dim) member counts and mean components. The groupBy
+    assign_cells (a per-row computation with no corpus shuffle),
+    then the (cell, dim) member counts and mean components. The groupBy
     partial-aggregates map-side, so the only exchange carries
     k x dim rows per task.
 
-    Magnitude/precision envelope (ADVICE r14): the per-dim sum is
+    Magnitude/precision envelope: the per-dim sum is
     decimal(38,18) by contract (merge-order determinism, below), so
     vector components must satisfy |v| < ~1e19 (sum incl.) — larger
     overflows the decimal (ANSI: error; non-ANSI: NULL mean) — and
@@ -355,7 +180,7 @@ def kmeans_fit(
     network" claim) — used by tools/scale_probe.py --kmeans-fit to
     pin per-round wall/collect/heap at the 100x design point.
 
-    Input envelope (ADVICE r14): per-round means go through
+    Input envelope: per-round means go through
     step_stats' decimal(38,18) sums (merge-order determinism), so
     vector components must stay within |v| < ~1e19 and meaningful
     magnitude >= ~1e-18 — see the step_stats docstring for the
@@ -401,7 +226,7 @@ def kmeans_fit(
         raise ValueError(
             "kmeans_fit: no centroids (k=0 or empty corpus) — an "
             "empty VALUES clause would be malformed SQL, not an "
-            "empty model; fail loud like nearest_cell_sql"
+            "empty model"
         )
     vals = ",".join(
         f"({cid}, {sql_darr(kv)}, {members[cid]})" for cid, kv in cent

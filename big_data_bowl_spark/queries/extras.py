@@ -135,8 +135,8 @@ def _trained_centroid_rows(spark: "SparkSession", e, sf_dir: str) -> list:
     parameters train ONCE and ship with the index, so they are
     memoized in _CENT_CACHE: v04/v10/e05 share one training pass
     instead of re-scanning the corpus per query.
-    Returns the (cid, kv) rows, which _cell_expr embeds as one-parse
-    SQL literals."""
+    Returns the (cid, kv) rows, which _with_cell applies as the
+    model relation of operators/kmeans.nearest_centroid."""
     from .vectors import _seed_rows, _spark_lloyd_step, _step_rows
 
     def train():
@@ -170,20 +170,6 @@ def _trained_cent_sql() -> str:
     cent AS (
       SELECT cell AS cid, list(centroid_val ORDER BY dim_idx) AS kv
       FROM stept2 GROUP BY cell)"""
-
-
-def _pydot(a, b) -> float:
-    """Driver-side sequential-fold dot product. Python floats ARE IEEE
-    binary64 and this fold applies the identical operations in the
-    identical order as _dot's JVM fold (acc = acc + x*y, left to
-    right), so a value computed here from collected parquet doubles is
-    bit-identical to the same value computed in-plan — the contract
-    that lets query-side ANN prep (probe lists, ADC LUTs) move to the
-    driver without perturbing the DuckDB oracle comparison."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
 
 
 _QV_CACHE = ModelMemo()
@@ -226,91 +212,25 @@ def _probe_pairs(cent_rows, qrows, nprobe: int) -> list:
     return out
 
 
-# Exact-double SQL-text builders — shared with operators/kmeans.py
-# and queries/vectors.py since the r13 Lloyd rewrite; the exactness
-# contracts (repr round-trip, identical fold sequence) are documented
-# at the definitions (functions/sqltext.py).
+# Exact-double SQL-text builders (functions/sqltext.py documents the
+# exactness contracts: repr round-trip, identical fold sequence).
 from ..functions.sqltext import (  # noqa: E402
+    pyfold_dot as _pydot,
     sql_darr as _sql_darr,
-    sql_dlit as _sql_dlit,
+    sql_dot as _sql_dot,
     sql_fold_dot as _sql_fold_dot,
-    sql_lit_dot_positional as _sql_lit_dot_positional,
 )
 
 
-def _cell_expr(cv_name: str, cent_rows, compiled: bool = False):
-    """Coarse-cell assignment as ONE per-row expression over literal
-    centroids: argmax of dot(cv, kv) with ties to the lowest cid —
-    exactly max_by(cid, struct(score, -cid)) from the old broadcast
-    crossJoin + groupBy spelling, minus the NLIST-fold row explosion
-    and the corpus-sized shuffle. array_max compares (s, nc) structs
-    fieldwise: highest score, then highest -cid == lowest cid.
+def _with_cell(df, cent_rows, cv_name: str = "cv", out_name: str = "cell"):
+    """IVF cell assignment: argmax of dot(cv, kv), ties to the lowest
+    cid, through the one nearest-centroid kernel
+    (operators/kmeans.nearest_centroid). Every query-side caller
+    (v04/v10/e05) assigns through here."""
+    from ..operators.kmeans import nearest_centroid
 
-    Two kernels, same bits: the default bare fold (serve queries —
-    v04/v10 — whose rows are uniform-dim by the corpus contract) and
-    `compiled=True`'s POSITIONAL-semantics kernel for index-build
-    ops (e05), which must mirror the flat chain's ragged-row
-    behavior exactly. r18 re-measurement: the flat unroll this flag
-    used to select compiles under janino but lands in ONE generated
-    method past the JVM JIT's ~8 KB bytecode budget at the shipped
-    k=8 x dim=64, so it ran in the bytecode INTERPRETER — measured
-    0.50 s vs the fold's 0.16 s on the bench corpus and 1.16 s vs
-    0.72 s on a 200k-row x 32-partition 100x replica (value parity
-    collect-checked). The r13 serve/build split survives in the
-    SEMANTICS (positional vs null-pad on ragged rows), but both
-    regimes now execute the fold form, whose small lambda methods
-    JIT at any k (sqltext.sql_lit_dot_positional).
-
-    Callers go through _with_cell, which dispatches to the broadcast
-    argmax-dot kernel above the 512-term janino ceiling — either
-    kernel here emits ONE SQL parse whose codegen dies past it
-    (SCALE.md k-ceiling table; VERDICT r14 item 2)."""
-    dot = _sql_lit_dot_positional if compiled else (
-        lambda col, kv: _sql_fold_dot(col, _sql_darr(kv))
-    )
-    structs = ",".join(
-        f"struct({dot(cv_name, kv)} AS s, "
-        f"{-cid} AS nc, {cid} AS c)"
-        for cid, kv in cent_rows
-    )
-    return F.expr(f"array_max(array({structs})).c")
-
-
-def _with_cell(
-    df, cent_rows, cv_name: str = "cv", out_name: str = "cell",
-    compiled: bool = False,
-):
-    """IVF cell assignment with kernel dispatch — the argmax-dot twin
-    of operators/kmeans.assign_cells (VERDICT r14 item 2): below the
-    measured 512-term janino ceiling the one-parse literal kernel
-    (_cell_expr, HOF fold or compiled unroll per the serve/build
-    split documented there); above it the broadcast array-of-struct
-    kernel (operators/kmeans.broadcast_cells_dot — bit-identical
-    assignments, plan cost flat in k). Every query-side caller
-    (v04/v10/e05) routes through here, so raising NLIST past 64 can
-    no longer drive a trained model into the cliff SCALE.md measured
-    (k=9x64 first exec 14.5 s interpreted after a failed compile;
-    k=256 job-fatal boxed janino error) — the dispatch boundary is
-    the same inclusive-at-512 one assign_cells pins by test."""
-    from ..operators.kmeans import (
-        LITERAL_KERNEL_MAX_TERMS,
-        broadcast_cells_dot,
-    )
-
-    terms = sum(len(kv) for _, kv in cent_rows)
-    if terms <= LITERAL_KERNEL_MAX_TERMS:
-        return df.withColumn(
-            out_name, _cell_expr(cv_name, cent_rows, compiled)
-        )
-    # ragged mode tracks the below-ceiling kernel this branch
-    # replaces (r15 review finding: the two literal kernels diverge
-    # on length-mismatched rows — compiled indexes positionally, the
-    # HOF fold null-pads — so the broadcast twin must reproduce THE
-    # ONE it stands in for, or crossing the ceiling would silently
-    # change what malformed rows do)
-    return broadcast_cells_dot(
-        df, cent_rows, cv_name, out_name,
-        ragged="positional" if compiled else "zip",
+    return nearest_centroid(
+        df, cent_rows, _sql_dot(cv_name, "k.kv"), out_name, largest=True
     )
 
 
@@ -383,19 +303,23 @@ def _probe_df(spark, cent_rows, qrows, nprobe: int):
     """,
     note=f"IVF ANN: {NLIST} TRAINED coarse centroids (v06's two "
     "deterministic Lloyd steps, 6-decimal-rounded, collected as k x "
-    "dim model parameters — train once, broadcast like any dim "
-    "table; VERDICT r7 item 5); assignment = "
-    "argmax-dot over broadcast centroids (narrow, NLIST*dim flops/row); "
-    f"queries probe {NPROBE} cells and re-score exactly within them — "
+    "dim model parameters — train once, ship with the index). Cell "
+    "assignment runs through the one nearest-centroid kernel: the "
+    "centroids are a one-row relation read as a scalar subquery, "
+    "each vector takes the argmax dot (ties to the lowest cid) with "
+    "no corpus shuffle, "
+    "and a vector whose length differs from the model's fails the "
+    "query, as list_dot_product does. "
+    f"Queries probe {NPROBE} cells and re-score exactly within them — "
     "per-query work O(corpus/NLIST * NPROBE), the scale path when "
     "brute force (v01) stops fitting the latency budget",
 )
 def v04_ivf_topk(spark: SparkSession, sf_dir: str):
     # ONE corpus scan (was 4 — rescan-watch adjudication, VERDICT r12
-    # item 2): cell assignment is a per-row argmax expression over the
-    # literal trained centroids (_cell_expr — no crossJoin explosion,
-    # no corpus shuffle), and the bounded query sample's probe lists
-    # are prepared driver-side from bit-identical folds (_probe_pairs;
+    # item 2): cell assignment is a per-row argmax over the one-row
+    # centroid model (_with_cell — no k-fold row explosion, no corpus
+    # shuffle), and the bounded query sample's probe lists are
+    # prepared driver-side from bit-identical folds (_probe_pairs;
     # in serving, the query vector is a request parameter). Candidate
     # rows compute the exact cosine IN THE SCAN STAGE, so the only
     # shuffle ships (query_id, cand_id, cosine) — never a 64-double
@@ -1511,44 +1435,21 @@ def _pq_codebook(spark, e, sf_dir: str) -> list:
     )
 
 
-def _code_expr(cv_name: str, m: int, cb_m):
-    """PQ code assignment for subspace m as a per-row expression over
-    literal codewords: argmin of d2(sv, ckv) with ties to the lowest
-    ccid == min_by(ccid, struct(d2, ccid)) from the old broadcast-join
-    + groupBy spelling. The d2 identity keeps the exact operand order
-    of the _PQ_D2 oracle fragment: (sv.sv - 2*sv.ckv) + ckv.ckv.
-    SQL-text generated for the same one-parse reason as _cell_expr."""
-    # HOF-fold kernel on purpose (the serve-vs-build split documented
-    # at _cell_expr): v10's serve invocation is plan-build-bound — the
-    # unrolled spelling measured 1.15 -> 4.46 s/run in pure per-run
-    # codegen with nothing to amortize it against at bench scale. An
-    # index BUILD materializing codes corpus-wide would pass the
-    # compiled kernel instead (e05's compiled _with_cell path).
-    from ..operators.kmeans import LITERAL_KERNEL_MAX_TERMS
+def _with_code(df, m: int, cb_m, cv_name: str = "cv"):
+    """Add code{m}, the PQ code of subspace m: argmin of
+    d2(sv, ckv) = (sv.sv - 2 sv.ckv) + ckv.ckv, the operand order of
+    the _PQ_D2 oracle fragment, ties to the lowest ccid — through the
+    one nearest-centroid kernel (operators/kmeans.nearest_centroid),
+    whose kk is ckv.ckv."""
+    from ..operators.kmeans import nearest_centroid
 
-    terms = sum(len(ckv) for _, ckv, _ in cb_m)
-    if terms > LITERAL_KERNEL_MAX_TERMS:
-        # fail LOUD at the measured janino ceiling instead of letting
-        # a grown codebook (PQ_K x PQ_SUB literal terms) hit the
-        # cliff SCALE.md measured (VERDICT r14 item 2). The shipped
-        # codebook is PQ_K=8 x PQ_SUB=16 = 128 terms — 4x headroom;
-        # a build needing more moves the codewords into the data
-        # plane (the operators/kmeans.broadcast_cells_dot pattern,
-        # with d2's exact operand order in the struct).
-        raise ValueError(
-            f"_code_expr: {terms} literal terms in subspace {m} "
-            f"exceeds the {LITERAL_KERNEL_MAX_TERMS}-term codegen "
-            "ceiling — broadcast the codebook as data instead of "
-            "SQL text (see operators/kmeans.broadcast_cells_dot)"
-        )
     sv = f"slice({cv_name}, {m * PQ_SUB + 1}, {PQ_SUB})"
-    sv2 = _sql_fold_dot(sv, sv)
-    structs = ",".join(
-        f"struct({sv2} - 2 * {_sql_fold_dot(sv, _sql_darr(ckv))}"
-        f" + {_sql_dlit(ckv2)} AS d2, {ccid} AS c)"
-        for ccid, ckv, ckv2 in cb_m
+    return nearest_centroid(
+        df,
+        [(ccid, ckv) for ccid, ckv, _ in cb_m],
+        f"({_sql_dot(sv, sv)} - 2 * {_sql_dot(sv, 'k.kv')}) + k.kk",
+        f"code{m}",
     )
-    return F.expr(f"array_min(array({structs})).c")
 
 
 def _adc_lut(qrows, cb) -> dict:
@@ -1642,7 +1543,7 @@ def _adc_lut(qrows, cb) -> dict:
     """,
     note=f"V10 IVF-PQ: the combined FAISS-style ANN path — coarse "
     f"IVF probe ({NLIST} TRAINED cells — v06's two-step Lloyd "
-    f"centroids, the same quantizer v04 broadcasts — {NPROBE} "
+    f"centroids, the same quantizer v04 uses — {NPROBE} "
     f"probed) bounds the "
     f"candidate set, PQ asymmetric-distance computation (ADC: "
     f"sum over {PQ_M} subspaces of the query-subvector-to-"
@@ -1655,15 +1556,19 @@ def _adc_lut(qrows, cb) -> dict:
     "in RAM, and exact distance I/O is paid only for the "
     "shortlist. All distances use the dot-product identity and the "
     "ADC sum is decimal-cast, so ranking order is bit-identical "
-    "across engines; ties break on cand_id.",
+    "across engines; ties break on cand_id. The cell (argmax dot) "
+    "and each PQ code (argmin subspace distance) come from the one "
+    "nearest-centroid kernel: each model is a one-row relation "
+    "read as a scalar subquery, ties go to the lowest id, and a "
+    "length mismatch fails the query.",
 )
 def v10_ivfpq_topk(spark: SparkSession, sf_dir: str):
     # TWO corpus scans (was 7 — rescan-watch adjudication, VERDICT r12
     # item 2), and they are exactly the two the FAISS memory
     # architecture pays: scan 1 computes the index columns per row
-    # (coarse cell + PQ_M codes) as pure expressions over literal
-    # model parameters — no crossJoin explosion, no corpus shuffle —
-    # and ADC sums broadcast-literal LUT entries indexed by those
+    # (coarse cell + PQ_M codes) against one-row model relations read
+    # as scalar subqueries — no k-fold row explosion, no corpus
+    # shuffle — and ADC sums broadcast-literal LUT entries indexed by those
     # codes, so the ADC window shuffles only (query_id, cand_id,
     # adc2); scan 2 fetches raw vectors for the top-REFINE shortlist
     # only (a broadcast semi-join against 45 ids — raw-vector I/O is
@@ -1682,13 +1587,11 @@ def v10_ivfpq_topk(spark: SparkSession, sf_dir: str):
     base = _with_cell(
         e.select(F.col("vec_id").alias("cand_id"), vec.alias("cv")),
         cent_rows,
-    ).select(
-        "cand_id",
-        "cell",
-        *[
-            _code_expr("cv", m, cb[m]).alias(f"code{m}")
-            for m in range(PQ_M)
-        ],
+    )
+    for m in range(PQ_M):
+        base = _with_code(base, m, cb[m])
+    base = base.select(
+        "cand_id", "cell", *[f"code{m}" for m in range(PQ_M)]
     )
     # ADC per candidate row: sum over subspaces of the query's literal
     # LUT entry at that row's code — decimal-cast per term like the
@@ -2308,15 +2211,16 @@ def _e05_oracle() -> str:
     "duplicates never pollute the index, with cluster sizes kept as "
     "provenance; (2) int8 quantization scale per kept vector (v07) "
     "— the storage row the serving tier reads; (3) IVF cell "
-    "assignment against the broadcast coarse codebook — the SAME "
-    "trained two-step-Lloyd quantizer v04/v10 use (round 8); (4) "
+    "assignment through the one nearest-centroid kernel against the "
+    "SAME trained two-step-Lloyd quantizer v04/v10 use, shipped as a "
+    "one-row relation read as a scalar subquery (argmax dot, ties to "
+    "the lowest cid; a length mismatch fails the query); (4) "
     "deterministic md5 shard for the writer (s08). Scale: the only "
     "corpus-sized exchanges are the SRP bucket groupBy, the CC "
     "rounds (both bucketed/node-sized) and the cluster-size window "
-    "— ONE shuffle of the narrow canon rows on canonical_id (r15: "
-    "formerly a groupBy aggregate PLUS a co-partitioned join back, "
-    "two exchanges for the same count; the component table is "
-    "corpus-cardinality so it could never broadcast); only the "
+    "— ONE shuffle of the narrow canon rows on canonical_id (the "
+    "component table is corpus-cardinality, so a groupBy-and-join-"
+    "back would cost two exchanges for the same count); only the "
     "genuinely bounded centroid codebook broadcasts. Everything "
     "downstream of keep-one is keyed on vec_id, so dedup -> "
     "quantize -> assign -> shard chains without re-partitioning. "
@@ -2348,7 +2252,6 @@ def e05_embedding_index_pipeline(spark: SparkSession, sf_dir: str):
     feats = _with_cell(
         e.select("vec_id", vec.alias("cv")),
         _trained_centroid_rows(spark, e, sf_dir),
-        compiled=True,
     ).select("vec_id", "cell", scale.alias("scale"))
 
     # uncapped here (exact oracle semantics); a production index

@@ -422,12 +422,11 @@ KM_DIM = 64
     FROM dims GROUP BY cell, dim_idx
     """,
     note=f"One Lloyd's k-means iteration over embeddings (k={KM_K}): "
-    "argmin squared distance via ||k||^2 - 2 c.k as a per-row "
-    "expression over the k collected centroid literals (r13 — "
-    "formerly crossJoin(broadcast)+groupBy(vec_id).min_by, whose "
-    "exchange moved the whole corpus WITH vectors at ~420 B/row; "
-    "now the assignment is a projection and nothing data-sized "
-    "shuffles), then element-wise centroid means in LONG form "
+    "argmin squared distance via ||k||^2 - 2 c.k, ties to the lowest "
+    "cid, through the one nearest-centroid kernel — the k collected "
+    "centroids are a one-row relation read as a scalar subquery, so "
+    "the assignment moves no corpus row and a length mismatch fails "
+    "the query — then element-wise centroid means in LONG form "
     "(cell, dim) whose groupBy partial-aggregates map-side. Sums "
     "decimal-cast for order independence; the full loop is this "
     "step under operators/kmeans.py's convergence driver. The "
@@ -438,9 +437,9 @@ def v05_kmeans_step(spark: SparkSession, sf_dir: str):
     e = t(spark, sf_dir, "embeddings")
     vec = F.col("embedding").cast("array<double>")
     corp = e.select("vec_id", vec.alias("cv"))
-    # seeds collected as literal model rows (k x dim doubles); the
-    # assignment is then a scan-side projection — see
-    # _spark_lloyd_step for the r13 rewrite rationale
+    # seeds collected as model rows (k x dim doubles); the
+    # assignment then runs against them without a corpus shuffle —
+    # see _spark_lloyd_step
     return _spark_lloyd_step(corp, _seed_rows(corp, KM_K))
 
 
@@ -504,25 +503,16 @@ def _step_rows(step_df) -> list:
 
 
 def _spark_lloyd_step(corp, cent_rows):
-    """One Lloyd step over literal centroid rows: per-row argmin
-    assignment (operators/kmeans.nearest_cell_expr — a PROJECTION),
-    then long-form rounded means whose groupBy partial-aggregates
-    map-side to k x dim rows per task. The r13 rewrite: the old
-    crossJoin(broadcast) + groupBy(vec_id).min_by spelling collapsed
-    the k-fold explosion map-side but still moved the whole corpus,
-    vectors included, through the groupBy exchange (~420 B/row,
-    tools/shuffle_metrics.py) — now nothing data-sized shuffles.
-    Assignments are bit-identical: same d formula, same fold
-    sequence, same (d, cid) tie-break (sqltext.nearest_cell_sql)."""
+    """One Lloyd step over collected centroid rows: per-row argmin
+    assignment through operators/kmeans.assign_cells (the one
+    nearest-centroid kernel — no corpus shuffle), then long-form
+    rounded means whose groupBy partial-aggregates map-side to
+    k x dim rows per task. Assignments match the _sql_lloyd_step
+    oracle bit for bit: same d formula, same fold sequence, same
+    (d, cid) tie-break."""
     from ..functions.rounding import rhu
     from ..operators.kmeans import assign_cells
 
-    # assign_cells, not bare nearest_cell_expr (r15): below the
-    # 512-term ceiling this IS the literal kernel (same plan, same
-    # bits); above it the dispatcher takes the broadcast kernel, so
-    # training a model with k x dim past the ceiling cannot hit the
-    # measured janino cliff either (VERDICT r14 item 2 — the fence
-    # now covers train AND serve).
     assign = assign_cells(corp, cent_rows).select("cell", "cv")
     dims = assign.select(
         "cell", F.posexplode("cv").alias("dim_idx0", "val")
@@ -553,12 +543,13 @@ def _spark_lloyd_step(corp, cent_rows):
     SELECT cell, dim_idx, n_members, centroid_val FROM step2
     """,
     note="V6: operators/kmeans.kmeans_fit bounded to TWO Lloyd "
-    "iterations with a full DuckDB value oracle (VERDICT r2 #9) — "
+    "iterations with a full DuckDB value oracle — "
     "iteration-1 centroids are rounded to 6 decimals in BOTH engines "
     "before re-use, making the second assignment bit-deterministic. "
-    "r13: step-1's k x dim rounded centroids COLLECT and feed step 2 "
-    "as one-parse literals (exact repr round-trip), exactly how the "
-    "unbounded operator iterates — the serve plan is one corpus scan "
+    "Step-1's k x dim rounded centroids COLLECT and feed step 2 as "
+    "its model — a one-row relation of exact literals, applied by "
+    "the one nearest-centroid kernel — exactly how the "
+    "unbounded operator iterates: the serve plan is one corpus scan "
     "+ one map-side-combined (cell, dim) exchange (~32 B/row "
     "measured), and no exchange anywhere carries a vector. The "
     "unbounded operator (displacement-convergence loop) stays "
@@ -569,8 +560,8 @@ def v06_kmeans_two_steps(spark: SparkSession, sf_dir: str):
     vec = F.col("embedding").cast("array<double>")
     corp = e.select("vec_id", vec.alias("cv"))
     # step-1 centroids are collected (k x dim 6-decimal doubles, the
-    # per-round model state) and fed to step 2 as literals — the
-    # trainer's iteration discipline (operators/kmeans.py r13): the
+    # per-round model state) and fed to step 2 as its model — the
+    # trainer's iteration discipline (operators/kmeans.py): the
     # serve plan is ONE corpus scan + one (cell, dim) aggregation,
     # and no exchange anywhere carries a vector
     cent2_rows = _step_rows(_spark_lloyd_step(corp, _seed_rows(corp, KM_K)))

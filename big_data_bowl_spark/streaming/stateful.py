@@ -294,6 +294,12 @@ def recent_values_digest(events: DataFrame, keep: int = 5) -> DataFrame:
     n_seen (total events folded) is the strictly increasing column a
     max-by upsert orders a key's emissions by; the final emission
     equals the batch top-N over the whole input.
+
+    A NULL value is an event like any other: it stays in the buffer
+    as NULL and counts in n_buffered, orders after the non-NULL
+    values of its ts (as a descending sort puts NULLs last), and is
+    skipped by sum_recent_cents, which is NULL when every buffered
+    value is, as SQL SUM is.
     """
 
     def fn(
@@ -311,21 +317,29 @@ def recent_values_digest(events: DataFrame, keep: int = 5) -> DataFrame:
         n_seen, ts_us, cents = state.get if state.exists else (0, [], [])
         buf = list(zip(ts_us, cents))
         for pdf in pdfs:
-            new_cents = (pdf["value"] * 100.0).round().astype("int64")
-            buf.extend(zip(_ts_us(pdf).tolist(), new_cents.tolist()))
+            new_cents = [
+                None if pd.isna(c) else int(c)
+                for c in (pdf["value"] * 100.0).round().tolist()
+            ]
+            buf.extend(zip(_ts_us(pdf).tolist(), new_cents))
             n_seen += len(pdf)
-        # bounded top-N by event time (ties: larger cents first, so the
-        # truncation is a deterministic function of the multiset)
-        buf = sorted(buf, reverse=True)[:keep]
+        # bounded top-N by event time (ties: larger cents first, NULL
+        # last, so the truncation is a deterministic function of the
+        # multiset)
+        buf = sorted(
+            buf, key=lambda p: (p[0], p[1] is not None, p[1] or 0),
+            reverse=True,
+        )[:keep]
         state.update(
-            (n_seen, [int(t) for t, _ in buf], [int(c) for _, c in buf])
+            (n_seen, [int(t) for t, _ in buf], [c for _, c in buf])
         )
+        present = [c for _, c in buf if c is not None]
         yield pd.DataFrame(
             {
                 "user_id": [user_id],
                 "n_seen": [n_seen],
                 "n_buffered": [len(buf)],
-                "sum_recent_cents": [sum(int(c) for _, c in buf)],
+                "sum_recent_cents": [sum(present) if present else None],
             }
         )
 

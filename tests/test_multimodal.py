@@ -2873,14 +2873,16 @@ def test_decode_dispatch_fails_closed_all_formats():
             tree = box(typ, tree)
         return tree
 
-    def fmp4_trun(tfhd_flags, tfhd_tail, trun_body):
+    def fmp4_trun(tfhd_flags, tfhd_tail, trun_body, tfhd_last=False):
         # a fragmented skeleton cut before its first moof, plus one
-        # moof(mfhd + traf(tfhd + trun)) for track 1
+        # moof(mfhd + traf(tfhd + trun)) for track 1, or with
+        # tfhd_last, traf(trun + tfhd) ending the file
         src = encode_mp4_container(
             1000, sample_sizes=[[4, 4]], fragment_samples=2
         )
         tfhd = box(b"tfhd", struct.pack(">II", tfhd_flags, 1) + tfhd_tail)
-        traf = box(b"traf", tfhd + box(b"trun", trun_body))
+        trun = box(b"trun", trun_body)
+        traf = box(b"traf", trun + tfhd if tfhd_last else tfhd + trun)
         mfhd = box(b"mfhd", struct.pack(">II", 0, 1))
         return src[: src.index(b"moof") - 4] + box(b"moof", mfhd + traf)
 
@@ -2927,6 +2929,44 @@ def test_decode_dispatch_fails_closed_all_formats():
             "mp4",
             fmp4_trun(0x020000, b"", struct.pack(">III", 0x200, 1000, 4)),
         ),
+        # tfhd flags that declare optional fields the tfhd box does
+        # not hold: followed by a trun (whose box header would read as
+        # the default sample size), or ending the file
+        (
+            "mp4",
+            fmp4_trun(0x020010, b"", struct.pack(">II", 0, 1)),
+        ),
+        (
+            "mp4",
+            fmp4_trun(
+                0x000011, b"", struct.pack(">II", 0x200, 1) + b"\0" * 4,
+                tfhd_last=True,
+            ),
+        ),
+    ]
+
+    def exif_jpeg(big_endian, entries):
+        # JPEG SOI + APP1 Exif whose IFD0 at offset 8 holds `entries`
+        # (tag, type, count, 4-byte value field)
+        bo = ">" if big_endian else "<"
+        ifd = struct.pack(bo + "H", len(entries)) + b"".join(
+            struct.pack(bo + "HHI", tag, typ, cnt) + val
+            for tag, typ, cnt, val in entries
+        ) + bytes(4)
+        tiff = (b"MM" if big_endian else b"II") + struct.pack(
+            bo + "HI", 42, 8
+        ) + ifd
+        body = b"Exif\0\0" + tiff
+        return b"\xff\xd8\xff\xe1" + struct.pack(">H", 2 + len(body)) + body
+
+    exif = [
+        # the Exif IFD pointer names its own IFD
+        ("exif", exif_jpeg(False, [(0x8769, 4, 1, struct.pack("<I", 8))])),
+        ("exif", exif_jpeg(True, [(0x8769, 4, 1, struct.pack(">I", 8))])),
+    ] + [
+        # SHORT, LONG and RATIONAL values with count 0
+        ("exif", exif_jpeg(False, [(tag, typ, 0, bytes(4))]))
+        for tag, typ in ((0x0112, 3), (0xA002, 4), (0x011A, 5))
     ]
     child = (
         "import pickle, resource, sys\n"
@@ -2943,6 +2983,8 @@ def test_decode_dispatch_fails_closed_all_formats():
         "            media.parse_mp4_sample_index,\n"
         "            media.parse_mp4_sample_ranges,\n"
         "        ]\n"
+        "    if fmt == 'exif':\n"
+        "        calls = [media.parse_exif]\n"
         "    for call in calls:\n"
         "        try:\n"
         "            out.append(call(payload))\n"
@@ -2953,7 +2995,7 @@ def test_decode_dispatch_fails_closed_all_formats():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     res = subprocess.run(
         [sys.executable, "-c", child],
-        input=pickle.dumps(oversized + wide_only + mp4),
+        input=pickle.dumps(oversized + wide_only + mp4 + exif),
         capture_output=True,
         cwd=repo,
         env={**os.environ, "OPENBLAS_NUM_THREADS": "1"},
@@ -2974,7 +3016,9 @@ def test_decode_dispatch_fails_closed_all_formats():
     no_moov_samples = [dict.fromkeys(stats[0], 0)]
     assert outcomes == ["ValueError"] * len(oversized) + ["ok"] + [
         stats, [], stats, "ValueError"
-    ] + [no_moov_samples, "ValueError"] * 2, outcomes
+    ] + [no_moov_samples, "ValueError"] * 4 + ["ValueError"] * len(
+        exif
+    ), outcomes
 
 
 # ---------------------------------------------------------------------------

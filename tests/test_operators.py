@@ -379,20 +379,15 @@ def test_kmeans_fit_recovers_separated_blobs(spark):
 
 
 def test_kmeans_fit_large_k_uses_broadcast_kernel(spark):
-    """kmeans_fit END-TO-END through the large-k dispatch: at
-    k x dim = 18 x 32 = 576 > LITERAL_KERNEL_MAX_TERMS every Lloyd
-    assignment runs the broadcast kernel (the literal kernel would
-    burn a failed 64 KB-limit compile per round here), and the
-    trainer still recovers well-separated blobs exactly."""
+    """kmeans_fit end-to-end at k x dim = 18 x 32 = 576 model terms
+    (more than the 512 any shipped model uses): every Lloyd
+    assignment runs the one nearest-centroid kernel, and the trainer
+    still recovers well-separated blobs exactly."""
     import random
 
-    from big_data_bowl_spark.operators.kmeans import (
-        LITERAL_KERNEL_MAX_TERMS,
-        kmeans_fit,
-    )
+    from big_data_bowl_spark.operators.kmeans import kmeans_fit
 
     dim, k = 32, 18
-    assert k * dim > LITERAL_KERNEL_MAX_TERMS
     rng = random.Random(23)
     # blob c sits at (10c, 10c, ..., 10c); vids 0..k-1 are one point
     # per blob, so the deterministic lowest-vid seeding starts with
@@ -413,154 +408,12 @@ def test_kmeans_fit_large_k_uses_broadcast_kernel(spark):
     assert got == [(c, 20) for c in range(k)]
 
 
-def test_assignment_kernels_bit_identical(spark):
-    """VERDICT r13 item 2: above the literal kernel's measured parse
-    ceiling, assign_cells dispatches to the broadcast array-of-struct
-    kernel — and the two kernels must agree BIT-FOR-BIT on every
-    assignment (same fold sequence, same kk doubles, same (d, cid)
-    tie-break), at a k past the dispatch crossover."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from big_data_bowl_spark.operators.kmeans import (
-        LITERAL_KERNEL_MAX_TERMS,
-        assign_cells,
-        broadcast_cells,
-        nearest_cell_expr,
-    )
-
-    rng = random.Random(11)
-    dim = 16
-    k = LITERAL_KERNEL_MAX_TERMS // dim + 8  # past the crossover
-    # adversarial centroids: duplicates force the cid tie-break, and
-    # near-duplicates (1 ulp apart in one coordinate) force the
-    # bit-level distance compare
-    cent = [(i, [rng.uniform(-1, 1) for _ in range(dim)])
-            for i in range(k - 2)]
-    cent.append((k - 2, list(cent[0][1])))  # exact duplicate of cid 0
-    bumped = list(cent[1][1])
+def _adversarial_model(rng, k, dim):
+    """k centroids with norms spread over four decades, plus an exact
+    duplicate of cid 0 (id tie-break) and a 1-ulp twin of cid 1
+    (bit-level score compare)."""
     import math
-    bumped[0] = math.nextafter(bumped[0], math.inf)
-    cent.append((k - 1, bumped))  # 1-ulp twin of cid 1
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)])
-            for i in range(400)]
-    # plant exact copies of the duplicated centroids among the rows
-    rows[0] = (0, list(cent[0][1]))
-    rows[1] = (1, list(cent[1][1]))
-    corp = spark.createDataFrame(rows, "vid long, cv array<double>")
 
-    lit = corp.withColumn("cell", nearest_cell_expr("cv", cent))
-    bc = broadcast_cells(corp, cent)
-    got_lit = {r["vid"]: r["cell"] for r in lit.collect()}
-    got_bc = {r["vid"]: r["cell"] for r in bc.collect()}
-    assert got_lit == got_bc
-    assert got_lit[0] == 0  # duplicate centroid tie broke to low cid
-    # dispatcher: this k routes to the broadcast kernel (no giant
-    # literal parse), and small k routes to the literal kernel
-    disp = assign_cells(corp, cent)
-    assert {r["vid"]: r["cell"] for r in disp.collect()} == got_lit
-    assert "__cents__" not in disp.columns
-    small = assign_cells(corp, cent[:4])
-    lit_small = corp.withColumn(
-        "cell", nearest_cell_expr("cv", cent[:4])
-    )
-    assert [r["cell"] for r in small.orderBy("vid").collect()] == [
-        r["cell"] for r in lit_small.orderBy("vid").collect()
-    ]
-    # dispatch boundary is INCLUSIVE at exactly MAX_TERMS terms:
-    # k*dim == 512 stays on the literal kernel (no broadcast join in
-    # the plan), one more centroid crosses to the broadcast kernel
-    at_ceiling = LITERAL_KERNEL_MAX_TERMS // dim
-    assert at_ceiling * dim == LITERAL_KERNEL_MAX_TERMS
-    plan_at = assign_cells(corp, cent[:at_ceiling])._jdf.queryExecution(
-    ).analyzed().toString()
-    plan_over = assign_cells(
-        corp, cent[: at_ceiling + 1]
-    )._jdf.queryExecution().analyzed().toString()
-    assert "Join" not in plan_at
-    assert "Join" in plan_over
-    # the broadcast kernel must not shuffle the corpus: its plan has
-    # no Exchange at all (BroadcastNestedLoopJoin of a 1-row side)
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        bc.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "Exchange hashpartitioning" not in plan
-
-    # Ragged-input parity (r14 review finding): a row SHORTER than
-    # the centroid dim must FAIL LOUD in BOTH kernels (ANSI
-    # out-of-bounds index), not silently diverge — the zip_with
-    # spelling broadcast_cells originally used would have null-padded
-    # the short side and produced a different assignment than the
-    # literal kernel's positional indexing. Both kernels index cv
-    # positionally now, so both raise the same ANSI error class.
-    import pytest
-    from pyspark.errors.exceptions.captured import (
-        ArrayIndexOutOfBoundsException,
-    )
-
-    ragged = spark.createDataFrame(
-        [(0, [1.0] * (dim - 3))], "vid long, cv array<double>"
-    )
-    with pytest.raises(ArrayIndexOutOfBoundsException):
-        ragged.withColumn(
-            "cell", nearest_cell_expr("cv", cent[:4])
-        ).collect()
-    with pytest.raises(ArrayIndexOutOfBoundsException):
-        broadcast_cells(ragged, cent[:4]).collect()
-    # ...and a row LONGER than the centroid dim must NOT fail in
-    # either kernel (the literal kernel never indexes past dim-1;
-    # broadcast_cells zips over a size(kv) slice) and both must
-    # ignore the extra elements identically: the longer twin of a
-    # planted centroid still assigns to that centroid's cid in both.
-    longer = spark.createDataFrame(
-        [(0, list(cent[2][1]) + [99.0, -99.0]),
-         (1, [rng.uniform(-1, 1) for _ in range(dim + 5)])],
-        "vid long, cv array<double>",
-    )
-    lit_long = {
-        r["vid"]: r["cell"]
-        for r in longer.withColumn(
-            "cell", nearest_cell_expr("cv", cent)
-        ).collect()
-    }
-    bc_long = {
-        r["vid"]: r["cell"]
-        for r in broadcast_cells(longer, cent).collect()
-    }
-    assert lit_long == bc_long
-    assert lit_long[0] == 2  # extras ignored, exact match wins
-
-
-def test_dot_assignment_kernels_bit_identical(spark):
-    """VERDICT r14 item 2: the IVF serve/build family assigns by
-    ARGMAX DOT (ties to lowest cid), not argmin distance, so it has
-    its own broadcast kernel (broadcast_cells_dot) behind the
-    queries-side dispatcher (extras._with_cell). Above the 512-term
-    ceiling the dispatcher must route to it, and the two kernels
-    must agree bit-for-bit — including on centroids whose NORMS
-    differ (where a wrong route through the distance kernel would
-    visibly change assignments)."""
-    import math
-    import random
-
-    import big_data_bowl_spark.queries.extras as ex
-    from big_data_bowl_spark.operators.kmeans import (
-        LITERAL_KERNEL_MAX_TERMS,
-        broadcast_cells_dot,
-    )
-
-    rng = random.Random(23)
-    dim = 16
-    k = LITERAL_KERNEL_MAX_TERMS // dim + 8  # past the crossover
-    # adversarial: wildly different norms (argmax-dot vs argmin-dist
-    # discriminator), an exact duplicate pair (cid tie-break), and a
-    # 1-ulp twin (bit-level score compare)
     cent = [
         (
             i,
@@ -568,110 +421,158 @@ def test_dot_assignment_kernels_bit_identical(spark):
         )
         for i in range(k - 2)
     ]
-    cent.append((k - 2, list(cent[0][1])))  # duplicate of cid 0
+    cent.append((k - 2, list(cent[0][1])))
     bumped = list(cent[1][1])
     bumped[0] = math.nextafter(bumped[0], math.inf)
     cent.append((k - 1, bumped))
+    return cent
+
+
+def _replay_argbest(rows, cent, score, largest=False):
+    """Driver-side reference: pyfold_dot replays the kernel's IEEE op
+    sequence, and the (score, id) ordering its struct tie-break."""
+    out = {}
+    for vid, cv in rows:
+        keyed = [
+            ((-score(cv, kv), cid) if largest else (score(cv, kv), cid))
+            for cid, kv in cent
+        ]
+        out[vid] = min(keyed)[1]
+    return out
+
+
+def _plan_text(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _assert_ragged_rows_fail(spark, assign, lengths):
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    for n in lengths:
+        bad = spark.createDataFrame(
+            [(0, [1.0] * n)], "vid long, cv array<double>"
+        )
+        with pytest.raises(
+            SparkRuntimeException, match="array lengths must be equal"
+        ):
+            assign(bad).collect()
+
+
+def test_assignment_kernels_bit_identical(spark):
+    """The argmin scores of the one nearest-centroid kernel — Lloyd's
+    kk - 2 cv.kv and the PQ (sv.sv - 2 sv.kv) + kk over a subspace
+    slice — match a pyfold_dot replay bit for bit on duplicate
+    centroids, 1-ulp twins and mixed norms, at model sizes above
+    512 terms. The plan reads the one-row model as a scalar subquery
+    and never shuffles the corpus, and a ragged row fails the
+    query."""
+    import random
+
+    import big_data_bowl_spark.queries.extras as ex
+    from big_data_bowl_spark.functions.sqltext import pyfold_dot
+    from big_data_bowl_spark.operators.kmeans import assign_cells
+
+    rng = random.Random(11)
+    dim, k = 2 * ex.PQ_SUB, 40
+    cent = _adversarial_model(rng, k, dim)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)])
+            for i in range(400)]
+    rows[0] = (0, list(cent[0][1]))  # exact copy of a duplicated cid
+    rows[1] = (1, list(cent[1][1]))  # exact copy of a 1-ulp twin
+    corp = spark.createDataFrame(rows, "vid long, cv array<double>")
+
+    lloyd = assign_cells(corp, cent)
+    want = _replay_argbest(
+        rows, cent,
+        lambda cv, kv: pyfold_dot(kv, kv) - 2.0 * pyfold_dot(cv, kv),
+    )
+    assert {r["vid"]: r["cell"] for r in lloyd.collect()} == want
+    assert want[0] == 0  # duplicate centroid tie broke to low cid
+    assert "__cents__" not in lloyd.columns
+    plan = _plan_text(lloyd)
+    # the model arrives as a scalar subquery: no join, no shuffle
+    assert "Subquery" in plan and "Join" not in plan
+    assert "Exchange hashpartitioning" not in plan
+
+    # PQ subspace m=1 against a k x PQ_SUB = 640-term codebook
+    lo = ex.PQ_SUB
+    cb = [
+        (cid, kv[lo:], pyfold_dot(kv[lo:], kv[lo:])) for cid, kv in cent
+    ]
+    assert sum(len(ckv) for _, ckv, _ in cb) > 512
+    pq = ex._with_code(corp, 1, cb)
+    want_pq = _replay_argbest(
+        [(vid, cv[lo:]) for vid, cv in rows],
+        [(cid, ckv) for cid, ckv, _ in cb],
+        lambda sv, ckv: (pyfold_dot(sv, sv) - 2 * pyfold_dot(sv, ckv))
+        + pyfold_dot(ckv, ckv),
+    )
+    assert {r["vid"]: r["code1"] for r in pq.collect()} == want_pq
+    assert "Exchange hashpartitioning" not in _plan_text(pq)
+
+    _assert_ragged_rows_fail(
+        spark, lambda df: assign_cells(df, cent), (dim - 3, dim + 2)
+    )
+    _assert_ragged_rows_fail(
+        spark, lambda df: ex._with_code(df, 1, cb), (dim - 3,)
+    )
+
+
+def test_dot_assignment_kernels_bit_identical(spark):
+    """The IVF score assigns by ARGMAX dot with ties to the lowest
+    cid. On centroids whose norms differ, argmax-dot and
+    argmin-distance disagree, so this pins the largest=True ordering
+    against a pyfold_dot replay, with the same duplicate and 1-ulp
+    cases, no corpus shuffle and ragged rows failing both ways."""
+    import random
+
+    import big_data_bowl_spark.queries.extras as ex
+    from big_data_bowl_spark.functions.sqltext import pyfold_dot
+    from big_data_bowl_spark.operators.kmeans import assign_cells
+
+    rng = random.Random(23)
+    dim, k = 16, 40
+    cent = _adversarial_model(rng, k, dim)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(400)
     ]
     corp = spark.createDataFrame(rows, "vid long, cv array<double>")
 
-    lit = corp.withColumn("cell", ex._cell_expr("cv", cent))
-    bc = broadcast_cells_dot(corp, cent)
-    got_lit = {r["vid"]: r["cell"] for r in lit.collect()}
-    got_bc = {r["vid"]: r["cell"] for r in bc.collect()}
-    assert got_lit == got_bc
-    # compiled (sql_dot_lit) kernel parity at a k UNDER the ceiling —
-    # the serve/build split's other leg, kept small so the unrolled
-    # chain stays codegen-clean in the test
-    lit_c = corp.withColumn("cell", ex._cell_expr("cv", cent[:8], True))
-    lit_h = corp.withColumn("cell", ex._cell_expr("cv", cent[:8]))
-    assert [r["cell"] for r in lit_c.orderBy("vid").collect()] == [
-        r["cell"] for r in lit_h.orderBy("vid").collect()
-    ]
-    # dispatcher: over-ceiling routes to the broadcast kernel
-    # (BroadcastNestedLoopJoin of the 1-row model relation, NO
-    # corpus shuffle), at-or-under stays on the one-parse literal
-    disp = ex._with_cell(corp, cent)
-    assert {r["vid"]: r["cell"] for r in disp.collect()} == got_lit
-    assert "__cents__" not in disp.columns
-    plan_over = disp._jdf.queryExecution().analyzed().toString()
-    assert "Join" in plan_over
-    at_ceiling = LITERAL_KERNEL_MAX_TERMS // dim
-    plan_at = ex._with_cell(
-        corp, cent[:at_ceiling]
-    )._jdf.queryExecution().analyzed().toString()
-    assert "Join" not in plan_at
-
-    # Ragged-row parity per dispatch pair (r15 review finding: the
-    # two LITERAL kernels themselves diverge on length-mismatched
-    # rows — the HOF fold null-pads, the compiled unroll indexes
-    # positionally — so each broadcast mode must match the kernel it
-    # stands in for, or crossing the ceiling silently changes what
-    # malformed rows do).
-    import pytest
-    from pyspark.errors.exceptions.captured import (
-        ArrayIndexOutOfBoundsException,
+    got = {r["vid"]: r["cell"] for r in ex._with_cell(corp, cent).collect()}
+    want = _replay_argbest(rows, cent, pyfold_dot, largest=True)
+    assert got == want
+    # exact duplicates listed high id first: both scores break the
+    # tie to the lowest id
+    tie = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vid long, cv array<double>"
     )
-
-    ragged = spark.createDataFrame(
-        [(0, [1.0] * (dim + 3)), (1, [1.0] * (dim - 2))],
-        "vid long, cv array<double>",
+    dup = [(5, [1.0, 0.0]), (3, [1.0, 0.0]), (4, [0.0, 1.0])]
+    assert ex._with_cell(tie, dup).first()["cell"] == 3
+    assert assign_cells(tie, dup).first()["cell"] == 3
+    lloyd = {r["vid"]: r["cell"] for r in assign_cells(corp, cent).collect()}
+    assert lloyd != got  # mixed norms make the two scores disagree
+    assert "Exchange hashpartitioning" not in _plan_text(
+        ex._with_cell(corp, cent)
     )
-    # serve pair: HOF literal fold == zip-mode broadcast, on BOTH
-    # mismatch directions (null-pad semantics — no error, same cell)
-    hof = {
-        r["vid"]: r["cell"]
-        for r in ragged.withColumn(
-            "cell", ex._cell_expr("cv", cent)
-        ).collect()
-    }
-    zipm = {
-        r["vid"]: r["cell"]
-        for r in broadcast_cells_dot(ragged, cent, ragged="zip").collect()
-    }
-    assert hof == zipm
-    # build pair: compiled literal == positional-mode broadcast —
-    # longer row identical cell, shorter row the identical ANSI
-    # out-of-bounds error in both
-    longer = ragged.filter("vid = 0")
-    lit_c = {
-        r["vid"]: r["cell"]
-        for r in longer.withColumn(
-            "cell", ex._cell_expr("cv", cent[:4], True)
-        ).collect()
-    }
-    pos = {
-        r["vid"]: r["cell"]
-        for r in broadcast_cells_dot(
-            longer, cent[:4], ragged="positional"
-        ).collect()
-    }
-    assert lit_c == pos
-    shorter = ragged.filter("vid = 1")
-    with pytest.raises(ArrayIndexOutOfBoundsException):
-        shorter.withColumn(
-            "cell", ex._cell_expr("cv", cent[:4], True)
-        ).collect()
-    with pytest.raises(ArrayIndexOutOfBoundsException):
-        broadcast_cells_dot(
-            shorter, cent[:4], ragged="positional"
-        ).collect()
-    with pytest.raises(ValueError, match="positional"):
-        broadcast_cells_dot(corp, cent, ragged="both")
+    _assert_ragged_rows_fail(
+        spark, lambda df: ex._with_cell(df, cent), (dim - 2, dim + 3)
+    )
 
 
 def test_v04_code_path_survives_over_ceiling_nlist(spark, monkeypatch):
-    """VERDICT r14 item 2, the end-to-end leg: drive v04's ACTUAL
-    code path with a trained model past the 512-term literal
-    ceiling (NLIST=16 x dim=64 = 1024 terms) and require (a) the
-    query executes — no janino cliff, because _with_cell routes the
-    assignment through the broadcast kernel, and training's
-    _spark_lloyd_step routes through assign_cells — and (b) the
-    over-ceiling assignments are bit-identical to the literal
-    HOF kernel's on the same trained centroids."""
+    """v04's actual code path with a trained model of NLIST=16 x
+    dim=64 = 1024 terms: training (_spark_lloyd_step) and assignment
+    (_with_cell) both run through the nearest-centroid kernel, the query
+    executes, and the assignments match a pyfold_dot replay of the
+    trained centroids."""
     import big_data_bowl_spark.queries.extras as ex
+    from big_data_bowl_spark.functions.sqltext import pyfold_dot
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
@@ -681,43 +582,32 @@ def test_v04_code_path_survives_over_ceiling_nlist(spark, monkeypatch):
     assert len(cent) == 16
     assert sum(len(kv) for _, kv in cent) > 512
     out = ex.v04_ivf_topk(spark, sf).collect()
-    assert len(out) > 0  # ran end-to-end through the fence
+    assert len(out) > 0
     corp = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("cv")
     )
-    fenced = {
+    got = {
         r["vec_id"]: r["cell"]
         for r in ex._with_cell(corp, cent).collect()
     }
-    literal = {
-        r["vec_id"]: r["cell"]
-        for r in corp.withColumn(
-            "cell", ex._cell_expr("cv", cent)
-        ).collect()
-    }
-    assert fenced == literal
-    assert len(set(fenced.values())) > 1  # non-vacuous model
+    rows = [(r["vec_id"], list(r["cv"])) for r in corp.collect()]
+    assert got == _replay_argbest(rows, cent, pyfold_dot, largest=True)
+    assert len(set(got.values())) > 1  # non-vacuous model
 
 
 def test_kmeans_and_sqltext_degenerate_inputs_fail_loud(spark):
-    """ADVICE r13: empty literal vectors / zero centroids must raise
-    a descriptive ValueError, not emit malformed SQL that dies with
-    an opaque parse error downstream."""
-    import pytest
-
-    from big_data_bowl_spark.functions.sqltext import (
-        nearest_cell_sql,
-        sql_dot_lit,
+    """Zero centroids must raise a descriptive ValueError, not emit
+    malformed SQL that dies with an opaque parse error downstream."""
+    from big_data_bowl_spark.operators.kmeans import (
+        assign_cells,
+        kmeans_fit,
     )
-    from big_data_bowl_spark.operators.kmeans import kmeans_fit
 
-    with pytest.raises(ValueError, match="empty literal vector"):
-        sql_dot_lit("cv", [])
-    with pytest.raises(ValueError, match="no centroid rows"):
-        nearest_cell_sql("cv", [])
     df = spark.createDataFrame(
         [(0, [1.0, 2.0])], "vid long, embedding array<double>"
     )
+    with pytest.raises(ValueError, match="no centroid rows"):
+        assign_cells(df, [], cv_name="embedding")
     with pytest.raises(ValueError, match="no centroid"):
         kmeans_fit(df, id_col="vid", k=0, max_iter=0)
     empty = df.where("vid < 0")

@@ -994,21 +994,18 @@ def test_timer_sessions_millisecond_boundary_window(spark, tmp_path):
     ) in oracle2
 
 
-def test_nearest_cell_sql_matches_python_argmin_bitwise(spark):
-    """The r13 Lloyd rewrite leans on one exactness contract: the
-    literal-centroid argmin expression (functions/sqltext.
-    nearest_cell_sql) assigns every vector to the SAME cell the old
-    crossJoin + min_by spelling did, bit-for-bit — same d formula,
-    same left-to-right fold, same (d, cid) tie-break. This pins it
-    against a driver-side reference that replays the identical IEEE
-    op sequence in Python (binary64 both sides), over adversarial
-    vectors: duplicated centroids (exact ties), negated pairs,
-    near-identical values differing in the last ulp, and denormals."""
+def test_nearest_centroid_matches_python_argmin_bitwise(spark):
+    """The Lloyd assignment (operators/kmeans.assign_cells, the one
+    nearest-centroid kernel) assigns every vector to the cell a
+    driver-side replay of the identical IEEE op sequence picks —
+    same d formula, same left-to-right fold, same (d, cid)
+    tie-break — over adversarial vectors: duplicated centroids
+    (exact ties), signed zeros, near-identical values differing in
+    the last ulp, and denormals."""
     import random as _r
 
-    from pyspark.sql import functions as F
-
-    from big_data_bowl_spark.operators.kmeans import nearest_cell_expr
+    from big_data_bowl_spark.functions.sqltext import pyfold_dot
+    from big_data_bowl_spark.operators.kmeans import assign_cells
 
     rng = _r.Random(13)
     dim, k, n = 8, 5, 200
@@ -1027,12 +1024,6 @@ def test_nearest_cell_sql_matches_python_argmin_bitwise(spark):
     rows = [(i, vec()) for i in range(n)]
     rows += [(n + j, list(kv)) for j, (_, kv) in enumerate(cents)]
 
-    def pyfold_dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
     expected = {}
     for vid, cv in rows:
         best = None
@@ -1045,20 +1036,5 @@ def test_nearest_cell_sql_matches_python_argmin_bitwise(spark):
     df = spark.createDataFrame(
         [(vid, cv) for vid, cv in rows], "vid long, cv array<double>"
     )
-    got = {
-        r["vid"]: r["cell"]
-        for r in df.select(
-            "vid", nearest_cell_expr("cv", cents).alias("cell")
-        ).collect()
-    }
+    got = {r["vid"]: r["cell"] for r in assign_cells(df, cents).collect()}
     assert got == expected
-    # r14: the broadcast kernel (centroids as a 1-row broadcast
-    # array<struct> relation, HOF fold) must replay the same IEEE
-    # sequence over the same adversarial inputs — three-way pin
-    from big_data_bowl_spark.operators.kmeans import broadcast_cells
-
-    got_bc = {
-        r["vid"]: r["cell"]
-        for r in broadcast_cells(df, cents).collect()
-    }
-    assert got_bc == expected

@@ -31,9 +31,9 @@ HEAVY = {"numpy", "pandas", "pyarrow", "duckdb"}
 COLLECT_ALLOWED = {
     # seed centroids (k rows) + per-round (cell, dim) sufficient
     # statistics (k x dim rows) — Lloyd's driver-side model state,
-    # the spark.ml KMeans iteration discipline (r13 rewrite: the
-    # corpus-shuffling crossJoin+groupBy assignment became a literal
-    # projection, so the convergence scalar collect became these two)
+    # the spark.ml KMeans iteration discipline (the assignment is a
+    # per-row pick against a one-row broadcast model, so no
+    # convergence scalar needs its own collect)
     "operators/kmeans.py": 2,
     "operators/rank.py": 2,  # bucket stats — num_buckets-sized
     # the PQ codebook (PQ_M x PQ_K x PQ_SUB = 512 doubles) and the
@@ -503,3 +503,41 @@ def test_one_stateful_api():
     ]
     assert not hits, hits
     assert not (repo / "vendor").exists()
+
+
+LITERAL_MODEL_SQL = ("array_min(array(", "array_max(array(")
+LITERAL_MODEL_NAMES = {
+    "LITERAL_KERNEL_MAX_TERMS",
+    "nearest_cell_sql",
+    "broadcast_cells_dot",
+}
+
+
+def test_centroid_models_are_data():
+    """Every nearest-centroid decision goes through
+    operators/kmeans.nearest_centroid, whose model is a one-row
+    relation: no SQL text picks a best element out of an array of
+    per-centroid literals, and the literal kernels, their dispatch
+    ceiling and the second broadcast kernel do not come back."""
+    import io
+    import tokenize
+
+    hits = []
+    for p, rel in _py_files():
+        src = p.read_text()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Constant) and isinstance(
+                node.value, str
+            ):
+                hits += [
+                    f"{rel}:{node.lineno}: {pat}"
+                    for pat in LITERAL_MODEL_SQL
+                    if pat in node.value.replace(" ", "")
+                ]
+        hits += [
+            f"{rel}:{tok.start[0]}: {tok.string}"
+            for tok in tokenize.generate_tokens(io.StringIO(src).readline)
+            if tok.type == tokenize.NAME
+            and tok.string in LITERAL_MODEL_NAMES
+        ]
+    assert not hits, hits

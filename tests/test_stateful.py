@@ -447,6 +447,84 @@ def test_list_state_digest_across_microbatches(spark, tmp_path):
     assert (final.n_buffered, final.sum_recent_cents) == (5, 5)
 
 
+def test_recent_values_digest_keeps_null_values(spark, tmp_path):
+    """A NULL value stays in the recency buffer as NULL: it counts in
+    n_buffered, orders after the non-NULL values of its ts (the batch
+    desc order puts NULLs last) and is skipped by the sum, which is
+    NULL when every buffered value is. Two planted micro-batches, so
+    NULLs also round-trip through the state arrays; the final
+    emission must equal the batch top-N."""
+    import os
+    from datetime import datetime
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from big_data_bowl_spark.streaming.stateful import recent_values_digest
+    from big_data_bowl_spark.streaming.windows import run_to_memory
+
+    def at(h):
+        return datetime(2024, 1, 1, h)
+
+    batches = [
+        [(1, at(0), 5.0), (1, at(1), 7.0), (1, at(2), None),
+         (1, at(2), 3.0), (2, at(0), None), (3, at(0), 1.25)],
+        [(1, at(3), None), (2, at(1), None), (3, at(1), 2.5)],
+    ]
+    schema = "user_id long, ts timestamp, value double"
+    src = tmp_path / "lake"
+    for i, data in enumerate(batches):
+        spark.createDataFrame(data, schema).coalesce(1).write.parquet(
+            str(src / f"b{i}")
+        )
+        for f in (src / f"b{i}").glob("*.parquet"):
+            os.utime(f, (1_000_000 + i * 1000,) * 2)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet")
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+    run_to_memory(
+        recent_values_digest(stream, keep=2),
+        "recent_digest_nulls",
+        output_mode="append",
+    )
+    got = {
+        r.user_id: (r.n_buffered, r.sum_recent_cents)
+        for r in spark.table("recent_digest_nulls")
+        .groupBy("user_id")
+        .agg(
+            F.max_by(
+                F.struct("n_buffered", "sum_recent_cents"), "n_seen"
+            ).alias("s")
+        )
+        .select("user_id", "s.*")
+        .collect()
+    }
+    ev = spark.createDataFrame(batches[0] + batches[1], schema).select(
+        "user_id",
+        F.unix_micros("ts").alias("ts_us"),
+        F.round(F.col("value") * 100.0).cast("long").alias("cents"),
+    )
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("ts_us"), F.desc("cents")
+    )
+    want = {
+        r.user_id: (r.n, r.s)
+        for r in ev.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 2)
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s"))
+        .collect()
+    }
+    # user 1 keeps the NULL at 03:00 and the 3.00 that sorts ahead of
+    # the NULL at 02:00; user 2's buffer is all NULL
+    assert want == {1: (2, 300), 2: (2, None), 3: (2, 375)}
+    assert got == want
+
+
 def test_timer_sessions_close_on_watermark(spark, tmp_path):
     """Event-time timeouts: sessions close when the WATERMARK passes
     last_event + gap — emission on time passing, not on a closing

@@ -514,30 +514,17 @@ def main() -> None:
         "(higher-order functions run outside codegen — 1.4x "
         "slower, see its note).",
         "",
-        "r14 literal-kernel ceiling (VERDICT r13 item 2, "
-        "measured — SCALE.md 'Round-14 literal-kernel "
-        "ceiling'): the one-parse literal argmin "
-        "(sqltext.nearest_cell_sql) codegens cleanly only up to "
-        "~512 total literal terms (k=8 x dim=64 — the regime "
-        "every trained model here serves in); at k=9 janino "
-        "hits the JVM's 64 KB method limit and the stage runs "
-        "interpreted after a wasted compile attempt, and by "
-        "k~192 the plan is non-viable outright. "
-        "operators/kmeans.assign_cells dispatches at that "
-        "crossover to broadcast_cells — centroids as a ONE-ROW "
-        "broadcast array<struct> relation, argmin via the same "
-        "IEEE fold as higher-order functions, zero Exchange in "
-        "the plan, bit-identical assignments (pinned by "
-        "tests/test_operators.py::"
-        "test_assignment_kernels_bit_identical). r18 amendment "
-        "(OPTIMIZATION_r18.md finding 1): below the dispatch "
-        "ceiling the literal kernel now emits the guarded "
-        "literal-array FOLD (sqltext.sql_lit_dot_positional), "
-        "not the flat unroll — janino compiled the 512-term "
-        "unroll but the single generated method exceeded the "
-        "JVM JIT's ~8 KB bytecode budget and ran in the "
-        "bytecode interpreter (fold measured 2-3x faster at "
-        "k=8 x dim=64, bit-identical, same pinning test).",
+        "Nearest-centroid kernel (SCALE.md 'Nearest-centroid "
+        "kernel'): every centroid model — the k-means centroids "
+        "of v05/v06, the IVF coarse quantizer of v04/v10/e05 and "
+        "the PQ codebooks of v10 — is one local VALUES relation "
+        "of exact literals, which operators/kmeans."
+        "nearest_centroid reads as an uncorrelated scalar "
+        "subquery: no join, no extra job and no corpus Exchange "
+        "for the assignment; "
+        "ties go to the lowest centroid id, and a row whose "
+        "length differs from the model's fails the query, as "
+        "DuckDB's list_dot_product does.",
         "",
         "Wide-column shuffle audit (any Exchange or "
         "BroadcastExchange — subquery plans included — whose "
