@@ -12,20 +12,19 @@ as ONE ``pyspark.ml.Pipeline``: fit/transform are distributed, the
 model broadcast to executors for scoring — at 100 TB the scoring pass
 is a narrow map over the feature table.
 
-Parallelism: the training table is small (one row per play in E3),
-so ``train_eval`` coalesces its input to the engine's core count
-(``defaultParallelism``) before the split. The indexer fit, the two
-jobs per tree level, scoring and the evaluator then run at most one
-task per core, instead of one per partition of whatever shuffle built
-the table. The coalesce is narrow and a no-op on an input that
-already has fewer partitions.
+Layout: the training table is small (one row per play in E3), so
+``train_eval`` reads it as ONE partition sorted by its key columns.
+The coalesce is narrow and adds no exchange, so the indexer fit, the
+jobs per tree level, scoring and the evaluator run one task per
+stage, instead of one per partition of whatever shuffle built the
+table.
 
-Determinism: the split is the md5-hash split (operators/sample.py) —
-unlike ``randomSplit`` it does not depend on partitioning, so the
-train set is the same rows across runs, cluster layouts and engines.
-The forest is a function of the input partitioning too: MLlib seeds
-each tree's bagging sample per partition, so a seeded forest is
-bit-stable for a given core count and input layout.
+Determinism: the split is the md5-hash split (operators/sample.py),
+which does not depend on partitioning, and MLlib seeds each tree's
+bagging sample per input partition. With one partition sorted by key
+columns that identify a row, the seeded forest is a function of the
+data alone: the same rows give the same forest whatever the core
+count, the input partitioning or the shuffle-partition count.
 """
 
 from __future__ import annotations
@@ -95,8 +94,8 @@ def train_eval(
     set, return (model, scored test DF, accuracy)
     (all coverages.R:193-214).
     """
-    df = df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
     key_cols = id_cols or [label_col, *feature_cols]
+    df = df.coalesce(1).sortWithinPartitions(*key_cols)
     train, test = deterministic_split(
         df, key_cols=key_cols, train_fraction=train_fraction
     )

@@ -8,29 +8,24 @@ It does this with two nested ``group_split -> map_dfr`` R loops
 (Field Control.R:357-361, 375-378) — per-player, per-frame, one R
 process.
 
-The Spark-first formulation collapses both loops into ONE declarative
-plan:
+Here both loops are one declarative plan:
 
-    players x broadcast(grid)             (J5 — grid is ~6.5k rows)
+    players, hash-partitioned by frame     (the only shuffle)
+      x broadcast(grid)                   (J5 — grid is ~6.5k rows)
       -> closed-form Gaussian (F12)       (pure codegen, no stats lib)
       -> per-player max-normalize (W6)    (window over the grid cells)
-      -> signed team sum per cell (A1)    (single shuffle)
+      -> signed team sum per cell (A1)    (in place, same partitioning)
       -> sigmoid (F7)
 
-At 100 TB this is the scale showcase: the cross join is
-embarrassingly parallel (players partition freely; the grid is
-broadcast so no shuffle), the only shuffle is the final per-cell
-aggregation, and every expression stays inside whole-stage codegen.
-The reference can only ever do one play at a time in RAM.
-
 Float-determinism: per-player normalized influence is rounded to 9
-decimals and decimal-summed (order-independent) so the DuckDB oracle
-reproduces the surface bit-for-bit (see queries/base.py policy).
+decimals and summed exactly (``nano_sum``, order-independent), so the
+DuckDB oracle's ``decimal(28,9)`` sum reproduces the surface
+bit-for-bit (see queries/base.py policy).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.geometry import (
@@ -77,54 +72,42 @@ def attach_kinematics(players: DataFrame) -> DataFrame:
 
 
 def player_influence(
-    players: DataFrame, grid: DataFrame, player_key: str = "player_id"
+    players: DataFrame,
+    grid: DataFrame,
+    player_key: str = "player_id",
+    frame_cols: "tuple[str, ...] | None" = None,
 ) -> DataFrame:
-    """ZOI per player: cross join the (broadcast) grid, evaluate the
-    closed-form Gaussian, normalize each player's surface to max 1
+    """ZOI per player: cross join the broadcast grid, evaluate the
+    closed-form Gaussian and normalize each player's surface to max 1
     (Field Control.R:344-347).
 
-    The normalize is a window over the grid cells of one player — the
-    partition is exactly grid-size rows (~6.5k), so it never skews
-    regardless of player count.
+    ``frame_cols`` name the frame a player belongs to. By default they
+    are the BDB play keys ``gameId``/``playId`` when ``players`` has
+    them; an input without frame columns is one frame. The normalize
+    window is keyed on ``(*frame_cols, player_key)``.
 
-    The PLAYERS side is hash-repartitioned on the window key BEFORE
-    the grid expansion: a BroadcastNestedLoopJoin preserves its
-    streamed side's partitioning, so the normalize window's required
-    clustering is already satisfied and Catalyst elides the exchange
-    of the expanded cells table (player-count rows shuffle instead of
-    players x grid rows — at season scale, 3.4k vs 22M; at 100 TB the
-    difference is the whole surface crossing the network or not).
-    Verified in the plan: cells go through a local Sort only.
+    The players are hash-partitioned by the frame before the grid
+    expansion, and a broadcast nested-loop join keeps that
+    partitioning. So the normalize window and
+    ``field_control_surface``'s per-cell sum, whose ``group_cols``
+    include the frame columns, run in place: only the players
+    shuffle, never the players x grid cells. An input without frame
+    columns is partitioned by ``player_key`` instead, and its per-cell
+    sum exchanges partial sums, one row per cell and partition.
 
-    The repartition carries an EXPLICIT partition count (r17, guide
-    §2.5): the column-only spelling is AQE-coalescible, and AQE's
-    byte-targeted coalescing sees only the pre-expansion players
-    table (3.4k rows ≈ 100 KB at sf0.1), collapses the exchange to
-    ONE partition, and the entire grid-expansion + Gaussian + window
-    sort — 22M rows of CPU work downstream of the exchange — runs in
-    a single task. Partitioning must be sized for the work AFTER the
-    exchange, which AQE's byte heuristic cannot see through a 6480x
-    expansion. The count is the session's shuffle-partition target
-    (shuffle_partition_target — the same count the coalescible form
-    starts from; cluster-tuned at scale, never a local constant).
-    Measured at sf0.1: e03 3.29 s -> 0.85 s.
-
-    e02 adjudication (r18, VERDICT r17 item 7): the single-play
-    caller pays ~+0.5 s at bench scale for this shared pin (its
-    22-row players table rides a 32-task shuffle). ACCEPTED as the
-    price of the shared path: e02's players input is a 1/997 slice
-    of events — data-proportional, not construction-bounded — so at
-    100 TB e02 needs the pin for exactly the same reason e03 does,
-    and the only conditional that could skip it at bench scale is a
-    row-count collect or a local-mode constant, both prohibited
-    classes. Recorded in PLANS.md.
+    The partition count is the session's shuffle-partition target
+    (``shuffle_partition_target``), set explicitly: AQE's byte-sized
+    coalescing sees only the players table, not the grid-sized
+    expansion after the exchange, and would run it in one task.
     """
     from ..sources.io import shuffle_partition_target
 
+    if frame_cols is None:
+        frame_cols = [c for c in ("gameId", "playId") if c in players.columns]
     n_parts = shuffle_partition_target(players.sparkSession)
-    cells = players.repartition(n_parts, player_key).crossJoin(
-        F.broadcast(grid)
-    )
+    cells = players.repartition(
+        n_parts, *(frame_cols or [player_key])
+    ).crossJoin(F.broadcast(grid))
     pdf = bivariate_gaussian_pdf(
         px=F.col("grid_x"),
         py=F.col("grid_y"),
@@ -135,11 +118,21 @@ def player_influence(
         s_ratio=F.col("s_ratio"),
     )
     cells = cells.withColumn("influence_raw", pdf)
-    w = Window.partitionBy(player_key)
+    w = Window.partitionBy(*frame_cols, player_key)
     return cells.withColumn(
         "influence",
         rhu(F.col("influence_raw") / F.max("influence_raw").over(w)),
     )
+
+
+def nano_sum(col: Column) -> Column:
+    """Exact sum of 9-decimal values: each value is scaled to its
+    integer count of 1e-9 units, the counts are summed as longs and the
+    total is divided by 1e9 once. For values on the 1e-9 grid this is
+    bit-identical to a ``decimal(28,9)`` sum cast to double (the
+    long-to-double cast is exact below 2^53 and the division is
+    correctly rounded), with no decimal aggregation buffer."""
+    return F.sum(F.round(col * F.lit(1e9)).cast("long")) / F.lit(1e9)
 
 
 def field_control_surface(
@@ -149,16 +142,15 @@ def field_control_surface(
     group_cols: "tuple[str, ...]" = ("grid_x", "grid_y"),
 ) -> DataFrame:
     """Team control per cell: sign-flip away influence (P12), exact
-    decimal sum per ``group_cols`` (A1), sigmoid squash (F7)
-    (Field Control.R:362-370).
+    sum per ``group_cols`` (A1, ``nano_sum``) and sigmoid squash (F7)
+    (Field Control.R:362-370). The output has ``group_cols`` and
+    ``control``.
 
-    Note the reference's sigmoid is 1/(1+exp(x)) — DECREASING in x —
-    and it negates HOME influence, so control ~ 1 means home-dominated.
-    Both quirks are reproduced here deliberately, and ONLY here: e03
-    passes ("frame_id", "grid_x", "grid_y") for the per-frame season
-    surface instead of re-implementing the sign/sum/sigmoid chain
-    (review r7 dedup — the quirk documentation stays authoritative in
-    one place).
+    The reference's sigmoid is 1/(1+exp(x)), decreasing in x, and it
+    negates HOME influence, so control near 1 means home-dominated.
+    Both quirks are reproduced here and only here; a multi-frame
+    caller puts its frame columns first in ``group_cols``, and an
+    input from ``player_influence`` is then summed without a shuffle.
     """
     signed = influence.withColumn(
         "signed_influence",
@@ -167,9 +159,7 @@ def field_control_surface(
         ),
     )
     per_cell = signed.groupBy(*group_cols).agg(
-        F.sum(F.col("signed_influence").cast("decimal(28,9)"))
-        .cast("double")
-        .alias("control_sum")
+        nano_sum(F.col("signed_influence")).alias("control_sum")
     )
     return per_cell.select(
         *group_cols,

@@ -1,24 +1,20 @@
-"""Football-domain composable transforms (the reference's actual
-pipelines, on the real BDB tracking schema).
+"""Football-domain composable transforms on the BDB tracking schema.
 
-A user of the reference switches to these functions directly: each is
-a ``DataFrame -> DataFrame`` transform chainable with ``df.transform``,
-re-expressing the dplyr chains with Catalyst-friendly plans. Column
-names match the reference exactly (gameId, playId, frameId,
-displayName, playDirection, x, y, event, team, possessionTeam,
-homeTeamAbbr, visitorTeamAbbr, personnelD, ...).
+Each function is a ``DataFrame -> DataFrame`` transform chainable with
+``df.transform``. Column names match the reference (gameId, playId,
+frameId, displayName, playDirection, x, y, event, team,
+possessionTeam, homeTeamAbbr, visitorTeamAbbr, personnelD, ...).
 
-Key plan choices vs the reference:
-- Coordinate standardization applied EXACTLY ONCE (the reference
-  applies it twice and un-flips left plays — SURVEY §2.13; not
-  reproduced).
-- Ball position attach is the WINDOW form (one shuffle on the frame
-  key), not the self-join (J3) — same result, half the scans
-  (Tutorial.R:182-183 vs Field Control.R:227-233).
-- Line-of-scrimmage features are a window over (gameId, playId), not
-  a build-table-then-left-join (all coverages.R:118-123) — again one
-  shuffle, no extra scan, and immune to the reference's
-  join-the-wrong-table bug (§2.13).
+Plan contract:
+- Coordinates are standardized exactly once.
+- The ball is attached by a window over the frame and its ``event``
+  (Tutorial.R:173-183). ``event`` is a frame attribute, so a filter on
+  it, such as the pass-arrival filter of E1, runs before the window's
+  exchange and is pushed into the tracking scan: only the kept
+  frames are shuffled.
+- The line of scrimmage is a per-play aggregate over the frame-1 ball
+  rows, joined back on the play keys (all coverages.R:118-123). The
+  aggregate reads a pushed-down scan and has one row per play.
 """
 
 from __future__ import annotations
@@ -82,11 +78,15 @@ def derive_side_of_ball(df: DataFrame) -> DataFrame:
 
 
 def attach_ball_position(df: DataFrame) -> DataFrame:
-    """W1+W2: flag frames containing the ball, broadcast its (x, y) to
-    every row of the frame, drop ball-less frames
-    (Tutorial.R:173-183). One window shuffle — the scalable form of
-    the ball self-join J3."""
-    w = Window.partitionBy(*FRAME_KEYS)
+    """Give every row the (x, y) of its frame's football and drop the
+    rows whose frame has no football (Tutorial.R:173-183).
+
+    The window partitions by ``FRAME_KEYS + event``: the ball attaches
+    to the rows of its frame that carry the same ``event`` as the ball
+    row. In BDB tracking every row of a frame carries the frame's
+    event, so this is the frame. A filter on ``event`` downstream runs
+    before the window's exchange."""
+    w = Window.partitionBy(*FRAME_KEYS, "event")
     is_ball = F.col("displayName") == "Football"
     return (
         df.withColumns(
@@ -115,24 +115,29 @@ def distance_to_ball_at_arrival(df: DataFrame) -> DataFrame:
 
 
 def line_of_scrimmage_features(df: DataFrame) -> DataFrame:
-    """LOS features (all coverages.R:118-127): los = ball x at frame 1
-    of the play, broadcast per play; dist_from_los / dist_from_mid.
+    """Add ``los``, ``dist_from_los`` and ``dist_from_mid``
+    (all coverages.R:118-127). ``los`` is the largest x of the
+    play's football rows at frame 1, NULL for a play without one.
 
-    Window form of the reference's build-table-then-left-join — one
-    shuffle on the play key, and structurally immune to its
-    joined-the-wrong-table bug (§2.13)."""
-    w = Window.partitionBy(*PLAY_KEYS)
-    los = F.max(
-        F.when(
-            (F.col("displayName") == "Football") & (F.col("frameId") == 1),
-            F.col("x"),
+    ``los`` is a per-play aggregate over the frame-1 ball rows, joined
+    back on ``PLAY_KEYS`` as a sort-merge join. Its play-key
+    partitioning also serves ``attach_ball_position``'s window, so an
+    E1 chain shuffles only the rows its filters keep. Output columns
+    are ``df``'s columns followed by the three new ones."""
+    los = (
+        df.filter((F.col("displayName") == "Football") & (F.col("frameId") == 1))
+        .groupBy(*PLAY_KEYS)
+        .agg(F.max("x").alias("los"))
+    )
+    return (
+        df.join(los.hint("merge"), PLAY_KEYS, "left")
+        .select(*df.columns, "los")
+        .withColumns(
+            {
+                "dist_from_los": F.col("x") - F.col("los"),
+                "dist_from_mid": F.col("y") - F.lit(FIELD_MID_Y),
+            }
         )
-    ).over(w)
-    return df.withColumn("los", los).withColumns(
-        {
-            "dist_from_los": F.col("x") - F.col("los"),
-            "dist_from_mid": F.col("y") - F.lit(FIELD_MID_Y),
-        }
     )
 
 

@@ -79,8 +79,7 @@ _TEST_PRED = f"NOT ({_TRAIN_PRED})"
 
 # Accuracy floor for the green/red boolean: the label is a pure
 # function of sum_qty (a feature), so any correctly-plumbed forest
-# scores near-1.0; 0.9 matches the pytest floor with margin for
-# partitioning-dependent tree variation.
+# scores near-1.0; 0.9 matches the pytest floor.
 ACC_FLOOR = 0.9
 
 _RF_CACHE = ModelMemo()

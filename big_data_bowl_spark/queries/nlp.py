@@ -2229,9 +2229,12 @@ def n24_minhash_calibration(spark: SparkSession, sf_dir: str):
             for i in range(MINHASH_H)
         ],
     )
+    # the pair list is materialized too: both joins are then planned
+    # once from exact sizes, not re-planned by AQE in whatever order
+    # the pair and signature stages happen to finish
     cand = _pairs_from_bands(
         _bands_from_sig(sig.drop("sh"))
-    )
+    ).localCheckpoint()
     side = lambda tag: sig.select(  # noqa: E731
         F.col("doc_id").alias(f"doc_{tag}"),
         F.col("sh").alias(f"sh_{tag}"),

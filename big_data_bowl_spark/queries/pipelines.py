@@ -155,9 +155,10 @@ def u02_transform_chain(spark, sf_dir):
     note="E2 field-control surface (Field Control.R:226-378): the "
     "reference's two nested group_split loops collapse into one plan — "
     "players x broadcast(grid) cross join (J5), closed-form Gaussian "
-    "(F12), per-player window normalize (W6), per-cell signed decimal "
-    "sum (A1), sigmoid (F7). Single shuffle (the final groupBy); "
-    "embarrassingly parallel in the player dimension at 100 TB.",
+    "(F12), per-player window normalize (W6), per-cell exact signed "
+    "sum (A1), sigmoid (F7). The input is one frame: players shuffle "
+    "by player_id, and the per-cell sum exchanges one partial row per "
+    "cell and partition; parallel in the player dimension.",
 )
 def e02_field_control(spark, sf_dir):
     players = _players(spark, sf_dir).transform(attach_kinematics)
@@ -246,11 +247,11 @@ def _season_players(spark, sf_dir):
     "same one-plan field-control pipeline over every frame at once — "
     "~3.4k players x 6480 cells ≈ 22M Gaussian evals at sf0.1, vs the "
     "reference's one-play-at-a-time RAM ceiling (Field Control."
-    "R:357-378). Plan shape is UNCHANGED from e02: broadcast grid, "
-    "codegen Gaussian, per-player normalize window (partition = grid "
-    "size, frame-count-independent), ONE shuffle for the per-(frame, "
-    "cell) signed decimal sum. Frames add rows, not stages — the "
-    "definition of linear scale-out. (Measured A/B at sf0.1: the "
+    "R:357-378). Broadcast grid, codegen Gaussian, per-(frame, "
+    "player) normalize window and per-(frame, cell) exact signed sum; "
+    "the players are hash-partitioned by frame_id, the ONLY shuffle, "
+    "so neither the window nor the sum moves a cell. Frames add rows, "
+    "not stages — the definition of linear scale-out. (Measured A/B at sf0.1: the "
     "normalize WINDOW beats a groupBy-max + broadcast-join-back "
     "5.7s vs 6.9s — the join form re-evaluates the Gaussian subtree, "
     "which costs more than the window's sort; self-referenced "
@@ -261,7 +262,9 @@ def e03_field_control_season(spark, sf_dir):
 
     players = _season_players(spark, sf_dir).transform(attach_kinematics)
     grid = field_grid(spark)
-    influence = player_influence(players, grid, player_key="player_id")
+    influence = player_influence(
+        players, grid, player_key="player_id", frame_cols=("frame_id",)
+    )
     return field_control_surface(
         influence, group_cols=("frame_id", "grid_x", "grid_y")
     )

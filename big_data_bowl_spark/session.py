@@ -1,11 +1,12 @@
 """SparkSession builder.
 
-The reference runs eagerly in one R process (no parallelism, no
-optimizer — SURVEY.md §4). Here every plan goes through Catalyst; the
-session defaults below are the 100 TB design point scaled to local
-testing: AQE owns runtime re-planning (partition coalescing, skew
-splitting, dynamic broadcast), shuffle partitions are explicit and
-environment-tunable, and Arrow is on for the few pandas boundaries.
+Every plan goes through Catalyst with AQE on: AQE coalesces small
+post-shuffle partitions, splits skewed joins and demotes sort-merge
+joins to broadcast at runtime. Shuffle partitions are explicit and
+environment-tunable, and Arrow is on for the pandas boundaries.
+Cached plans may change their output partitioning, so a persisted
+table is written and read in as many partitions as its bytes need,
+not in ``spark.sql.shuffle.partitions``.
 """
 
 from __future__ import annotations
@@ -37,6 +38,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config("spark.sql.shuffle.partitions", shuffle)
         # Arrow for toPandas()/pandas UDF boundaries (similarity, multimodal).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -1,15 +1,21 @@
 """Pipeline E2 (field control) physical-invariant tests
 (SURVEY.md §5): control in (0,1), per-player influence normalized to
-max 1, full grid covered."""
+max 1, full grid covered; the exact cell sum against its decimal
+reference."""
 
 from __future__ import annotations
+
+import random
+import struct
 
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_bowl_spark.functions.rounding import rhu
 from big_data_bowl_spark.plans.e2_control import (
     attach_kinematics,
     field_control_surface,
+    nano_sum,
     player_influence,
 )
 from big_data_bowl_spark.sources.io import field_grid
@@ -69,3 +75,34 @@ def test_home_dominated_cell_reads_high(spark, players):
         & (F.abs(F.col("grid_y") - 20.0) < 1.0)
     )
     assert all(r.control > 0.5 for r in near_home.collect())
+
+
+def test_nano_sum_is_bit_identical_to_the_decimal_sum(spark):
+    """``nano_sum`` (long sum of 1e-9 units, one division) returns the
+    same double, bit for bit, as the ``decimal(28,9)`` sum the DuckDB
+    oracles use, on 9-decimal influences of both signs: random ones,
+    rhu-rounded exact half-way inputs, grid extremes and groups that
+    cancel to zero."""
+    rng = random.Random(13)
+    rows = []
+    for g in range(400):  # random 9-dp values, 1..40 per group
+        for _ in range(rng.randint(1, 40)):
+            rows.append((g, rng.randint(-10**9, 10**9) / 1e9))
+    for g in range(400, 500):  # half-way inputs, rounded by rhu below
+        for _ in range(rng.randint(1, 40)):
+            rows.append((g, rng.choice((-1, 1))
+                         * (2 * rng.randint(0, 10**9) + 1) * 0.5e-9))
+    edge = (0.5, -0.5, 1.0, -1.0, 1e-9, -1e-9, 0.999999999, -0.999999999)
+    rows += [(500 + i, v) for i, v in enumerate(edge)]
+    rows += [(600, v) for v in edge] + [(601, v) for v in (0.3, -0.1, -0.2)]
+    rows += [(602, rng.randint(0, 10**9) / 1e9) for _ in range(5000)]
+    df = spark.createDataFrame(rows, "g int, raw double").select(
+        "g", rhu(F.col("raw")).alias("v")
+    )
+    got = df.groupBy("g").agg(
+        nano_sum(F.col("v")).alias("fast"),
+        F.sum(F.col("v").cast("decimal(28,9)")).cast("double").alias("ref"),
+    ).collect()
+    assert len(got) == 511
+    bits = lambda x: struct.pack(">d", x)  # noqa: E731
+    assert [r.g for r in got if bits(r.fast) != bits(r.ref)] == []

@@ -24,10 +24,10 @@ def test_rf_accuracy_floor(spark, sf_dir):
 
 
 def test_train_eval_runs_one_task_per_core(spark):
-    """train_eval coalesces its input to the core count, so a training
-    table that arrives in 32 persisted partitions (as the season
-    feature table does, out of a 32-partition shuffle) trains and
-    scores with at most one task per core in every stage."""
+    """train_eval reads its input as one sorted partition, so a
+    training table that arrives in 32 persisted partitions (out of a
+    32-partition shuffle) trains and scores with at most one task per
+    core in every stage."""
     from pyspark.sql import functions as F
 
     from big_data_bowl_spark.ml.coverage import train_eval
@@ -180,14 +180,12 @@ def test_model_persistence_roundtrip(spark, tmp_path):
 
 
 def test_m01_m02_golden_at_driver_sf(spark):
-    """VERDICT r3 #6: pin the held-out predictions at sf0.01 — the
-    SF the driver's rows-only gate actually runs — not just the
-    sf0.001 fixture. One fit (memoized) backs both queries; the
-    md5-stable split + seeded forest make every count a constant
-    UNDER A FIXED PARALLELISM: Spark RF's per-tree Poisson
-    subsample is seeded per input partition, so these goldens are
-    pinned to the conftest session (local[4], shuffle=4) — if the
-    fixture config changes, re-collect, don't loosen."""
+    """Pin the held-out predictions at sf0.01, the SF the driver's
+    rows-only gate runs, not just the sf0.001 fixture. One fit
+    (memoized) backs both queries; the md5-stable split, the
+    one-sorted-partition training layout and the seeded forest make
+    every count a constant of the data
+    (test_forest_independent_of_session_shape)."""
     from pyspark.sql import functions as F
 
     from big_data_bowl_spark.queries.ml import _fitted
@@ -201,23 +199,22 @@ def test_m01_m02_golden_at_driver_sf(spark):
     )
     assert {(r.prediction, r.n) for r in m02} == {
         ("large", 683),
-        ("medium", 1702),
-        ("small", 1330),
+        ("medium", 1725),
+        ("small", 1307),
     }
     m01 = confusion_matrix(scored, label_col="label").collect()
     assert {(r.label, r.prediction, r.n) for r in m01} == {
         ("large", "large", 683),
         ("large", "medium", 41),
         ("medium", "medium", 1661),
-        ("small", "small", 1330),
+        ("small", "medium", 23),
+        ("small", "small", 1307),
     }
 
 
 def test_m07_tree_stats_golden(spark):
     """M7 introspection (all coverages.R:217-231): deterministic given
-    the seed + the conftest parallelism (per-tree Poisson bagging
-    seeds by input partition — re-collect if the fixture config
-    changes, don't loosen). The registered query's booleans must all
+    the seed and the data. The registered query's booleans must all
     hold, and the raw stats match the pinned forest shape."""
     from big_data_bowl_spark.ml.coverage import tree_stats
     from big_data_bowl_spark.queries import REGISTRY
@@ -228,9 +225,9 @@ def test_m07_tree_stats_golden(spark):
     stats = tree_stats(model)
     assert len(stats) == 50
     assert [i for i, _, _ in stats] == list(range(50))
-    assert sorted({d for _, d, _ in stats}) == [4, 5]
-    assert sum(d for _, d, _ in stats) == 249
-    assert sum(n for _, _, n in stats) == 1176
+    assert sorted({d for _, d, _ in stats}) == [3, 4, 5]
+    assert sum(d for _, d, _ in stats) == 246
+    assert sum(n for _, _, n in stats) == 1154
     assert all(2 * d + 1 <= n <= 2 ** (d + 1) - 1 for _, d, n in stats)
 
     rows = REGISTRY["m07_rf_tree_stats"].fn(spark, sf).collect()
@@ -577,3 +574,69 @@ def test_trained_models_survive_session_restart(sf_dir):
     )
     assert all(first.values()), first
     assert first == second
+
+
+_SHAPE_SCRIPT = """
+import json, sys
+from pyspark.sql import functions as F
+from big_data_bowl_spark.ml.coverage import train_eval
+from big_data_bowl_spark.session import get_spark
+
+spark = get_spark(cpus=sys.argv[1])
+spark.sparkContext.setLogLevel("ERROR")
+for n_shuffle in sys.argv[2:]:
+    spark.conf.set("spark.sql.shuffle.partitions", n_shuffle)
+    h = F.xxhash64("id")
+    x = (h % 1000).cast("double") / 10.0
+    df = spark.range(600).select(
+        "id",
+        x.alias("x"),
+        (F.xxhash64("id", F.lit(1)) % 97).cast("double").alias("y"),
+        (F.xxhash64("id", F.lit(2)) % 89).cast("double").alias("z"),
+        # noisy label: the forest's bagging decides the close calls
+        F.when(x + (F.xxhash64("id", F.lit(3)) % 40) > 20, "hi")
+        .otherwise("lo").alias("label"),
+    ).repartition(int(n_shuffle), "id")
+    _model, scored, acc = train_eval(
+        df, ["x", "y", "z"], label_col="label", id_cols=["id"], num_trees=8
+    )
+    print(json.dumps({
+        "acc": acc,
+        "pred": sorted(
+            (r.id, r.prediction, r.probability.toArray().tolist())
+            for r in scored.collect()
+        ),
+    }))
+spark.stop()
+"""
+
+
+def test_forest_independent_of_session_shape():
+    """The same rows give the same forest on 2 and 4 cores, and out of
+    3- and 8-partition shuffles: predictions and class probabilities
+    of the held-out rows are identical in all four fits. Subprocesses,
+    because the core count is fixed per Spark application."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    fits = []
+    for cpus in ("2", "4"):
+        out = subprocess.run(
+            [sys.executable, "-c", _SHAPE_SCRIPT, cpus, "3", "8"],
+            env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert out.returncode == 0, out.stderr[-3000:]
+        fits += [
+            json.loads(ln) for ln in out.stdout.splitlines()
+            if ln.startswith("{")
+        ]
+    assert len(fits) == 4
+    assert len(fits[0]["pred"]) > 100
+    assert all(f == fits[0] for f in fits[1:]), [f["acc"] for f in fits]

@@ -126,27 +126,19 @@ def test_monotonic_rowid_alternative_is_shuffle_free(spark):
 
 
 def test_e03_window_exchange_is_elided_by_copartition(spark):
-    """r5 optimization guard: the normalize window must NOT exchange
-    the expanded players x grid surface — pre-partitioning the players
-    side satisfies the window's clustering, so the only hash exchanges
-    are the (tiny) players repartition and the final per-cell agg."""
+    """The players are hash-partitioned by the frame before the grid
+    expansion, so neither the normalize window nor the per-(frame,
+    cell) sum exchanges the expanded players x grid cells: the plan
+    has exactly one hash exchange, the players-sized one, and it is
+    an explicit-count repartition (AQE's byte-sized coalescing cannot
+    see the grid expansion after it; e2_control.player_influence)."""
     plan = _plan(spark, "e03_field_control_season")
     n_hash = plan.count("Exchange hashpartitioning")
-    assert n_hash <= 2, f"expected <=2 hash exchanges, got {n_hash}"
-    # the players-side partition: REPARTITION_BY_NUM since r17 (the
-    # count is pinned so AQE's byte-targeted coalescing cannot
-    # collapse the exchange feeding the 6480x grid expansion to one
-    # partition; e2_control.player_influence documents the measurement)
-    assert (
-        "REPARTITION_BY_NUM" in plan or "REPARTITION_BY_COL" in plan
-    )
-    # the window runs directly over the (sorted) join output: no
-    # ENSURE_REQUIREMENTS exchange keyed on the window partition col
-    # may appear between the BNLJ and the Window
+    assert n_hash == 1, f"expected 1 hash exchange, got {n_hash}"
+    assert "hashpartitioning(frame_id" in plan
+    assert "REPARTITION_BY_NUM" in plan
     bnlj_pos = plan.index("BroadcastNestedLoopJoin")
-    win_pos = plan.index("Window")
-    between = plan[min(win_pos, bnlj_pos): max(win_pos, bnlj_pos)]
-    assert "ENSURE_REQUIREMENTS" not in between
+    assert plan.index("Exchange hashpartitioning") > bnlj_pos
 
 
 def test_funnel_and_cdc_share_one_exchange(spark):
@@ -783,3 +775,85 @@ def test_shuffle_partition_target_rejects_non_positive_counts():
         conf["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = bad
         with pytest.raises(ValueError, match="must be > 0"):
             shuffle_partition_target(stub)
+
+
+def test_cached_plans_coalesce_like_any_plan(spark):
+    """A table persisted out of a 32-partition shuffle is written and
+    read in as many partitions as its ~1k rows need: AQE may change a
+    cached plan's output partitioning (session.get_spark), so no
+    stage that fills or reads the cache runs more than
+    defaultParallelism tasks."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    group = "test-cached-plan-coalescing"
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    df = (
+        spark.range(2000)
+        .groupBy((F.col("id") % 1000).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .persist()
+    )
+    try:
+        sc.setJobGroup(group, "fill and read a cached 32-partition shuffle")
+        df.write.format("noop").mode("overwrite").save()
+        assert df.agg(F.sum("n")).collect()[0][0] == 2000
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        df.unpersist()
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    ran = {
+        sid: info.numCompletedTasks + info.numFailedTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if (info := tracker.getStageInfo(sid)) is not None
+    }
+    assert ran and max(ran.values()) > 0, ran
+    assert max(ran.values()) <= sc.defaultParallelism, ran
+
+
+_N24_AUDIT_SCRIPT = """
+import json, sys
+from big_data_bowl_spark.queries import REGISTRY
+from big_data_bowl_spark.session import get_spark
+from tools.plan_audit import audit, formatted_plan
+
+spark = get_spark(shuffle_partitions=8)
+spark.sparkContext.setLogLevel("ERROR")
+for _ in range(3):
+    df = REGISTRY["n24_minhash_calibration"].fn(spark, sys.argv[1])
+    df.collect()
+    a = audit(formatted_plan(df))
+    print(json.dumps({k: a[k] for k in (
+        "exchanges", "reused", "joins", "codegen", "scans")}))
+spark.stop()
+"""
+
+
+def test_n24_plan_audit_is_reproducible():
+    """plan_audit reads the same n24 row on a cold first run and on
+    warm reruns in one session (as tools/plan_audit.py does): the
+    joins are planned from materialized inputs, not re-planned by AQE
+    in the order concurrent stages finish. In a subprocess, because
+    the first run must be the JVM's cold one."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _N24_AUDIT_SCRIPT, SF],
+        env=env, capture_output=True, text=True, timeout=600, cwd=repo,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    rows = [json.loads(ln) for ln in out.stdout.splitlines()
+            if ln.startswith("{")]
+    assert len(rows) == 3 and rows[1:] == rows[:1] * 2, rows

@@ -1,22 +1,29 @@
 """Golden tests for the football-domain transforms (plans/tracking.py)
 on a hand-built tracking fixture — expected values computed with plain
-Python math, independent of any Spark expression."""
+Python math, independent of any Spark expression — and plan contracts
+on a small season written by the benchmark's generator."""
 
 from __future__ import annotations
 
+import importlib.util
 import math
+import os
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from big_data_bowl_spark.plans.tracking import (
+    PLAY_KEYS,
     attach_ball_position,
     derive_side_of_ball,
+    distance_to_ball_at_arrival,
     distance_to_football_pipeline,
     line_of_scrimmage_features,
     personnel_features,
     standardize_coordinates,
 )
+from big_data_bowl_spark.sources.io import load_table
 
 TRACK_SCHEMA = (
     "gameId int, playId int, frameId int, displayName string, team string, "
@@ -137,3 +144,80 @@ def test_personnel_features(spark):
     out = {r.playId: r for r in personnel_features(plays).collect()}
     assert (out[1].num_dl, out[1].num_lb, out[1].num_cb) == (4, 2, 5)
     assert (out[2].num_dl, out[2].num_lb, out[2].num_cb) == (3, 4, 4)
+
+
+def test_ball_attaches_only_to_rows_of_its_event(spark):
+    """The ball window is keyed on the frame AND its event: a ball row
+    whose event differs from its players' rows attaches to none of
+    them, so those player rows are dropped as ball-less, and the ball
+    row keeps its own position."""
+    rows = [
+        (1, 1, 3, "Football", "football", "right", 40.0, 20.0, "pass_arrived"),
+        (1, 1, 3, "Def One", "home", "right", 43.0, 24.0, "None"),
+        (1, 1, 3, "Off One", "away", "right", 41.0, 21.0, "None"),
+    ]
+    out = attach_ball_position(spark.createDataFrame(rows, TRACK_SCHEMA))
+    got = [(r.displayName, r.xFootball, r.yFootball) for r in out.collect()]
+    assert got == [("Football", 40.0, 20.0)]
+
+
+@pytest.fixture(scope="module")
+def season_dir(tmp_path_factory):
+    """Two weeks of generated BDB tables (perfbench/gen.py): ball rows,
+    both play directions, frames without the ball."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_gen", os.path.join(repo, "perfbench", "gen.py")
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    d = str(tmp_path_factory.mktemp("season"))
+    gen.season(d, 7, 2, 1, 10)
+    return d
+
+
+def _season(spark, d):
+    return (load_table(spark, d, t) for t in ("tracking", "games", "plays"))
+
+
+def test_e1_arrival_filter_is_pushed_into_the_scan(spark, season_dir):
+    """The pass-arrival ``event IN (...)`` filter reaches the tracking
+    scan's PushedFilters, alone and behind the LOS join, so E1
+    shuffles only arrival frames."""
+    trk, games, plays = _season(spark, season_dir)
+    merged = (
+        standardize_coordinates(trk)
+        .join(F.broadcast(games), "gameId")
+        .join(F.broadcast(plays.select(*PLAY_KEYS, "possessionTeam")),
+              PLAY_KEYS)
+        .transform(derive_side_of_ball)
+    )
+    for e1 in (
+        distance_to_football_pipeline(trk, games, plays),
+        merged.transform(line_of_scrimmage_features)
+        .transform(attach_ball_position)
+        .transform(distance_to_ball_at_arrival),
+    ):
+        plan = e1._jdf.queryExecution().executedPlan().toString()
+        assert "PushedFilters: [In(event, [pass_arrived" in plan, plan
+        assert e1.count() > 0
+
+
+def test_los_matches_the_per_play_window(spark, season_dir):
+    """``los``/``dist_from_los`` equal the per-play window form
+    ``max(x where frame-1 ball) over (gameId, playId)``, row for row,
+    and the output keeps the input's column order."""
+    trk, _games, _plays = _season(spark, season_dir)
+    std = standardize_coordinates(trk)
+    out = line_of_scrimmage_features(std)
+    assert out.columns == [*std.columns, "los", "dist_from_los",
+                           "dist_from_mid"]
+    ball1 = (F.col("displayName") == "Football") & (F.col("frameId") == 1)
+    ref = std.withColumn(
+        "los",
+        F.max(F.when(ball1, F.col("x"))).over(Window.partitionBy(*PLAY_KEYS)),
+    ).withColumn("dist_from_los", F.col("x") - F.col("los"))
+    cols = [*PLAY_KEYS, "frameId", "displayName", "los", "dist_from_los"]
+    got = sorted(tuple(r) for r in out.select(*cols).collect())
+    assert got == sorted(tuple(r) for r in ref.select(*cols).collect())
+    assert len(got) == trk.count()

@@ -64,6 +64,15 @@ def _final_trees(plan: str) -> str:
     return "\n".join(trees)
 
 
+def formatted_plan(df) -> str:
+    """``df.explain('formatted')`` as a string; after an action on
+    ``df`` it shows the final adaptive plan."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 def audit(plan: str) -> dict:
     """Audit a post-execution `explain('formatted')` rendering.
 
@@ -394,10 +403,7 @@ def main() -> None:
         df.collect()
         if len(sw.LAST_EXEC_PLANS) > drain_seen:
             drain_plans[name] = sw.LAST_EXEC_PLANS[drain_seen:]
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        a = audit(buf.getvalue())
+        a = audit(formatted_plan(df))
         lines.append(
             f"| {name} | {a['exchanges']} | {a['single_partition']} "
             f"| {a['single_agg_merge']} | {a['reused']} | {a['joins']} "
